@@ -19,13 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 
 from bank_transaction_data_warehouse_spark.plans import analytics as A
+from bank_transaction_data_warehouse_spark.plans import corpus as C
 from bank_transaction_data_warehouse_spark.plans import olap as O
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
-
-try:  # corpus ops land incrementally; keep entry importable regardless
-    from bank_transaction_data_warehouse_spark.plans import corpus as C
-except ImportError:  # pragma: no cover
-    C = None
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -120,8 +116,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q11_important_parts": O.q11_important_parts,
         "q12_late_shipment_priority": O.q12_late_shipment_priority,
     }
-    if C is not None:
-        q.update(C.QUERIES)
+    q.update(C.QUERIES)
     q.update(
         {
             # high-value core kept inside the window
@@ -189,6 +184,5 @@ def oracle_sql() -> dict[str, str]:
     o.update(WH.ORACLE)
     o.update(A.ORACLE)
     o.update(O.ORACLE)
-    if C is not None:
-        o.update(C.ORACLE)
+    o.update(C.ORACLE)
     return o

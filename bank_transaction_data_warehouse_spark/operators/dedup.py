@@ -1,30 +1,35 @@
-"""Document deduplication family for training-data pipelines.
+"""Document deduplication family for training-data pipelines, all
+DataFrame compositions (no Python in the row path).
 
-Four operators, all expressed as DataFrame compositions (no Python in
-the row path):
+exact_dedup is one md5 groupBy (keep the min id).  Every near-duplicate
+generator has the same three-step shape:
 
-  exact_dedup          — md5 groupBy, keep-min-id           (oracle-checked)
-  ngram_jaccard_pairs  — 3-gram shingle set Jaccard,
-                         optional hot-shingle df pruning     (oracle-checked)
-  minhash_lsh_pairs    — MinHash(k) + LSH band bucket join  (oracle-checked
-                         via the portable poly base hash)
-  simhash_pairs        — 62/63-bit SimHash, Hamming<=h via
-                         pigeonhole chunk join               (oracle-checked
-                         via two packed poly hashes)
+  keys       a per-doc projection to join keys — shingle hashes
+             (set_jaccard_pairs / ngram_jaccard_pairs), MinHash band
+             keys (minhash_band_keys, shared with the streaming band
+             index), SimHash chunks (simhash_pairs)
+  candidates _keyed_self_join: every same-key pair once (id_a < id_b)
+             over ONE pinned, AQE-exempt shuffle of the key frame
+  verify     exact set Jaccard from integer counts (set_jaccard_pairs'
+             pair aggregate), exact Jaccard of LSH candidates only
+             (_jaccard_verify: minhash_lsh_pairs,
+             set_minhash_lsh_pairs, plans/corpus.dedup_edit_distance),
+             or Hamming distance of the carried fingerprints (simhash)
+
+Every approximate path can run on the portable char-polynomial base
+hash (base_hash='poly'), which DuckDB reproduces bit-for-bit, so all of
+them are oracle-checked (plans/corpus.py).
 
 Scale notes (100 TB):
-- exact: a single hash-partitioned groupBy on a 16-byte key; the
-  canonical pattern at any scale.
-- ngram Jaccard is quadratic in the worst case; the shingle self-join
-  is only viable after (a) distinct-ing shingles per doc and
-  (b) dropping ultra-frequent shingles (``max_shingle_df``) which
-  otherwise create O(df^2) join blow-ups on boilerplate text.  At
-  cluster scale you run MinHash-LSH first and reserve exact Jaccard
-  for verifying LSH candidates — which is exactly what
-  ``minhash_lsh_pairs(verify=True)`` does.
-- LSH band join shuffles on (band_idx, band_hash) — uniformly
-  distributed by construction, so no skew; candidate count is tuned by
-  (bands, rows_per_band), not data size.
+- exact: a single hash-partitioned groupBy on a 16-byte key.
+- exact n-gram Jaccard is quadratic in the worst case; it is viable
+  only after distinct-ing shingles per doc and dropping ultra-frequent
+  shingles (``max_df``), which otherwise create O(df^2) join blow-ups
+  on boilerplate text.  At cluster scale MinHash-LSH generates the
+  candidates and exact Jaccard verifies only those.
+- the LSH band join shuffles on (band, band_hash) — uniformly
+  distributed by construction, so no skew; the candidate count is
+  tuned by (bands, rows_per_band), not data size.
 """
 
 from __future__ import annotations
@@ -94,10 +99,43 @@ def shingle_sets(
     )
 
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle) exploded pairs — see shingle_sets."""
-    return shingle_sets(docs, n=n, text_col=text_col, id_col=id_col).select(
-        "doc_id", F.explode("sh_set").alias("shingle")
+# ------------------------------------------------- candidate generation
+def _conf_width(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _keyed_self_join(
+    frame: DataFrame,
+    keys: list[str],
+    carry: tuple = (),
+    parts: int | None = None,
+) -> DataFrame:
+    """Every same-key pair of a (doc_id, *keys, *carry) frame, once:
+    (*keys, id_a, <c>_a..., id_b, <c>_b...) with id_a < id_b — the
+    candidate join of every near-dup generator here.
+
+    The frame is repartitioned on the keys BEFORE aliasing, so both
+    join sides share one exchange subtree and the key pipeline runs
+    once (ENGINEERING_NOTES 6d).  The repartition is explicit because
+    AQE sizes reducers from MAP output bytes, which wildly
+    underestimate a self-join's quadratic expansion: left alone it
+    coalesces the key shuffle into one task and serializes the pair
+    blow-up, while a user-specified (count, key) repartition is exempt
+    from coalescing.  ``parts``: callers that know the input size pass
+    a data-derived width (plans/corpus._docs_parts); the conf fallback
+    over-parallelizes small inputs (r15 width sweep: ~2x faster pinned
+    at 8-16 than at 32 on 5,000 docs)."""
+    frame = frame.repartition(parts or _conf_width(frame), *keys)
+
+    def side(s: str) -> DataFrame:
+        return frame.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            *keys,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return side("a").join(side("b"), keys).where(
+        F.col("id_a") < F.col("id_b")
     )
 
 
@@ -142,9 +180,8 @@ def set_jaccard_pairs(
     string-keyed ANSI oracle still matches exactly.
     """
     sets = sets.select("doc_id", F.col(set_col).alias("sh_set"))
-    max_shingle_df = max_df
-    if max_shingle_df is not None:
-        # frequency pruning: shingles appearing in > max_shingle_df
+    if max_df is not None:
+        # frequency pruning: shingles appearing in > max_df
         # docs are boilerplate — they can't certify a near-dup but they
         # quadratically inflate the self-join.
         # Hash INSIDE the array, then explode longs: exploding the
@@ -167,7 +204,7 @@ def set_jaccard_pairs(
         hot = (
             sh0.groupBy("shingle")
             .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_shingle_df)
+            .where(F.col("df") > max_df)
             .select("shingle")
         )
         sh0 = sh0.join(F.broadcast(hot), "shingle", "left_anti")
@@ -183,31 +220,8 @@ def set_jaccard_pairs(
                 F.transform("sh_set", lambda s: F.xxhash64(s))
             ).alias("shingle"),
         )
-    # Explicit pre-expansion repartition: AQE sizes reduce partitions
-    # from MAP output bytes, which wildly underestimates a self-join's
-    # quadratic expansion — left alone it coalesces the shingle shuffle
-    # to one partition and serializes the whole pair blow-up.  A
-    # user-specified (count, key) repartition is exempt from AQE
-    # coalescing, so the expansion stays parallel.  ``parts``: callers
-    # that know the input size pass a data-derived width (plans/corpus
-    # _docs_parts) — the conf fallback over-parallelizes small inputs
-    # (r15 width sweep: the same pipeline at the same core count ran
-    # ~2x faster with the pin at 8-16 than at 32 on 5,000 docs).
-    nparts = parts or int(
-        sh.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    sh = sh.repartition(nparts, "shingle")
-    a = sh.select(
-        F.col("doc_id").alias("id_a"), "shingle", F.col("n_sh").alias("n_a")
-    )
-    b = sh.select(
-        F.col("doc_id").alias("id_b"), "shingle", F.col("n_sh").alias("n_b")
-    )
-    joined = a.join(b, (a.shingle == b.shingle) & (a.id_a < b.id_b))
-    conf_width = int(
-        sh.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    if parts and parts < conf_width:
+    joined = _keyed_self_join(sh, ["shingle"], carry=("n_sh",), parts=parts)
+    if parts and parts < _conf_width(sh):
         # Small-data regime (data-derived width below the conf): pin
         # the pair-aggregation width too.  The pair count agg's reduce
         # is AQE-sized from partial-agg BYTES, which underestimate the
@@ -217,13 +231,13 @@ def set_jaccard_pairs(
         # the conf width, this branch is skipped, and the
         # combiner-friendly partial agg + AQE sizing is unchanged.
         joined = joined.repartition(parts, "id_a", "id_b")
-    pairs = (
+    return (
         joined
         .groupBy("id_a", "id_b")
         .agg(
             F.count("*").alias("common"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
+            F.first("n_sh_a").alias("n_a"),
+            F.first("n_sh_b").alias("n_b"),
         )
         .withColumn(
             "jaccard",
@@ -236,7 +250,6 @@ def set_jaccard_pairs(
             "jaccard",
         )
     )
-    return pairs
 
 
 # ----------------------------------------------------------- MinHash LSH
@@ -402,6 +415,19 @@ def _band_entries_sql(k: int, bands: int) -> str:
     return "array(" + ", ".join(entries) + ")"
 
 
+def _band_keys(sigs: DataFrame, k: int, bands: int) -> DataFrame:
+    """(doc_id, band, band_hash) from a (doc_id, signature) frame —
+    the banding tail shared by the shingle and element-set paths."""
+    if bands <= 0 or k % bands != 0:
+        raise ValueError(
+            f"k={k} must be a positive multiple of bands={bands}; "
+            "otherwise band slices are empty/truncated and LSH degenerates"
+        )
+    return sigs.select(
+        "doc_id", F.explode(F.expr(_band_entries_sql(k, bands))).alias("bh")
+    ).select("doc_id", "bh.band", "bh.band_hash")
+
+
 def minhash_band_keys(
     docs: DataFrame,
     k: int = 64,
@@ -416,15 +442,8 @@ def minhash_band_keys(
     against a static corpus index with exactly this projection).
     Band hash is a statically-unrolled integer fold — no per-band
     string building."""
-    if bands <= 0 or k % bands != 0:
-        raise ValueError(
-            f"k={k} must be a positive multiple of bands={bands}; "
-            "otherwise band slices are empty/truncated and LSH degenerates"
-        )
     sigs = minhash_signatures(docs, k=k, n=n, base_hash=base_hash)
-    return sigs.select(
-        "doc_id", F.explode(F.expr(_band_entries_sql(k, bands))).alias("bh")
-    ).select("doc_id", "bh.band", "bh.band_hash")
+    return _band_keys(sigs, k, bands)
 
 
 def minhash_lsh_pairs(
@@ -433,37 +452,18 @@ def minhash_lsh_pairs(
     bands: int = 16,
     n: int = 3,
     threshold: float = 0.8,
-    verify: bool = True,
     base_hash: str = "xxhash64",
     parts: int | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding over MinHash
-    signatures; optionally verified with exact shingle Jaccard.
+    """Near-dup pairs via LSH banding over MinHash signatures,
+    verified with exact shingle Jaccard.
 
     bands=16, rows=4 → S-curve threshold ≈ (1/16)^(1/4) ≈ 0.5: pairs
     above ~0.5 estimated Jaccard almost surely collide in some band.
     """
-    if bands <= 0 or k % bands != 0:
-        raise ValueError(
-            f"k={k} must be a positive multiple of bands={bands}; "
-            "otherwise band slices are empty/truncated and LSH degenerates"
-        )
     banded = minhash_band_keys(docs, k=k, bands=bands, n=n, base_hash=base_hash)
     cand = _lsh_candidates(banded, parts=parts)
-    if not verify:
-        return cand
-    # verify candidates with exact shingle Jaccard — computed ONLY for
-    # the candidate pairs (never the all-pairs join).  Persisted: both
-    # sides of the candidate join consume `sets`, and the differing
-    # projections defeat ReuseExchange — without this the
-    # tokenize+shingle+hash pipeline runs twice (two-consumer
-    # invariant; measured 2.57 s -> 2.27 s at sf0.1).  shingle_sets
-    # already array_distincts, so no second distinct here.
-    sets = shingle_sets(docs, n=n).select(
-        "doc_id",
-        F.transform("sh_set", lambda s: F.xxhash64(s)).alias("_es"),
-    ).persist()
-    return _jaccard_verify(cand, sets, threshold)
+    return _jaccard_verify(cand, shingle_sets(docs, n=n), threshold)
 
 
 def set_minhash_lsh_pairs(
@@ -487,14 +487,8 @@ def set_minhash_lsh_pairs(
     composition).  Empty sets are excluded (array_min over an empty
     signature family is undefined); callers' set builders emit
     sentinel elements instead (shingle_sets, frame_hash_sets)."""
-    if bands <= 0 or k % bands != 0:
-        raise ValueError(
-            f"k={k} must be a positive multiple of bands={bands}; "
-            "otherwise band slices are empty/truncated and LSH degenerates"
-        )
-    # array_distinct defends the 'arbitrary sets' contract: duplicate
-    # elements would inflate F.size while array_intersect dedups,
-    # deflating the verify Jaccard below truth (silent missed dups)
+    # array_distinct defends the 'arbitrary sets' contract (see
+    # _jaccard_verify)
     base = sets.select(
         "doc_id",
         F.array_distinct(
@@ -503,64 +497,70 @@ def set_minhash_lsh_pairs(
             )
         ).alias("_hs"),
     ).where(F.size("_hs") > 0)
-    banded = base.select(
-        "doc_id", _kfamily_signature(k).alias("signature")
-    ).select(
-        "doc_id", F.explode(F.expr(_band_entries_sql(k, bands))).alias("bh")
-    ).select("doc_id", "bh.band", "bh.band_hash")
-    cand = _lsh_candidates(banded, parts=parts)
-    hsets = sets.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(F.col(set_col), lambda s: F.xxhash64(s))
-        ).alias("_es"),
-    ).persist()  # two-consumer invariant: both candidate-join sides
-    return _jaccard_verify(cand, hsets, threshold)
+    sigs = base.select("doc_id", _kfamily_signature(k).alias("signature"))
+    cand = _lsh_candidates(_band_keys(sigs, k, bands), parts=parts)
+    return _jaccard_verify(cand, sets, threshold, set_col=set_col)
 
 
 def _lsh_candidates(banded: DataFrame, parts: int | None = None) -> DataFrame:
-    """Distinct candidate pairs from a (doc_id, band, band_hash) frame
-    — the band self-join shared by the shingle and element-set paths.
-    Repartitions BEFORE aliasing so the exchange subtree is canonical
-    on both sides and the signature pipeline executes once
-    (ENGINEERING_NOTES 6d).  ``parts``: data-derived width from
-    callers who know the corpus size (see set_jaccard_pairs)."""
-    nparts = parts or int(
-        banded.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    banded = banded.repartition(nparts, "band", "band_hash")
-    l = banded.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
-    r = banded.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
+    """Distinct candidate pairs (doc_id_1, doc_id_2) from a
+    (doc_id, band, band_hash) frame: pairs colliding in several bands
+    are emitted once."""
     return (
-        l.join(r, ["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _keyed_self_join(banded, ["band", "band_hash"], parts=parts)
         .select(F.col("id_a").alias("doc_id_1"), F.col("id_b").alias("doc_id_2"))
         .distinct()
     )
 
 
 def _jaccard_verify(
-    cand: DataFrame, hashed_sets: DataFrame, threshold: float
+    cand: DataFrame,
+    sets: DataFrame,
+    threshold: float,
+    set_col: str = "sh_set",
+    keep: tuple = (),
 ) -> DataFrame:
-    """Exact set-Jaccard verification of candidate pairs against a
-    persisted (doc_id, _es array<bigint>) hashed-element frame —
-    computed ONLY for the candidates (the LSH payoff: exact work
-    scales with candidates, not corpus²).  Shared by the shingle and
-    element-set paths; callers persist hashed_sets (two consumers)."""
-    sa = hashed_sets.select(
-        F.col("doc_id").alias("doc_id_1"), F.col("_es").alias("_sa")
-    )
-    sb = hashed_sets.select(
-        F.col("doc_id").alias("doc_id_2"), F.col("_es").alias("_sb")
-    )
-    common = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-    union = F.size(F.col("_sa")) + F.size(F.col("_sb")) - common
+    """Exact set-Jaccard verification of candidate (doc_id_1, doc_id_2)
+    pairs against a raw (doc_id, <set_col> array<string>, *keep) frame
+    — computed ONLY for the candidates (the LSH payoff: exact work
+    scales with candidates, not corpus²).  Returns (doc_id_1,
+    doc_id_2, jaccard) plus each ``keep`` payload column of both
+    sides as <c>_1 / <c>_2 (dedup_edit_distance carries its folded
+    text this way, so a rescoring verifier pays one pair of id joins).
+
+    Elements are xxhash64-ed and array_distinct-ed: duplicate elements
+    would inflate F.size while array_intersect dedups, deflating the
+    Jaccard below truth (silent missed dups).  The hashed frame is
+    persisted: both candidate-join sides consume it, and their
+    differing projections defeat ReuseExchange — without the persist
+    the whole set pipeline runs twice (two-consumer invariant;
+    measured 2.57 s -> 2.27 s at sf0.1)."""
+    hashed = sets.select(
+        "doc_id",
+        F.array_distinct(
+            F.transform(F.col(set_col), lambda s: F.xxhash64(s))
+        ).alias("_es"),
+        *keep,
+    ).persist()
+
+    def side(i: int) -> DataFrame:
+        return hashed.select(
+            F.col("doc_id").alias(f"doc_id_{i}"),
+            F.col("_es").alias(f"_es_{i}"),
+            *[F.col(c).alias(f"{c}_{i}") for c in keep],
+        )
+
+    common = F.size(F.array_intersect(F.col("_es_1"), F.col("_es_2")))
+    union = F.size(F.col("_es_1")) + F.size(F.col("_es_2")) - common
     return (
-        cand.join(sa, "doc_id_1")
-        .join(sb, "doc_id_2")
+        cand.join(side(1), "doc_id_1")
+        .join(side(2), "doc_id_2")
         .withColumn("jaccard", common / union)
         .where(F.col("jaccard") >= threshold)
-        .select("doc_id_1", "doc_id_2", "jaccard")
+        .select(
+            "doc_id_1", "doc_id_2", "jaccard",
+            *[f"{c}_{i}" for i in (1, 2) for c in keep],
+        )
     )
 
 
@@ -648,28 +648,16 @@ def simhash_pairs(
             )
         ).alias("ch"),
     ).select("doc_id", "simhash", "ch.chunk_idx", "ch.chunk_val")
-    # repartition BEFORE aliasing: both self-join sides then share one
-    # shuffle stage, so the fingerprint pipeline computes once
-    # (ENGINEERING_NOTES 6d).  ``parts``: see set_jaccard_pairs.
-    nparts = parts or int(
-        chunked.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    chunked = chunked.repartition(nparts, "chunk_idx", "chunk_val")
-    l = chunked.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"),
-        "chunk_idx", "chunk_val",
-    )
-    r = chunked.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"),
-        "chunk_idx", "chunk_val",
-    )
     return (
-        l.join(r, ["chunk_idx", "chunk_val"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _keyed_self_join(
+            chunked, ["chunk_idx", "chunk_val"], carry=("simhash",), parts=parts
+        )
         .select(
             F.col("id_a").alias("doc_id_1"),
             F.col("id_b").alias("doc_id_2"),
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
+            F.bit_count(
+                F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+            ).alias("hamming"),
         )
         .distinct()
         .where(F.col("hamming") <= max_hamming)

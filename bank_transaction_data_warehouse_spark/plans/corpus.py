@@ -157,17 +157,47 @@ grams AS (
 sh AS (SELECT doc_id, len(g) AS n_sh, unnest(g) AS shingle FROM grams)
 """
 
-ORACLE["dedup_ngram_jaccard"] = f"""
-WITH {_SHINGLES_CTE.strip()}
-SELECT id_a AS doc_id_1, id_b AS doc_id_2,
-       common * 1.0 / (n_a + n_b - common) AS jaccard
+_JACCARD_COLS = """id_a AS doc_id_1, id_b AS doc_id_2,
+       common * 1.0 / (n_a + n_b - common) AS jaccard"""
+
+
+def _exact_jaccard_sql(
+    src: str, key: str, threshold: float, cols: str = _JACCARD_COLS
+) -> str:
+    """Exact all-pairs set Jaccard over an exploded (doc_id, n_sh,
+    <key>) element CTE — the DuckDB twin of
+    operators/dedup.set_jaccard_pairs, shared by every exact-Jaccard
+    oracle so the pair definition cannot drift between them."""
+    return f"""SELECT {cols}
 FROM (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
          any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  FROM {src} a JOIN {src} b ON a.{key} = b.{key} AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
-WHERE common * 1.0 / (n_a + n_b - common) >= 0.8
+WHERE common * 1.0 / (n_a + n_b - common) >= {threshold}"""
+
+
+# text near-dup components (connected components of the exact 0.8
+# Jaccard pairs by recursive transitive closure): `comp`(node, comp)
+_JACCARD_COMPONENTS_CTES = f"""{_SHINGLES_CTE.strip()},
+jp AS (
+  {_exact_jaccard_sql("sh", "shingle", 0.8, "id_a, id_b")}
+),
+e2 AS (
+  SELECT id_a AS a, id_b AS b FROM jp
+  UNION SELECT id_b, id_a FROM jp
+),
+reach(node, r) AS (
+  SELECT a, a FROM e2
+  UNION
+  SELECT reach.node, e2.b FROM reach JOIN e2 ON reach.r = e2.a
+),
+comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY 1)"""
+
+ORACLE["dedup_ngram_jaccard"] = f"""
+WITH {_SHINGLES_CTE.strip()}
+{_exact_jaccard_sql("sh", "shingle", 0.8)}
 """
 
 
@@ -203,15 +233,7 @@ shp AS (
          count(*) OVER (PARTITION BY doc_id) AS n_sh
   FROM sh0 ANTI JOIN hot USING (shingle)
 )
-SELECT id_a AS doc_id_1, id_b AS doc_id_2,
-       common * 1.0 / (n_a + n_b - common) AS jaccard
-FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
-         any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-  FROM shp a JOIN shp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-WHERE common * 1.0 / (n_a + n_b - common) >= 0.8
+{_exact_jaccard_sql("shp", "shingle", 0.8)}
 """
 
 
@@ -230,7 +252,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=64,
         bands=16,
         threshold=0.8,
-        verify=True,
         base_hash="poly",
         parts=_docs_parts(spark, sf_dir),
     )
@@ -687,25 +708,7 @@ def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["dedup_clusters"] = dedup_clusters_q
 ORACLE["dedup_clusters"] = f"""
-WITH RECURSIVE {_SHINGLES_CTE.strip()},
-jp AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
-           any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) WHERE common * 1.0 / (n_a + n_b - common) >= 0.8
-),
-e2 AS (
-  SELECT id_a AS a, id_b AS b FROM jp
-  UNION SELECT id_b, id_a FROM jp
-),
-reach(node, r) AS (
-  SELECT a, a FROM e2
-  UNION
-  SELECT reach.node, e2.b FROM reach JOIN e2 ON reach.r = e2.a
-),
-comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY 1)
+WITH RECURSIVE {_JACCARD_COMPONENTS_CTES}
 SELECT min(node) AS canonical_doc_id,
        count(*) AS cluster_size,
        array_to_string(list_sort(list(node)), ',') AS members
@@ -875,22 +878,7 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["corpus_clean"] = corpus_clean
 ORACLE["corpus_clean"] = f"""
-WITH RECURSIVE {_SHINGLES_CTE.strip()},
-jp AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
-           any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) WHERE common * 1.0 / (n_a + n_b - common) >= 0.8
-),
-e2 AS (SELECT id_a AS a, id_b AS b FROM jp UNION SELECT id_b, id_a FROM jp),
-reach(node, r) AS (
-  SELECT a, a FROM e2
-  UNION
-  SELECT reach.node, e2.b FROM reach JOIN e2 ON reach.r = e2.a
-),
-comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY 1),
+WITH RECURSIVE {_JACCARD_COMPONENTS_CTES},
 exact_surv AS (
   SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
 ),
@@ -2370,7 +2358,7 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample, n=3, threshold=0.8, parts=sample_parts
     ).agg(F.count("*").alias("n_exact_pairs"))
     n_lsh = DD.minhash_lsh_pairs(
-        sample, k=64, bands=16, threshold=0.8, verify=True,
+        sample, k=64, bands=16, threshold=0.8,
         base_hash="poly", parts=sample_parts,
     ).agg(F.count("*").alias("n_lsh_pairs"))
     return n_exact.crossJoin(n_lsh).select(
@@ -2673,7 +2661,7 @@ def dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.md5("text")).cast("bigint").alias("n_unique_texts"),
     )
     near = DD.minhash_lsh_pairs(
-        docs, k=64, bands=16, threshold=0.8, verify=True, base_hash="poly",
+        docs, k=64, bands=16, threshold=0.8, base_hash="poly",
         parts=_docs_parts(spark, sf_dir),
     ).agg(F.count("*").cast("bigint").alias("n_near_dup_pairs"))
     return tot.crossJoin(near).select(
@@ -2818,15 +2806,7 @@ fp AS (
          count(*) OVER (PARTITION BY doc_id) AS n_sh
   FROM f0 ANTI JOIN hot USING (frame)
 )
-SELECT id_a AS doc_id_1, id_b AS doc_id_2,
-       common * 1.0 / (n_a + n_b - common) AS jaccard
-FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
-         any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-  FROM fp a JOIN fp b ON a.frame = b.frame AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-WHERE common * 1.0 / (n_a + n_b - common) >= {_MFD_THRESHOLD}
+{_exact_jaccard_sql("fp", "frame", _MFD_THRESHOLD)}
 """
 
 
@@ -2848,63 +2828,30 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare the ASCII projection (non-ASCII codepoints folded to '?',
     where chars == bytes); the projection is RE2/Java-identical
     syntax per the regex invariant."""
-    # FUSED verify + rescore (r15, verdict item 4): one persisted
-    # per-doc frame carries BOTH the hashed shingle set (the Jaccard
-    # verify payload) and the ASCII-folded text (the levenshtein
-    # payload), so candidates pay ONE pair of id joins instead of two
-    # (r14 composed dedup_minhash_lsh — sets joins — and then joined
-    # the folded texts again: 4 broadcast exchanges and a second
-    # build of the fold projection).  Same rows out: the Jaccard
-    # filter below is dedup_minhash_lsh's verify verbatim (same _es
-    # arrays, same threshold), and at scale one 1.8 KB/doc shuffle
-    # strictly beats two of 0.8 + 1.0 KB (guide §8: move the payload
-    # once).
+    # FUSED verify + rescore (r15): the verify payload carries the
+    # ASCII-folded text next to the shingle set, so candidates pay ONE
+    # pair of id joins for both the Jaccard filter (dedup_minhash_lsh's
+    # verify verbatim: same sets, same threshold) and levenshtein — at
+    # scale one 1.8 KB/doc shuffle strictly beats two of 0.8 + 1.0 KB
+    # (guide §8: move the payload once).
     docs = _docs_wide(spark, sf_dir)
-    parts = _docs_parts(spark, sf_dir)
     banded = DD.minhash_band_keys(docs, k=64, bands=16, n=3, base_hash="poly")
-    cand = DD._lsh_candidates(banded, parts=parts)
-    payload = (
-        DD.shingle_sets(
-            docs, n=3,
-            keep=(
-                F.regexp_replace("text", r"[^\x00-\x7f]", "?").alias("_ft"),
-            ),
-        )
-        .select(
-            "doc_id",
-            F.transform("sh_set", lambda s: F.xxhash64(s)).alias("_es"),
-            "_ft",
-        )
-        .persist()  # two-consumer invariant: both candidate-join sides
+    cand = DD._lsh_candidates(banded, parts=_docs_parts(spark, sf_dir))
+    fold = F.regexp_replace("text", r"[^\x00-\x7f]", "?").alias("_ft")
+    pairs = DD._jaccard_verify(
+        cand, DD.shingle_sets(docs, n=3, keep=(fold,)), 0.8, keep=("_ft",)
     )
-    a = payload.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("_es").alias("_sa"),
-        F.col("_ft").alias("_fa"),
-    )
-    b = payload.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("_es").alias("_sb"),
-        F.col("_ft").alias("_fb"),
-    )
-    common = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-    union = F.size(F.col("_sa")) + F.size(F.col("_sb")) - common
-    lev = F.levenshtein("_fa", "_fb")
-    maxlen = F.greatest(F.length("_fa"), F.length("_fb"))
-    return (
-        cand.join(a, "doc_id_1")
-        .join(b, "doc_id_2")
-        .where((common / union) >= 0.8)
-        .select(
-            "doc_id_1",
-            "doc_id_2",
-            lev.cast("bigint").alias("lev"),
-            # ANSI guard: two empty-text docs pair via the sentinel
-            # shingle; 0/0 would raise at runtime
-            F.when(maxlen == 0, F.lit(1.0))
-            .otherwise(F.lit(1.0) - lev / maxlen)
-            .alias("edit_sim"),
-        )
+    lev = F.levenshtein("_ft_1", "_ft_2")
+    maxlen = F.greatest(F.length("_ft_1"), F.length("_ft_2"))
+    return pairs.select(
+        "doc_id_1",
+        "doc_id_2",
+        lev.cast("bigint").alias("lev"),
+        # ANSI guard: two empty-text docs pair via the sentinel
+        # shingle; 0/0 would raise at runtime
+        F.when(maxlen == 0, F.lit(1.0))
+        .otherwise(F.lit(1.0) - lev / maxlen)
+        .alias("edit_sim"),
     )
 
 
@@ -2962,25 +2909,7 @@ def cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["cluster_keep_best"] = cluster_keep_best
 ORACLE["cluster_keep_best"] = f"""
-WITH RECURSIVE {_SHINGLES_CTE.strip()},
-jp AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common,
-           any_value(a.n_sh) AS n_a, any_value(b.n_sh) AS n_b
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) WHERE common * 1.0 / (n_a + n_b - common) >= 0.8
-),
-e2 AS (
-  SELECT id_a AS a, id_b AS b FROM jp
-  UNION SELECT id_b, id_a FROM jp
-),
-reach(node, r) AS (
-  SELECT a, a FROM e2
-  UNION
-  SELECT reach.node, e2.b FROM reach JOIN e2 ON reach.r = e2.a
-),
-comp AS (SELECT node, min(r) AS comp FROM reach GROUP BY 1),
+WITH RECURSIVE {_JACCARD_COMPONENTS_CTES},
 q AS (SELECT doc_id, {_Q_FLAGS_SQL} AS qf FROM documents),
 jq AS (SELECT c.comp, c.node, q.qf FROM comp c JOIN q ON c.node = q.doc_id),
 ranked AS (

@@ -5,6 +5,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 Each query is forced end-to-end with a noop sink (computes every row,
 collects nothing to the driver).  One warm-up of the smallest query
 amortizes JVM/codegen startup out of the numbers.
+
+Usage: python bench.py [query ...]
+  With query names, times only that subset of queries() (same
+  methodology, same JSON shape); with none, the HEADLINE suite.
 """
 
 from __future__ import annotations
@@ -13,6 +17,9 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -72,33 +79,43 @@ HEADLINE = [
 ]
 
 
+def timed_run(
+    spark: SparkSession, build: Callable[[], DataFrame], label: str
+) -> tuple[float, float]:
+    """(build_seconds, exec_seconds) of one run.  Build = Python plan
+    construction INCLUDING any eager plan-build work (kmeans training
+    collects, connected-components iterations); exec = the noop-sink
+    action.  Reporting both closes the r13 timing blind spot: queries
+    whose heavy lifting runs eagerly at build time
+    (semantic_dedup_clusters) looked free under exec-only timing while
+    DuckDB's number covered the whole computation."""
+    spark.sparkContext.setJobDescription(f"bench: {label}")
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    dt = t1 - t0, time.perf_counter() - t1
+    spark.sparkContext.setJobDescription(None)
+    return dt
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0  # unknown scale label; still run
+    queries = E.queries()
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = E.queries()
 
     def run(name: str) -> tuple[float, float]:
-        """(build_seconds, exec_seconds).  Build = Python plan
-        construction INCLUDING any eager plan-build work (kmeans
-        training collects, connected-components iterations); exec =
-        the noop-sink action.  Reporting both closes the r13 timing
-        blind spot: queries whose heavy lifting runs eagerly at build
-        time (semantic_dedup_clusters) looked free under exec-only
-        timing while DuckDB's number covered the whole computation."""
-        spark.sparkContext.setJobDescription(f"bench: {name}")
-        t0 = time.perf_counter()
-        df = queries[name](spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = t1 - t0, time.perf_counter() - t1
-        spark.sparkContext.setJobDescription(None)
-        return dt
+        return timed_run(spark, lambda: queries[name](spark, sf_dir), name)
 
     run("q1_pricing_summary")  # warm-up: JIT, codegen, FS cache
 
@@ -107,7 +124,7 @@ def main() -> None:
     # ambient-load noise between rounds
     times: dict[str, float] = {}
     times_full: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in names:
         runs = [run(name) for _ in range(3)]
         times[name] = round(min(e for _b, e in runs), 3)
         times_full[name] = round(min(b + e for b, e in runs), 3)

@@ -1,9 +1,11 @@
 """Dump `.explain("formatted")` for every declared query into
-plans/<tag>/<query>.txt — the judge-reviewable before/after evidence
-for optimization rounds.
+<out-dir>/<query><suffix>.txt — full plan text for a before/after
+review, regenerated on demand (the committed, compact per-query
+summary is plans/fingerprints_sf0.01.json from
+scripts/explain_audit.py --json).
 
-Usage: python scripts/dump_plans.py <tag-dir> [sf_dir] [query ...]
-  e.g. python scripts/dump_plans.py plans/r14 --suffix _before
+Usage: python scripts/dump_plans.py <out-dir> [sf_dir] [query ...]
+  e.g. python scripts/dump_plans.py /tmp/plans --suffix _before
 """
 
 from __future__ import annotations

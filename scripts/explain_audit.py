@@ -2,11 +2,23 @@
 (exchange count, broadcast vs sort-merge joins, pushed filters, scan
 column pruning) into PLANS.md so plan regressions are reviewable.
 
-Usage: python scripts/explain_audit.py [sf_dir]
+``--json PATH`` instead writes a per-query plan FINGERPRINT: the
+physical plan as planned (before AQE re-optimizes it at run time),
+reduced to what decides its cost — operator names in tree order (a
+join's name is its strategy), each Exchange's partitioning scheme,
+keys, width and origin, each join's type, and each scan's pushed
+filters.  Expression ids are stripped, so two builds of the same plan
+fingerprint identically; diff two files to prove a refactor left every
+plan unchanged.  Persisted frames are fingerprinted through their
+cached plan.  The streaming band-index projection is included under
+``stream:*`` keys, built over the static documents table.
+
+Usage: python scripts/explain_audit.py [sf_dir] [--json PATH]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -15,6 +27,111 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
 from bank_transaction_data_warehouse_spark.session import get_spark
+
+_EXPR_ID = re.compile(r"#\d+L?")
+
+
+def _seq(jseq) -> list:
+    out, it = [], jseq.iterator()
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _sql(expr) -> str:
+    return _EXPR_ID.sub("", expr.sql())
+
+
+def _node(plan) -> dict:
+    """One fingerprint node: the operator name plus, where it matters
+    for cost, its exchange / join / scan details."""
+    out: dict = {"op": plan.nodeName().strip()}
+    cls = plan.getClass().getSimpleName()
+    if cls == "ShuffleExchangeExec":
+        part = plan.outputPartitioning()
+        out["partitioning"] = part.getClass().getSimpleName().rstrip("$")
+        out["width"] = part.numPartitions()
+        out["origin"] = plan.shuffleOrigin().toString()
+        if out["partitioning"] == "HashPartitioning":
+            out["keys"] = [_sql(e) for e in _seq(part.expressions())]
+        elif out["partitioning"] == "RangePartitioning":
+            out["keys"] = [_sql(e) for e in _seq(part.ordering())]
+    elif cls == "BroadcastExchangeExec":
+        out["mode"] = plan.mode().getClass().getSimpleName()
+    elif cls.endswith("JoinExec"):
+        out["type"] = plan.joinType().toString()
+    elif cls == "FileSourceScanExec":
+        pushed = plan.metadata().get("PushedFilters")
+        out["pushed"] = _EXPR_ID.sub("", pushed.get()) if pushed.isDefined() else ""
+    return out
+
+
+_WRAPPERS = ("WholeStageCodegenExec", "InputAdapter")
+
+
+def fingerprint(plan) -> list:
+    """Pre-order walk of a physical plan.  An AQE plan is read through
+    its current plan (before execution: the initial plan, exchanges
+    included), a query stage through its plan, a cached relation
+    through its cached plan; codegen wrappers are skipped."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return fingerprint(plan.executedPlan())
+    if cls.endswith("QueryStageExec"):
+        return fingerprint(plan.plan())
+    if cls in _WRAPPERS:
+        return [n for c in _seq(plan.children()) for n in fingerprint(c)]
+    nodes = [_node(plan)]
+    if cls == "InMemoryTableScanExec":
+        nodes.append({"cached": fingerprint(plan.relation().cachedPlan())})
+    for child in _seq(plan.children()):
+        nodes.extend(fingerprint(child))
+    return nodes
+
+
+def _stream_projections(spark, sf_dir) -> dict:
+    """The band-index projection of the streaming jobs, over a static
+    read of the documents table (the projection is stateless, so the
+    batch plan is the per-micro-batch plan)."""
+    from bank_transaction_data_warehouse_spark.operators.dedup import (
+        minhash_band_keys,
+    )
+    from bank_transaction_data_warehouse_spark.sources.tables import load_table
+    from bank_transaction_data_warehouse_spark.streaming.jobs import (
+        dedup_vs_corpus_stream,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    return {
+        "stream:minhash_band_keys": lambda: minhash_band_keys(docs),
+        "stream:dedup_vs_corpus_stream": lambda: dedup_vs_corpus_stream(docs, docs),
+    }
+
+
+def write_fingerprints(spark, sf_dir, path) -> None:
+    builders = {n: (lambda fn=fn: fn(spark, sf_dir)) for n, fn in E.queries().items()}
+    builders.update(_stream_projections(spark, sf_dir))
+    out = {}
+    for name in sorted(builders):
+        try:
+            df = builders[name]()
+            out[name] = fingerprint(df._jdf.queryExecution().executedPlan())
+        except Exception as ex:  # pragma: no cover
+            out[name] = {"error": str(ex)[:200]}
+        spark.catalog.clearCache()
+    # one plan node per line: a diff of two files reads node by node
+    entries = []
+    for name, nodes in sorted(out.items()):
+        if isinstance(nodes, dict):
+            body = json.dumps(nodes, sort_keys=True)
+        else:
+            body = "[\n" + ",\n".join(
+                "  " + json.dumps(n, sort_keys=True) for n in nodes
+            ) + "\n ]"
+        entries.append(f" {json.dumps(name)}: {body}")
+    with open(path, "w") as f:
+        f.write("{\n" + ",\n".join(entries) + "\n}\n")
+    print(f"wrote {len(out)} plan fingerprints to {path}")
 
 
 def audit(df):
@@ -46,9 +163,18 @@ def audit(df):
 
 
 def main() -> None:
+    json_path = None
+    if "--json" in sys.argv:
+        i = sys.argv.index("--json")
+        json_path = sys.argv[i + 1]
+        del sys.argv[i : i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    if json_path:
+        write_fingerprints(spark, sf_dir, json_path)
+        spark.stop()
+        return
     rows = []
     for name, fn in sorted(E.queries().items()):
         try:

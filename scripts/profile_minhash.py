@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -18,15 +17,13 @@ from pyspark.sql import functions as F
 from bank_transaction_data_warehouse_spark.operators import dedup as DD
 from bank_transaction_data_warehouse_spark.plans.corpus import _docs
 from bank_transaction_data_warehouse_spark.session import get_spark
+from bench import timed_run
 
 
 def timeit(spark, name, df_fn, runs=3):
     best = None
     for _ in range(runs):
-        t0 = time.perf_counter()
-        df = df_fn()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        dt = sum(timed_run(spark, df_fn, name))
         best = dt if best is None else min(best, dt)
         spark.catalog.clearCache()
     print(f"{name:42s} {best:7.3f} s")
@@ -71,15 +68,15 @@ def main() -> None:
     timeit(
         spark,
         "candidates (no verify)",
-        lambda: DD.minhash_lsh_pairs(
-            docs, k=64, bands=16, threshold=0.8, verify=False, base_hash="poly"
+        lambda: DD._lsh_candidates(
+            DD.minhash_band_keys(docs, k=64, bands=16, n=3, base_hash="poly")
         ),
     )
     timeit(
         spark,
-        "full minhash_lsh_pairs (verify)",
+        "full minhash_lsh_pairs",
         lambda: DD.minhash_lsh_pairs(
-            docs, k=64, bands=16, threshold=0.8, verify=True, base_hash="poly"
+            docs, k=64, bands=16, threshold=0.8, base_hash="poly"
         ),
     )
     # media element-set path

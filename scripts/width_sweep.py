@@ -19,12 +19,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
 from bank_transaction_data_warehouse_spark.session import get_spark
+from bench import timed_run
 
 DEFAULT_WIDTHS = [32, 16, 8, 4]
 DEFAULT_QUERIES = [
@@ -70,11 +70,7 @@ def main() -> None:
     queries = E.queries()
 
     def run(name: str) -> tuple[float, float]:
-        t0 = time.perf_counter()
-        df = queries[name](spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return t1 - t0, time.perf_counter() - t1
+        return timed_run(spark, lambda: queries[name](spark, sf_dir), name)
 
     run("q1_pricing_summary")  # warm-up
 

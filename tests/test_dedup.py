@@ -40,7 +40,7 @@ def test_minhash_lsh_recall_matches_exact(spark, sf_dir):
     }
     lsh = {
         (r.doc_id_1, r.doc_id_2)
-        for r in DD.minhash_lsh_pairs(docs, threshold=0.8, verify=True).collect()
+        for r in DD.minhash_lsh_pairs(docs, threshold=0.8).collect()
     }
     # verified LSH output ⊆ exact; recall should be ~1 at this band
     # setting (S-curve threshold ≈ 0.5 << 0.8)

@@ -179,3 +179,42 @@ def test_dedup_edit_distance_matches_unfused_composition(spark, sf_dir):
     )
     assert fused.exceptAll(old).count() == 0
     assert old.exceptAll(fused).count() == 0
+
+
+_PIN_PARTS = 3  # distinct from the fixture's shuffle width (8) and 1
+
+
+@pytest.mark.parametrize(
+    "generator, keys",
+    [
+        ("set_jaccard_pairs", ["shingle"]),
+        ("minhash_lsh_pairs", ["band", "band_hash"]),
+        ("set_minhash_lsh_pairs", ["band", "band_hash"]),
+        ("simhash_pairs", ["chunk_idx", "chunk_val"]),
+    ],
+)
+def test_self_join_expansion_pinned_to_parts(spark, sf_dir, generator, keys):
+    """Self-join expansions need an explicit repartition(n, key): the
+    EXECUTED plan (after AQE re-optimization) must still hold a
+    user-specified hash exchange of width ``parts`` on the join keys —
+    AQE coalesces any other exchange from map-output bytes and would
+    serialize the quadratic pair blow-up into one task."""
+    import re
+
+    docs = T.load_table(spark, sf_dir, "documents")
+    if generator == "set_jaccard_pairs":
+        df = DD.set_jaccard_pairs(DD.shingle_sets(docs), parts=_PIN_PARTS)
+    elif generator == "set_minhash_lsh_pairs":
+        df = DD.set_minhash_lsh_pairs(DD.shingle_sets(docs), parts=_PIN_PARTS)
+    else:
+        df = getattr(DD, generator)(docs, parts=_PIN_PARTS)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    pins = re.findall(
+        r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan
+    )
+    pinned = [
+        (re.sub(r"#\d+L?", "", cols).split(", "), int(n)) for cols, n in pins
+    ]
+    assert (keys, _PIN_PARTS) in pinned, plan
