@@ -8,7 +8,11 @@ DuckDB twin for each SQL-expressible one.
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -29,79 +33,29 @@ def entry(spark: SparkSession) -> DataFrame:
     return A.spend_trend_monthly(spark, "/root/testdata/sf0.001")
 
 
-# Key ORDER is deliberate: the driver's correctness run covers the
-# first ~50 keys only, and crosscheck.py's freshness gate requires any
-# key whose newest driver row is older than one round to sit inside
-# that window.  With 115 keys and a 50-key window, ~5-10 keys/round
-# structurally overflow the two-round freshness horizon — the rotation
-# is a treadmill, not a one-off.  r15 rotation: (a) the 18 keys whose
-# latest row is r12 (the gate exits 1 at HEAD on exactly these — the
-# 16 VERDICT_r14-mandated deferrals + dup_shingle_ratio +
-# kmeans_clusters), then (b) 32 of the 47 r13-latest keys, changed
-# plans first (this round re-sized the spread/pin exchange widths of
-# the whole dedup/text/ANN family and rendered the kmeans/IVF literal
-# trees as SQL text — those must be driver-re-verified).  Left
-# outside (r13-latest, plans untouched this round, still within the
-# one-round freshness horizon): dedup_impact, decontaminate,
-# tfidf_top_terms, repetition_score, dim_date, profile_events,
-# sql_revenue_by_region and the q7/q8/q11/q12/q14/q15/q17-q22 OLAP
-# block.
-_R15_WINDOW = [
-    # (a) r12-stale — the freshness gate names exactly these 18
-    "dim_customer",
-    "dim_account",
-    "dim_location",
-    "dim_merchant",
-    "dim_date_daily",
-    "spend_by_day_name",
-    "quarantine_transactions",
-    "spend_outliers",
-    "hashed_features",
-    "centroid_classifier_eval",
-    "ann_ivf_kmeans_topk",
-    "frame_sample",
-    "vocab_growth",
-    "mixture_sample",
-    "label_centroids",
-    "chunk_documents",
-    "dup_shingle_ratio",
-    "kmeans_clusters",
-    # (b) r13-latest, r15-changed plans first (width/pin re-sizing,
-    # SQL-text kmeans/IVF trees, fused edit-distance payload)
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_pruned",
-    "dedup_simhash",
-    "minhash_recall_report",
-    "cross_source_overlap",
-    "doc_quality",
-    "pii_scrub",
-    "lang_id_confusion",
-    "embedding_dedup",
-    "ann_cosine_topk",
-    "ann_recall_report",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "cluster_balanced_sample",
-    "quality_mixture_sample",
-    "q1_pricing_summary",
-    # (b cont.) r13-latest, plans stable — breadth across families
-    "stratified_sample",
-    "multimodal_features",
-    "ngram_counts",
-    "pack_documents",
-    "audio_segments",
-    "top_orders_per_customer",
-    "q3_shipping_priority",
-    "q5_local_volume",
-    "clean_accounts",
-    "clean_transactions",
-    "active_customers",
-    "q18_large_volume_customers",
-    "q20_part_suppliers",
-    "q21_waiting_orders",
-    "q8_market_share",
-]
+@functools.cache
+def correctness_rounds() -> tuple[dict[str, int], int | None]:
+    """The per-round correctness artifacts (``CORRECTNESS_r<N>.json``
+    beside this file), read once: the newest round each queries() key
+    has a row in, and the newest round overall (None when there are no
+    artifacts)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    latest: dict[str, int] = {}
+    rounds = []
+    for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", p)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        rounds.append(rnd)
+        try:
+            with open(p) as f:
+                data = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        for k in data:
+            latest[k] = max(latest.get(k, -1), rnd)
+    return latest, max(rounds, default=None)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -119,7 +73,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(C.QUERIES)
     q.update(
         {
-            # high-value core kept inside the window
             "cdc_apply": WH.cdc_apply,
             "trending_topk": O.trending_topk,
             "clean_accounts": WH.clean_accounts,
@@ -142,7 +95,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "q9_nation_year_revenue": O.q9_nation_year_revenue,
             "q13_order_count_distribution": O.q13_order_count_distribution,
             "q16_supplier_part_counts": O.q16_supplier_part_counts,
-            # ---- proven-stable r10-green rows (behind the window) ----
             "dim_date_daily": WH.dim_date_daily,
             "spend_by_day_name": WH.spend_by_day_name,
             "quarantine_transactions": WH.quarantine_transactions,
@@ -174,9 +126,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "q19_disjunctive_revenue": O.q19_disjunctive_revenue,
         }
     )
-    ordered = {k: q[k] for k in _R15_WINDOW if k in q}
-    ordered.update({k: v for k, v in q.items() if k not in ordered})
-    return ordered
+    # Key ORDER is the correctness window: each round's correctness
+    # run covers only the first ~50 keys, so the stalest keys (no row,
+    # then the oldest newest-row round) lead, ties in registry order
+    # (scripts/crosscheck.check_freshness gates this).
+    latest = correctness_rounds()[0]
+    return dict(sorted(q.items(), key=lambda kv: latest.get(kv[0], -1)))
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,7 +1,7 @@
 """Incremental fact loading — the production delta between the
 reference's one-shot batch ETL and a warehouse that stays current.
 
-Two entry points sharing one transformation:
+Three entry points sharing one transformation:
 
 - ``fact_increment(spark, sf_dir, from_date_key)``: the batch delta —
   only transactions with date_key > watermark flow through the same
@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
+from bank_transaction_data_warehouse_spark.plans.materialize import _write_fact
+from bank_transaction_data_warehouse_spark.streaming.jobs import _start_sink
 
 
 def fact_increment(
@@ -47,22 +49,9 @@ def fact_increment(
 
 def append_increment(increment: DataFrame, fact_dir: str) -> None:
     """Write the increment into the monthly-partitioned fact layout,
-    replacing only the partitions it touches (dynamic partition
-    overwrite → idempotent replays)."""
-    spark = increment.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            increment.withColumn("ym", (F.col("date_key") / 100).cast("int"))
-            .repartition("ym")
-            .sortWithinPartitions("customer_key")
-            .write.mode("overwrite")
-            .partitionBy("ym")
-            .parquet(fact_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    replacing only the months it touches (dynamic partition overwrite
+    → idempotent replays)."""
+    _write_fact(increment, fact_dir, "dynamic")
 
 
 def stream_fact_into(
@@ -111,9 +100,4 @@ def stream_fact_into(
         )
         append_increment(fact, fact_dir)
 
-    return (
-        txn_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_sink(txn_stream, handle, checkpoint_dir)

@@ -132,21 +132,29 @@ def build_warehouse(
     for name, df in tables.items():
         validate_schema(df, name)
         path = os.path.join(out_dir, name)
-        writer = df.write.mode("overwrite")
         if name == "fact_spending":
-            # ym = yyyyMM prefix of the day key → monthly partitions;
-            # sort within partitions for row-group pruning on the
-            # customer key
-            df = df.withColumn("ym", (F.col("date_key") / 100).cast("int"))
-            writer = (
-                df.repartition("ym")
-                .sortWithinPartitions("customer_key")
-                .write.mode("overwrite")
-                .partitionBy("ym")
-            )
-        writer.parquet(path)
+            _write_fact(df, path, "static")
+        else:
+            df.write.mode("overwrite").parquet(path)
         paths[name] = path
     return paths
+
+
+def _write_fact(fact: DataFrame, path: str, partition_overwrite: str) -> None:
+    """The one writer of the fact layout: ym = yyyyMM prefix of the day
+    key → monthly partitions, sorted within partitions for row-group
+    pruning on the customer key.  ``partition_overwrite`` is "static"
+    (replace the whole table) or "dynamic" (replace only the months
+    present), set on the writer, never on the session."""
+    (
+        fact.withColumn("ym", (F.col("date_key") / 100).cast("int"))
+        .repartition("ym")
+        .sortWithinPartitions("customer_key")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", partition_overwrite)
+        .partitionBy("ym")
+        .parquet(path)
+    )
 
 
 def read_warehouse(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

@@ -14,9 +14,33 @@ and the live path cannot drift — the Kappa-style guarantee.
 Scale notes: windowed aggregation state is bounded by the watermark
 horizon x group cardinality; sessionization state by active users.
 Both partition by their group key, so state shards across executors.
+
+Sinks that must survive replay (checkpoint loss, at-least-once
+redelivery) run as availableNow foreachBatch drains (``_start_sink``)
+and commit by one of two protocols — the reference's load is a plain
+``if_exists='append'`` and has neither (etl.py:290):
+
+1. Drop-id partition overwrite (``maintain_band_index``,
+   ``maintain_trending_counts``; plans/incremental.append_increment
+   overwrites ``ym`` months the same way).  Rows are partitioned by a
+   deterministic 64-bit id of their source file and written with
+   dynamic partition overwrite, so a replayed drop rewrites exactly its
+   own partition instead of appending duplicates.  Dynamic overwrite is
+   always a DataFrameWriter option, never a session conf: a conf
+   set/restore is neither scoped nor thread-safe and leaks to
+   concurrent queries on the shared session.
+2. Versioned ``v=N`` state with a ``_SUCCESS`` gate
+   (``stream_scd2_dim_maintenance``, ``cdc_apply_stream``).  Each batch
+   reads the newest committed version and writes the next one to a NEW
+   directory; a version counts only once Spark's ``_SUCCESS`` marker
+   exists, so a crash mid-write leaves a torn directory that is skipped
+   and then rewritten by the replay, never adopted.
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +63,76 @@ EVENT_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
+
+
+def _start_sink(stream: DataFrame, handle, checkpoint_dir: str):
+    """The one foreachBatch tail: run ``handle(batch, batch_id)`` on
+    every checkpointed micro-batch, draining what is there
+    (availableNow).  Returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _drop_id():
+    """Deterministic id of a row's source file.  64 bits: crc32's
+    32-bit space reaches ~50% collision odds by ~77k drop files, and a
+    collision means one drop's overwrite silently deletes the other's
+    rows."""
+    return F.xxhash64(F.input_file_name())
+
+
+def _overwrite_drops(frame: DataFrame, sink_dir: str) -> None:
+    """Protocol 1: write ``frame`` partitioned by its ``drop_id``,
+    replacing only the drops it holds."""
+    (
+        frame.repartition("drop_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("drop_id")
+        .parquet(sink_dir)
+    )
+
+
+def _committed_versions(state_dir: str) -> list[int]:
+    """Protocol 2: the COMMITTED versions under ``state_dir`` (subdirs
+    ``v=N`` holding a _SUCCESS marker), ascending.  Torn dirs are
+    skipped: adopting one would bake its missing rows into every later
+    merge."""
+    return sorted(
+        int(p.rsplit("=", 1)[1])
+        for p in glob.glob(os.path.join(state_dir, "v=*"))
+        if os.path.exists(os.path.join(p, "_SUCCESS"))
+    )
+
+
+def _read_committed(
+    spark: SparkSession, state_dir: str, kind: str
+) -> tuple[DataFrame, int]:
+    """The newest committed state version and its number.  An unseeded
+    (or all-torn) state dir is a setup error surfaced as a clear
+    ValueError, not a bare IndexError buried in an executor log."""
+    vers = _committed_versions(state_dir)
+    if not vers:
+        raise ValueError(
+            f"no committed {kind} state versions under {state_dir}; seed "
+            "v=0 (with a _SUCCESS marker) before starting the stream"
+        )
+    return spark.read.parquet(os.path.join(state_dir, f"v={vers[-1]}")), vers[-1]
+
+
+def _commit_version(state: DataFrame, state_dir: str, version: int) -> str:
+    """Write ``state`` as version ``version`` and return its path.
+    Overwrite, not errorifexists: a crash can leave a TORN ``v=N+1``
+    that _committed_versions skips, so the replayed batch recomputes
+    the same version number and must be able to rewrite it, or the
+    stream fails permanently with 'path already exists'."""
+    path = os.path.join(state_dir, f"v={version}")
+    state.write.mode("overwrite").parquet(path)
+    return path
 
 
 def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -250,7 +344,6 @@ def dedup_vs_corpus_stream(
     k: int = 64,
     bands: int = 16,
     n: int = 3,
-    cache_corpus: bool = True,
 ) -> DataFrame:
     """Online near-dup detection: route each ARRIVING document against
     a STATIC corpus LSH index — 'is this crawl drop already in my
@@ -261,13 +354,11 @@ def dedup_vs_corpus_stream(
     colliding band, dedup downstream (the consumer aggregates per doc
     anyway).
 
-    ``cache_corpus`` (default True): persist the corpus banding so it
-    computes ONCE for the stream's lifetime instead of once per
-    micro-batch — a stream-static join re-plans the static side every
-    batch, and the full tokenize+signature pipeline re-ran each time
-    (r15 streaming micro-bench: 13.4 s -> 6.2 s over 4 drops at
-    sf0.1).  Pass False to keep per-batch re-planning when the live
-    pickup of a nightly index rebuild matters more than throughput.
+    The corpus banding is persisted, so it computes ONCE for the
+    stream's lifetime instead of once per micro-batch — a stream-static
+    join re-plans the static side every batch, and the full
+    tokenize+signature pipeline re-ran each time (13.4 s -> 6.2 s over
+    4 drops at sf0.1, 32 cores).
 
     At 100 TB the corpus side is the PRECOMPUTED band-key table
     (written bucketed by (band, band_hash)), not a live recompute —
@@ -277,11 +368,11 @@ def dedup_vs_corpus_stream(
     )
 
     stream_bands = minhash_band_keys(doc_stream, k=k, bands=bands, n=n)
-    corpus_bands = minhash_band_keys(corpus_docs, k=k, bands=bands, n=n).select(
-        F.col("doc_id").alias("corpus_doc_id"), "band", "band_hash"
+    corpus_bands = (
+        minhash_band_keys(corpus_docs, k=k, bands=bands, n=n)
+        .select(F.col("doc_id").alias("corpus_doc_id"), "band", "band_hash")
+        .persist()
     )
-    if cache_corpus:
-        corpus_bands = corpus_bands.persist()
     return (
         stream_bands.join(corpus_bands, ["band", "band_hash"])
         .where(F.col("doc_id") != F.col("corpus_doc_id"))
@@ -364,76 +455,26 @@ def maintain_band_index(
     dedup_vs_corpus_stream (and the batch dedup family) consults —
     closing the loop so the 'precomputed band-key table' the 100 TB
     design assumes is itself kept current by a stream, not a nightly
-    rebuild.
-
-    Idempotence: the index is partitioned by a DETERMINISTIC drop id
-    (xxhash64 of the source file name), and each foreachBatch write uses
-    dynamic partition overwrite — replaying a drop (checkpoint loss,
-    at-least-once redelivery) rewrites exactly its own partition
-    instead of appending duplicates.  Same discipline as
-    plans/incremental.append_increment.  Returns the StreamingQuery.
-    """
+    rebuild.  Replay-safe by drop-id partition overwrite (protocol 1 of
+    the module docstring).  Returns the StreamingQuery."""
     from bank_transaction_data_warehouse_spark.operators.dedup import (
         minhash_band_keys,
     )
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        # 64-bit drop ids: crc32's 32-bit space reaches ~50% collision
-        # odds by ~77k drop files, and a collision means one drop's
-        # dynamic-overwrite silently deletes the other's index rows
-        drops = batch.select(
-            "doc_id", F.xxhash64(F.input_file_name()).alias("drop_id")
-        )
+        drops = batch.select("doc_id", _drop_id().alias("drop_id"))
         banded = minhash_band_keys(batch, k=k, bands=bands, n=n).join(
             drops, "doc_id"
         )
-        # dynamic overwrite is scoped to THIS write via the DataFrameWriter
-        # option — mutating the session conf around the write would leak
-        # dynamic-overwrite semantics to concurrent queries on the shared
-        # session (set/restore is neither scoped nor thread-safe)
-        (
-            banded.repartition("drop_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("drop_id")
-            .parquet(index_dir)
-        )
+        _overwrite_drops(banded, index_dir)
 
-    return (
-        doc_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _scd2_versions(state_dir: str) -> list[int]:
-    """COMMITTED state versions under ``state_dir`` (subdirs ``v=N``).
-    A version counts only if Spark's _SUCCESS marker exists: a crash
-    mid-write leaves a torn directory with part files but no marker,
-    and silently adopting it as current state would bake the missing
-    rows into every later merge.  Torn dirs are simply skipped (the
-    replayed batch rewrites the next version from the last GOOD one).
-    """
-    import glob as _glob
-    import os as _os
-
-    return sorted(
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(_os.path.join(state_dir, "v=*"))
-        if _os.path.exists(_os.path.join(p, "_SUCCESS"))
-    )
+    return _start_sink(doc_stream, handle, checkpoint_dir)
 
 
 def read_scd2_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the newest COMMITTED version of a versioned SCD2 state
     directory (subdirs ``v=N``; largest N with a _SUCCESS marker)."""
-    import os as _os
-
-    vers = _scd2_versions(state_dir)
-    if not vers:
-        raise ValueError(f"no committed SCD2 state versions under {state_dir}")
-    return spark.read.parquet(_os.path.join(state_dir, f"v={vers[-1]}"))
+    return _read_committed(spark, state_dir, "SCD2")[0]
 
 
 def stream_scd2_dim_maintenance(
@@ -453,21 +494,18 @@ def stream_scd2_dim_maintenance(
     Replay-idempotence comes from THREE properties: (a) scd2_merge is
     change-detecting — re-merging an identical snapshot passes every
     row through untouched, so a replayed drop cannot mint duplicate
-    versions; (b) state versions are written to NEW directories
-    (``v=N+1``, never in place — the maintenance-rewrite discipline)
-    and the reader takes the largest COMMITTED one (_SUCCESS marker),
-    so a crash mid-write leaves a torn dir that is skipped, not
-    adopted; (c) effective dates come from the BATCH'S DATA (the
+    versions; (b) the versioned ``v=N`` state of protocol 2 (module
+    docstring) — new directories, _SUCCESS-gated reads, torn dirs
+    rewritten; (c) effective dates come from the BATCH'S DATA (the
     snapshot-date column), never the wall clock, so replays are
     deterministic.  A micro-batch may contain SEVERAL snapshot drops
     (availableNow with no maxFilesPerTrigger reads every accumulated
     file at once): snapshots are merged ONE PER DISTINCT snapshot
     date, ascending — feeding a multi-snapshot batch through a single
     merge would fan out the full-outer join on duplicate naturals and
-    stamp earlier changes with later dates.  Returns the
+    stamp earlier changes with later dates.  Seed v=0 (with _SUCCESS)
+    with the initial dimension load before starting.  Returns the
     StreamingQuery."""
-    import os as _os
-
     from bank_transaction_data_warehouse_spark.operators.scd import scd2_merge
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -477,19 +515,7 @@ def stream_scd2_dim_maintenance(
         snap_dates = sorted(
             r["d"] for r in batch.select(F.col(date_col).alias("d")).distinct().collect()
         )
-        vers = _scd2_versions(state_dir)
-        if not vers:
-            # same contract as read_scd2_state: an unseeded (or
-            # all-torn) state dir is a setup error the operator must
-            # surface clearly, not a bare IndexError buried in the
-            # executor log — seed v=0 with the initial dimension load
-            raise ValueError(
-                f"no committed SCD2 state versions under {state_dir}; "
-                "seed v=0 (with a _SUCCESS marker) before starting the "
-                "maintenance stream"
-            )
-        cur = spark.read.parquet(_os.path.join(state_dir, f"v={vers[-1]}"))
-        nxt = vers[-1]
+        cur, version = _read_committed(spark, state_dir, "SCD2")
         for eff in snap_dates:
             merged = scd2_merge(
                 cur,
@@ -498,24 +524,10 @@ def stream_scd2_dim_maintenance(
                 tracked_cols,
                 str(eff),
             )
-            nxt += 1
-            # overwrite, not errorifexists: a crash can leave a TORN
-            # v=N+1 (part files, no _SUCCESS) that _scd2_versions
-            # rightly skips — the replayed batch recomputes nxt=N+1
-            # from the last committed version and must be able to
-            # REWRITE the torn dir, or the stream fails permanently
-            # with 'path already exists'
-            merged.write.mode("overwrite").parquet(
-                _os.path.join(state_dir, f"v={nxt}")
-            )
-            cur = spark.read.parquet(_os.path.join(state_dir, f"v={nxt}"))
+            version += 1
+            cur = spark.read.parquet(_commit_version(merged, state_dir, version))
 
-    return (
-        snapshot_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_sink(snapshot_stream, handle, checkpoint_dir)
 
 
 def cdc_apply_stream(
@@ -535,41 +547,22 @@ def cdc_apply_stream(
     Replay-idempotence has TWO independent layers: (a) cdc_apply's
     per-key seq high-water mark (``_cdc_seq``) makes re-folding
     already-applied events a no-op, even from a fresh checkpoint;
-    (b) state versions are written to v=N+1 with mode=overwrite and
-    read back _SUCCESS-gated (same torn-dir recovery as the SCD2
-    stream).  Unlike SCD2 — where a multi-snapshot batch must merge
-    one snapshot per date, ascending — CDC's latest-event-per-key
-    reduction is ORDER-FREE, so a micro-batch holding several
-    accumulated drops folds in one merge.  Seed v=0 (with _SUCCESS)
-    with the initial table load before starting.  Returns the
-    StreamingQuery."""
-    import os as _os
-
+    (b) the versioned ``v=N`` state of protocol 2 (module docstring).
+    Unlike SCD2 — where a multi-snapshot batch must merge one snapshot
+    per date, ascending — CDC's latest-event-per-key reduction is
+    ORDER-FREE, so a micro-batch holding several accumulated drops
+    folds in one merge.  Seed v=0 (with _SUCCESS) with the initial
+    table load before starting.  Returns the StreamingQuery."""
     from bank_transaction_data_warehouse_spark.operators.cdc import cdc_apply
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        vers = _scd2_versions(state_dir)
-        if not vers:
-            raise ValueError(
-                f"no committed CDC state versions under {state_dir}; "
-                "seed v=0 (with a _SUCCESS marker) before starting the "
-                "apply stream"
-            )
-        cur = spark.read.parquet(_os.path.join(state_dir, f"v={vers[-1]}"))
+        cur, version = _read_committed(batch.sparkSession, state_dir, "CDC")
         merged = cdc_apply(cur, batch, key, seq_col, op_col, upsert_cols)
-        merged.write.mode("overwrite").parquet(
-            _os.path.join(state_dir, f"v={vers[-1] + 1}")
-        )
+        _commit_version(merged, state_dir, version + 1)
 
-    return (
-        event_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_sink(event_stream, handle, checkpoint_dir)
 
 
 def maintain_trending_counts(
@@ -584,18 +577,16 @@ def maintain_trending_counts(
     is: the STREAM maintains additive counts; the rank stage stays a
     cheap batch read over them (read_trending_topk).
 
-    Idempotence is the maintain_band_index discipline: counts are
-    written partitioned by a deterministic 64-bit drop id
-    (xxhash64(input_file_name)) with dynamic partition overwrite
-    scoped to the write — replaying a drop rewrites its own partition
+    Replay-safe by drop-id partition overwrite (protocol 1 of the
+    module docstring): replaying a drop rewrites its own partition
     instead of double-counting.  Counts are ADDITIVE across drops, so
-    the consumer re-aggregates over drops before ranking.  Returns
-    the StreamingQuery."""
+    the consumer re-aggregates over drops before ranking.  Returns the
+    StreamingQuery."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         counts = (
             batch.where(F.col("ts").isNotNull())
-            .withColumn("drop_id", F.xxhash64(F.input_file_name()))
+            .withColumn("drop_id", _drop_id())
             .groupBy(F.window("ts", window).alias("w"), "event_type", "drop_id")
             .agg(F.count("*").cast("bigint").alias("n_events"))
             .select(
@@ -605,20 +596,9 @@ def maintain_trending_counts(
                 "drop_id",
             )
         )
-        (
-            counts.repartition("drop_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("drop_id")
-            .parquet(counts_dir)
-        )
+        _overwrite_drops(counts, counts_dir)
 
-    return (
-        event_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_sink(event_stream, handle, checkpoint_dir)
 
 
 def read_trending_topk(

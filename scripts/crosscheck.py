@@ -8,9 +8,10 @@ Usage: python scripts/crosscheck.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -111,28 +112,9 @@ def check_freshness(query_keys: list[str]) -> list[str]:
     row at all: new queries) MUST sit inside the first 50 keys, or it
     silently rots (r12 lost 6 keys to exactly this: a 56-entry window
     cut at 50).  Returns the violating keys."""
-    import glob
-    import json
-    import re
-
-    latest: dict[str, int] = {}
-    rounds = []
-    for p in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for k in data:
-            latest[k] = max(latest.get(k, -1), rnd)
-    if not rounds:
+    latest, newest = E.correctness_rounds()
+    if newest is None:
         return []
-    newest = max(rounds)
     window = set(query_keys[:DRIVER_WINDOW])
     return [
         k

@@ -88,3 +88,17 @@ def test_no_cartesian_product_in_plan(spark, sf_dir, name):
         f"{name} plans a CartesianProduct — broadcast the scalar side "
         "or rewrite as an equi-join on a derived key"
     )
+
+
+def test_bare_crosscheck_passes_freshness_gate():
+    """queries() key order comes from the CORRECTNESS_r*.json rounds
+    (stalest first), so a crosscheck run with no query names
+    never stops at its freshness gate.  Spark-free."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(E.__file__).resolve().parent / "scripts" / "crosscheck.py"
+    spec = importlib.util.spec_from_file_location("crosscheck", path)
+    crosscheck = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(crosscheck)
+    assert crosscheck.check_freshness(list(E.queries())) == []

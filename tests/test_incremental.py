@@ -58,3 +58,29 @@ def test_stream_fact_into_matches_batch(spark, sf_dir, tmp_path):
         got.agg(F.sum("transaction_count")).collect()[0][0]
         == want.agg(F.sum("transaction_count")).collect()[0][0]
     )
+
+
+def test_append_increment_leaves_session_conf_alone(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Dynamic partition overwrite must be scoped to the write (a
+    DataFrameWriter option): setting it on the shared session conf
+    leaks dynamic-overwrite semantics to concurrent queries.
+    ``spark.conf`` is cached on the session, so patching its ``set``
+    sees every call made through it."""
+    calls = []
+    real_set = spark.conf.set
+
+    def recording_set(key, value):
+        calls.append((key, value))
+        real_set(key, value)
+
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    fact_dir = str(tmp_path / "fact")
+    full = WH.fact_spending(spark, sf_dir)
+    inc = fact_increment(spark, sf_dir, WATERMARK)
+    append_increment(full.where(F.col("date_key") <= WATERMARK), fact_dir)
+    append_increment(inc, fact_dir)
+    append_increment(inc, fact_dir)  # replay
+    assert calls == []
+    assert spark.read.parquet(fact_dir).count() == full.count()
