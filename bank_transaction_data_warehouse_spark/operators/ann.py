@@ -1,19 +1,42 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-duplicate pairs over embedding columns
+(array<float>).  Every function here follows one of two skeletons.
 
-brute_force_topk — exact cosine top-k: the correctness baseline.  One
-pass over the corpus per query batch; with the query side broadcast,
-the corpus never shuffles and the per-partition top-k is combined via
-the window rank (Catalyst pushes the rank filter into a partial
-top-k).  Fine up to ~10^7 corpus x small query batches.
+Search: candidates -> score -> per-query top-k, the IVFADC shape of
+Jegou, Douze & Schmid, "Product Quantization for Nearest Neighbor
+Search" (TPAMI 2011).  The small query side is broadcast onto the
+corpus and `per_query_topk` keeps the k best per query_id (Catalyst
+turns its rank filter into a partial top-k).  `_cosine_topk` is the
+one cosine body; the searchers differ only in the candidate join:
+  - brute_force_topk: cross join.  Exact; the correctness baseline,
+    fine up to ~10^7 corpus x small query batches.
+  - lsh_topk: equi-join on the sign-LSH bucket.  At 100 TB the corpus
+    is written partitioned by bucket, so a query reads one partition;
+    fewer n_planes -> bigger buckets -> higher recall.
+  - ivf_topk: equi-join on the probed IVF centroid (ivf_assign /
+    ivf_probe).  At 100 TB the corpus is written partitioned by
+    centroid_id, so a query reads nprobe partitions.
+plans/corpus.ann_pq_topk and ann_ivf_pq_topk are the same skeleton
+with an ADC score (product-quantized distance tables).
 
-lsh_topk — random-hyperplane (sign) LSH: the 100 TB path.  Vectors
-hash to a small bucket code; only same-bucket candidates are scored.
-Planes are deterministic (sin-based pseudo-noise), so results are
-reproducible without a stored model.  Recall is tuned by n_planes
-(fewer planes → bigger buckets → higher recall, more compute).
+Pairs: one normed-vector frame -> candidates -> one cosine verify.
+`_normed` drops zero-norm vectors and computes each norm ONCE, before
+any join; `_cosine_verify` scores dot / (na * nb) on candidates only.
+The candidate step has three shapes:
+  - embedding_near_dups: cross join, id_1 < id_2.  O(n^2): the recall
+    oracle, not a scale path.
+  - embedding_near_dups_lsh: probe ⋈ code.  Each bucket code and its
+    1-bit flips probe the code column; the 100 TB path.
+  - blocked_self_pairs: block ⋈ block.  A same-key pair set split into
+    shard-pair blocks so a hot key spreads over many tasks;
+    plans/corpus.semantic_dedup verifies these pairs with the Arrow
+    kernel (functions/vectors.cosine_score_pairs).
+Probes meet codes and blocks meet blocks, so neither join is the
+same-key equi-join of operators/dedup._keyed_self_join.
 
-embedding_near_dups — cosine >= threshold pairs, the embedding twin of
-document near-dup detection.
+Sign-LSH planes are deterministic (sin-based pseudo-noise), so codes
+reproduce without a stored model.  `_lsh_code` is the one code step,
+for both lsh_topk sides and embedding_near_dups_lsh, and it carries
+the vector-length check.
 """
 
 from __future__ import annotations
@@ -58,6 +81,44 @@ def _nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
     return df.where(ss > 0)
 
 
+def _nz_vectors(df: DataFrame, vec_col: str, id_col: str, id_name: str,
+             vec_name: str, *extra) -> DataFrame:
+    """Non-zero vectors as (id_name, vec_name as array<double>, *extra)."""
+    return _nonzero_norm(df, vec_col).select(
+        F.col(id_col).alias(id_name), _as_double(F.col(vec_col)).alias(vec_name),
+        *extra,
+    )
+
+
+def per_query_topk(scored: DataFrame, k: int, order: list) -> DataFrame:
+    """The search skeleton's one top-k: `rank` (an int) is the
+    row_number over query_id ordered by `order`, kept at <= k.  Callers
+    end `order` with a neighbor id, so ties rank deterministically."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_topk(
+    c: DataFrame, q: DataFrame, k: int, on: str | None = None
+) -> DataFrame:
+    """The search skeleton's cosine body: broadcast the query side
+    (query_id, qv) onto the corpus side (neighbor_id, cv) — a cross
+    join, or an equi-join ``on`` a bucket / centroid column — drop
+    self matches, score exact cosine, keep the per-query top-k.  The
+    cross join stays a crossJoin, so its join type stays Cross."""
+    q = F.broadcast(q)
+    scored = (
+        (c.crossJoin(q) if on is None else c.join(q, on))
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", cosine_similarity(F.col("qv"), F.col("cv")))
+    )
+    return per_query_topk(
+        scored, k, [F.col("cosine").desc(), F.col("neighbor_id")]
+    ).select("query_id", "neighbor_id", "cosine", "rank")
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -65,27 +126,12 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact cosine top-k of `corpus` for each row in `queries`.
-    Query side is broadcast; ties broken by neighbor id for
-    deterministic output."""
-    q = _nonzero_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    c = _nonzero_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_similarity(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    """Exact cosine top-k of `corpus` for each row in `queries`:
+    every (query, corpus) pair is a candidate."""
+    return _cosine_topk(
+        _nz_vectors(corpus, vec_col, id_col, "neighbor_id", "cv"),
+        _nz_vectors(queries, vec_col, id_col, "query_id", "qv"),
+        k,
     )
 
 
@@ -115,6 +161,29 @@ def lsh_bucket(vec_col, planes: list[list[float]]):
     return code
 
 
+def _lsh_code(vec_col: str, dim: int, n_planes: int):
+    """The one sign-LSH code step: lsh_bucket over the ``dim``-wide
+    planes, checked per row.  A vector of another length would make
+    zip_with null-pad and hash to bucket 0 — every pair a candidate,
+    garbage recall — so the expression raises at run time instead.
+    Lazy: every row on every side is checked, at no extra job.  The
+    coalesce keeps the code non-nullable, so joins on it infer no
+    extra not-null filter."""
+    v = F.col(vec_col)
+    check = F.when(
+        F.size(v) != dim,
+        F.raise_error(
+            F.concat(
+                F.lit(f"dim={dim} does not match vector length "),
+                F.size(v).cast("string"),
+                F.lit(": zip_with would null-pad and silently hash every"
+                      " vector to bucket 0"),
+            )
+        ),
+    )
+    return F.coalesce(check, lsh_bucket(v, _hyperplanes(dim, n_planes)))
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -125,42 +194,51 @@ def lsh_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing the query's
-    hyperplane sign bucket.  At 100 TB the corpus is written
-    partitioned by bucket, so a query touches one partition."""
-    # One-row .first() guard, deliberately eager: a dim mismatch makes
-    # zip_with null-pad and silently hash EVERY vector to bucket 0
-    # (all-pairs blow-up + garbage recall), so failing fast here is
-    # worth a single-row scan; cost is O(1) rows at any corpus size.
-    actual = corpus.select(F.size(vec_col).alias("d")).first()
-    if actual is not None and actual.d != dim:
-        raise ValueError(
-            f"dim={dim} does not match vector length {actual.d}: zip_with "
-            "would null-pad and silently hash every vector to bucket 0"
-        )
-    planes = _hyperplanes(dim, n_planes)
-    corpus, queries = _nonzero_norm(corpus, vec_col), _nonzero_norm(queries, vec_col)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+    hyperplane sign bucket.  A vector whose length is not ``dim``
+    raises (see _lsh_code) when the frame is evaluated, not here."""
+    code = _lsh_code(vec_col, dim, n_planes).alias("bucket")
+    return _cosine_topk(
+        _nz_vectors(corpus, vec_col, id_col, "neighbor_id", "cv", code),
+        _nz_vectors(queries, vec_col, id_col, "query_id", "qv", code),
+        k,
+        on="bucket",
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+
+
+def _normed(corpus: DataFrame, vec_col: str, id_col: str, *extra) -> DataFrame:
+    """The pair skeleton's one vector frame: non-zero vectors as
+    (_id, _v as array<double>, *extra, _norm).  Norms are computed
+    once per VECTOR, not per pair: bit-identical cosine (same fold,
+    same order) at a third of the per-pair work, measured 21.7 s ->
+    7.4 s for embedding_dedup at sf0.1.  (Unrolling the dot statically
+    is a regression here — see the NOTE in functions/vectors.py.)"""
+    return _nz_vectors(corpus, vec_col, id_col, "_id", "_v", *extra).withColumn(
+        "_norm", vectors.l2_norm(F.col("_v"))
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_similarity(F.col("qv"), F.col("cv")))
+
+
+def _pair_side(normed: DataFrame, i: int, *extra) -> DataFrame:
+    """Side i (1 or 2) of a candidate pair: vec_id_i plus the vector
+    and norm as va / na (side 1) or vb / nb (side 2)."""
+    s = "ab"[i - 1]
+    return normed.select(
+        F.col("_id").alias(f"vec_id_{i}"),
+        F.col("_v").alias(f"v{s}"),
+        F.col("_norm").alias(f"n{s}"),
+        *extra,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
+
+
+def _cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The pair skeleton's one verify: exact cosine dot / (na * nb) on
+    the candidates only, kept at >= threshold."""
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        pairs.withColumn(
+            "cosine",
+            vectors.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
+        )
+        .where(F.col("cosine") >= threshold)
+        .select("vec_id_1", "vec_id_2", "cosine")
     )
 
 
@@ -173,30 +251,13 @@ def embedding_near_dups(
     """Vector near-duplicate pairs: cosine >= threshold, id1 < id2.
     Brute-force all-pairs — O(n^2): the correctness/recall oracle for
     `embedding_near_dups_lsh`, NOT a scale path.  The exposed
-    `embedding_dedup` query uses the LSH-bucketed variant.
-    Norms are precomputed per VECTOR, not per pair — bit-identical
-    cosine (same fold, same order) at a third of the per-pair work."""
-    corpus = _nonzero_norm(corpus, vec_col)
-    coded = corpus.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).select("_id", "_v", vectors.l2_norm(F.col("_v")).alias("_norm"))
-    a = coded.select(
-        F.col("_id").alias("vec_id_1"),
-        F.col("_v").alias("va"),
-        F.col("_norm").alias("na"),
-    )
-    b = coded.select(
-        F.col("_id").alias("vec_id_2"),
-        F.col("_v").alias("vb"),
-        F.col("_norm").alias("nb"),
-    )
-    dot_ab = vectors.dot(F.col("va"), F.col("vb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("vec_id_1") < F.col("vec_id_2"))
-        .withColumn("cosine", dot_ab / (F.col("na") * F.col("nb")))
-        .where(F.col("cosine") >= threshold)
-        .select("vec_id_1", "vec_id_2", "cosine")
+    `embedding_dedup` query uses the LSH-bucketed variant."""
+    normed = _normed(corpus, vec_col, id_col)
+    return _cosine_verify(
+        _pair_side(normed, 1)
+        .crossJoin(_pair_side(normed, 2))
+        .where(F.col("vec_id_1") < F.col("vec_id_2")),
+        threshold,
     )
 
 
@@ -223,65 +284,72 @@ def embedding_near_dups_lsh(
 
     Hot buckets (clustered corpora): decompose the skewed bucket's
     pair set with `blocked_self_pairs` — same pairs, parallelism
-    ~shards²/2 per hot key.
+    ~shards²/2 per hot key.  A vector whose length is not ``dim``
+    raises (see _lsh_code) when the frame is evaluated, not here.
     """
     if multiprobe_bits not in (0, 1):
         raise ValueError("multiprobe_bits must be 0 or 1")
-    corpus = _nonzero_norm(corpus, vec_col)
-    planes = _hyperplanes(dim, n_planes)
-    # Norms are computed once per VECTOR (pre-join) — 3 folds per pair
-    # become 1, bit-identical cosine (same fold, same order), measured
-    # 21.7s -> 7.4s at sf0.1.  (Unrolling the dot statically is a
-    # regression here — see the NOTE in functions/vectors.py.)
-    coded = corpus.select(
-        F.col(id_col).alias("_id"),
-        _as_double(F.col(vec_col)).alias("_v"),
-        lsh_bucket(F.col(vec_col), planes).alias("code"),
-    ).select(
-        "_id", "_v", "code", vectors.l2_norm(F.col("_v")).alias("_norm")
+    normed = _normed(
+        corpus, vec_col, id_col, _lsh_code(vec_col, dim, n_planes).alias("code")
     ).persist()
-    # persisted: the probe side and the build side BOTH consume coded,
+    # persisted: the probe side and the build side BOTH consume normed,
     # and their differing projections defeat ReuseExchange — without
     # this the plane-hash + norm pipeline runs twice (two-consumer
     # invariant; measured 0.93 s -> 0.73 s at sf0.1)
     flips = [0] + (
         [1 << p for p in range(n_planes)] if multiprobe_bits else []
     )
-    # Pre-expansion repartition (same reasoning as ngram_jaccard's):
-    # the corpus parquet is a handful of input splits, the join is
-    # broadcast (no shuffle), so without this the quadratic candidate
-    # scoring runs on the scan's partition count — one task at test
-    # scale.  Spread the probe side across the shuffle width first.
+    # Pre-expansion repartition, for the reason dedup._keyed_self_join
+    # gives: the corpus parquet is a handful of input splits and the
+    # join is broadcast (no shuffle), so without this the quadratic
+    # candidate scoring runs on the scan's partition count — one task
+    # at test scale.  Spread the probe side across the shuffle width.
     nparts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    probes = coded.repartition(nparts, "_id").select(
-        F.col("_id").alias("vec_id_1"),
-        F.col("_v").alias("va"),
-        F.col("_norm").alias("na"),
+    probes = _pair_side(
+        normed.repartition(nparts, "_id"),
+        1,
         F.explode(
             F.array(*[F.col("code").bitwiseXOR(F.lit(f)) for f in flips])
         ).alias("probe"),
     )
-    right = coded.select(
-        F.col("_id").alias("vec_id_2"),
-        F.col("_v").alias("vb"),
-        F.col("_norm").alias("nb"),
-        F.col("code"),
-    )
+    right = _pair_side(normed, 2, "code")
     # Hamming-0 pairs match only via the ^0 probe, Hamming-1 pairs only
     # via the one flipped bit, and vec_id_1 < vec_id_2 keeps a single
     # orientation — each candidate pair appears exactly once.
-    return (
+    return _cosine_verify(
         probes.join(
             right,
             (probes.probe == right.code) & (probes.vec_id_1 < right.vec_id_2),
-        )
-        .withColumn(
-            "cosine",
-            vectors.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("vec_id_1", "vec_id_2", "cosine")
+        ),
+        threshold,
     )
+
+
+def _nearest_centroid(vec_col: str, centroids: list):
+    """IVF coarse quantization as one expression: the id of the
+    highest-dot centroid.  Ties go to the SMALLEST cid, which is the
+    first listed when centroids are sorted by cid (ivf_topk's callers
+    sort them)."""
+    if not centroids:
+        raise ValueError(
+            "ivf_assign needs at least one centroid: an IVF index over "
+            "an empty coarse quantizer is undefined (build centroids "
+            "first, e.g. plans/corpus.label_centroids)"
+        )
+    # argmax via one array_sort over (negated score, cid) structs, so
+    # each centroid's dot fold appears in the plan exactly once (a
+    # when/otherwise chain repeats earlier scores: exponential
+    # expression blow-up, ~12 s of analysis + codegen at k=10).  The
+    # array is rendered as SQL text and parsed by one F.expr: the
+    # k x dim literal trees through the Column API cost hundreds of
+    # py4j round trips per build (as operators/kmeans.assign_clusters).
+    v_sql = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
+    entries = ", ".join(
+        f"named_struct('negs', -({_dot_lit_sql(v_sql, cvec)}),"
+        f" 'cid', CAST({int(cid)} AS INT))"
+        for cid, cvec in centroids
+    )
+    return F.expr(f"element_at(array_sort(array({entries})), 1).cid").cast("int")
 
 
 def ivf_assign(vectors: DataFrame, centroids: list, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -289,36 +357,9 @@ def ivf_assign(vectors: DataFrame, centroids: list, id_col: str = "vec_id", vec_
     quantization).  `centroids` is a small python list of (cid, vec) —
     it ships inside the plan as literals, so assignment is a pure map
     over the corpus: no shuffle, no join."""
-    if not centroids:
-        raise ValueError(
-            "ivf_assign needs at least one centroid: an IVF index over "
-            "an empty coarse quantizer is undefined (build centroids "
-            "first, e.g. plans/corpus.label_centroids)"
-        )
-    # argmax via one array_sort over (negated score, cid) structs: each
-    # centroid's dot fold appears in the plan EXACTLY ONCE.  The
-    # previous strictly-greater when/otherwise chain embedded all
-    # earlier score subtrees twice per step — exponential expression
-    # blow-up that cost ~12s of analysis+codegen per cold run at k=10.
-    # Tie rule: max score, then SMALLEST cid (ascending sort on
-    # (-score, cid)).  NOTE: the old when/otherwise chain broke ties
-    # by FIRST-in-list-order; the two rules coincide only when callers
-    # pass centroids sorted ascending by cid (ivf_topk does — its
-    # centroids come from label_centroids ordered by label).  Callers
-    # with unsorted centroid lists get smallest-cid, not first-listed.
-    # The whole candidate array is rendered as SQL TEXT and parsed by
-    # one F.expr — the k x dim literal trees through the Column API
-    # cost hundreds of py4j round trips per build (same technique as
-    # operators/kmeans.assign_clusters / the minhash family).
-    v_sql = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-    entries = ", ".join(
-        f"named_struct('negs', -({_dot_lit_sql(v_sql, cvec)}),"
-        f" 'cid', CAST({int(cid)} AS INT))"
-        for cid, cvec in centroids
-    )
-    best_cid = F.expr(f"element_at(array_sort(array({entries})), 1).cid")
     return vectors.select(
-        F.col(id_col), F.col(vec_col), best_cid.cast("int").alias("centroid_id")
+        F.col(id_col), F.col(vec_col),
+        _nearest_centroid(vec_col, centroids).alias("centroid_id"),
     )
 
 
@@ -340,9 +381,7 @@ def ivf_probe(
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
-    # one parsed SQL expression instead of a per-centroid Column loop
-    # (see ivf_assign); concat(array(e1), array(e2), ...) and
-    # array(e1, e2, ...) are value-identical
+    # one parsed SQL expression, as in _nearest_centroid
     entries = ", ".join(
         f"named_struct('s', {_dot_lit_sql('qv', cvec)},"
         f" 'cid', CAST({int(cid)} AS INT))"
@@ -367,24 +406,18 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: corpus is bucketed by nearest centroid;
     each query scores only the vectors in its `nprobe` closest
-    centroid buckets.  At 100 TB the corpus is WRITTEN partitioned by
-    centroid_id, so a query touches nprobe partitions — the classic
-    inverted-file layout expressed as partition pruning."""
-    corpus, queries = _nonzero_norm(corpus, vec_col), _nonzero_norm(queries, vec_col)
-    c = ivf_assign(corpus, centroids, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).withColumnRenamed(vec_col, "cv")
-    q = ivf_probe(queries, centroids, nprobe, vec_col, id_col)
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_similarity(F.col("qv"), _as_double(F.col("cv"))))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    centroid buckets — the classic inverted-file layout expressed as
+    partition pruning."""
+    return _cosine_topk(
+        _nz_vectors(
+            corpus, vec_col, id_col, "neighbor_id", "cv",
+            _nearest_centroid(vec_col, centroids).alias("centroid_id"),
+        ),
+        ivf_probe(
+            _nonzero_norm(queries, vec_col), centroids, nprobe, vec_col, id_col
+        ),
+        k,
+        on="centroid_id",
     )
 
 

@@ -3,12 +3,14 @@ clusters.  Pairwise dedup (ngram_jaccard / minhash_lsh / simhash)
 yields EDGES; a training pipeline needs GROUPS (keep one doc per
 component).
 
-Algorithm: iterative min-label propagation (the standard large-graph
-approach — alternating small-star/large-star contraction simplified to
-undirected label diffusion).  Each round is one groupBy-shuffle on
-node id; rounds needed = O(log(diameter)); dedup graphs are
-near-cliques, so 2-3 rounds in practice.  The driver loop only checks
-a convergence count per round — no graph data ever reaches the driver.
+Algorithm: iterative min-label propagation — one-hop undirected label
+diffusion.  Each round is one groupBy-shuffle on node id, and a label
+travels one hop per round, so rounds needed = O(diameter): dedup
+graphs are near-cliques (2-3 rounds in practice), but a 60-node path
+exceeds the default max_iter=50 and raises.  Alternating
+large-star/small-star contraction (Kiveris et al., SoCC 2014) needs
+O(log^2 n) rounds, about log n in practice, and is the open fix.  The driver loop only checks a
+convergence count per round — no graph data ever reaches the driver.
 """
 
 from __future__ import annotations

@@ -419,13 +419,17 @@ ORACLE["dedup_simhash"] = _simhash_oracle_sql()
 
 
 # ------------------------------------------------------- similarity
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    embs = _embs_wide(spark, sf_dir)
-    queries = embs.where(F.col("vec_id") < 10)
-    return ANN.brute_force_topk(embs, queries, k=5)
+# The DuckDB twins of operators/ann.py's two skeletons, one helper per
+# repeated fragment: _nz_sql (the zero-norm filter), _topk_sql (the
+# per-query top-k), _cosine_topk_sql (candidates -> cosine -> top-k),
+# _lsh_ctes (sign-LSH codes, probes and verified pairs), _ivf_ctes
+# (IVF assign / probe) and, with the PQ queries, _pq_scored_cte (ADC).
+def _nz_sql(col: str = "embedding") -> str:
+    """Twin of ANN._nonzero_norm: sum of squares > 0."""
+    return f"list_sum(list_transform({col}, x -> CAST(x AS DOUBLE) * x)) > 0"
 
 
-QUERIES["ann_cosine_topk"] = ann_cosine_topk
+_NZ_CTE = f"nz AS (SELECT * FROM embeddings WHERE {_nz_sql()})"
 
 _COS = (
     "list_sum(list_transform(list_zip(q.embedding, c.embedding),"
@@ -433,21 +437,45 @@ _COS = (
     " / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * x)))"
     " * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * x))))"
 )
+_COSAB = _COS.replace("q.embedding", "a.embedding").replace("c.embedding", "b.embedding")
 
-ORACLE["ann_cosine_topk"] = f"""
-WITH nz AS (SELECT * FROM embeddings WHERE list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {_COS} AS cosine
-  FROM nz q JOIN nz c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10
+
+def _topk_sql(cols: str, src: str, order: str, k: int) -> str:
+    """Twin of ANN.per_query_topk: the k best rows of `src` per
+    query_id by `order`, ranked in rn."""
+    return (
+        f"SELECT {cols} FROM (\n"
+        "  SELECT *, row_number() OVER (PARTITION BY query_id\n"
+        f"                               ORDER BY {order}) AS rn\n"
+        f"  FROM {src}\n) WHERE rn <= {k}"
+    )
+
+
+def _cosine_topk_sql(ctes: list, cand_from: str) -> str:
+    """Twin of ANN._cosine_topk at k=5: `cand_from` joins a corpus side
+    c (vec_id, embedding) to a query side q (query_id, embedding) with
+    self matches excluded; exact cosine, then the per-query top-k."""
+    cand = (
+        f"cand AS (\n  SELECT q.query_id, c.vec_id AS neighbor_id,"
+        f" {_COS} AS cosine\n  FROM {cand_from}\n)"
+    )
+    return "WITH " + ",\n".join([*ctes, cand]) + "\n" + _topk_sql(
+        "query_id, neighbor_id, cosine, CAST(rn AS INTEGER) AS rank",
+        "cand", "cosine DESC, neighbor_id", 5,
+    )
+
+
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    embs = _embs_wide(spark, sf_dir)
+    queries = embs.where(F.col("vec_id") < 10)
+    return ANN.brute_force_topk(embs, queries, k=5)
+
+
+QUERIES["ann_cosine_topk"] = ann_cosine_topk
+ORACLE["ann_cosine_topk"] = _cosine_topk_sql(
+    [_NZ_CTE, "q AS (SELECT vec_id AS query_id, embedding FROM nz WHERE vec_id < 10)"],
+    "nz c JOIN q ON q.query_id != c.vec_id",
 )
-SELECT query_id, neighbor_id, cosine, CAST(rn AS INTEGER) AS rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM scored
-) WHERE rn <= 5
-"""
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,8 +485,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["ann_lsh_topk"] = ann_lsh_topk
-# oracle added r11: the sign-LSH bucketing is mirrorable in ANSI SQL
-# (same deterministic planes via _lsh_code_sql) — was rows-only in r10
 
 
 def embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,8 +500,6 @@ def embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["embedding_dedup"] = embedding_dedup
-
-_COSAB = _COS.replace("q.embedding", "a.embedding").replace("c.embedding", "b.embedding")
 
 
 def _lsh_code_sql(n_planes: int = 4, dim: int = 64) -> str:
@@ -494,37 +518,44 @@ def _lsh_code_sql(n_planes: int = 4, dim: int = 64) -> str:
 
 
 _LSH_FLIPS = ", ".join(str(f) for f in [0] + [1 << p for p in range(4)])
-ORACLE["embedding_dedup"] = f"""
-WITH nz AS (SELECT * FROM embeddings WHERE list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0),
-coded AS (
-  SELECT vec_id, embedding, ({_lsh_code_sql()}) AS code FROM nz
-),
+
+
+def _lsh_ctes(src: str, pairs: bool = False) -> str:
+    """Twin of ANN._lsh_code over `src` (vec_id, embedding): `coded`.
+    With ``pairs``, also the embedding_near_dups_lsh path at the 0.45
+    threshold: `probes` (each code and its 1-bit flips) and
+    `lsh_pairs` (probe ⋈ code, id_1 < id_2, verified cosine)."""
+    ctes = (
+        f"coded AS (\n  SELECT vec_id, embedding, ({_lsh_code_sql()}) AS code"
+        f" FROM {src}\n)"
+    )
+    if not pairs:
+        return ctes
+    return ctes + f""",
 probes AS (
   SELECT vec_id, embedding, xor(code, f) AS probe
   FROM coded, unnest([{_LSH_FLIPS}]) AS t(f)
-)
-SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2, {_COSAB} AS cosine
-FROM probes a JOIN coded b ON a.probe = b.code AND a.vec_id < b.vec_id
-WHERE ({_COSAB}) >= 0.45
-"""
-
-
-ORACLE["ann_lsh_topk"] = f"""
-WITH nz AS (SELECT * FROM embeddings WHERE list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0),
-coded AS (
-  SELECT vec_id, embedding, ({_lsh_code_sql()}) AS code FROM nz
 ),
-q AS (SELECT vec_id AS query_id, embedding, code FROM coded WHERE vec_id < 10),
-cand AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_COS} AS cosine
-  FROM coded c JOIN q ON c.code = q.code AND q.query_id != c.vec_id
-)
-SELECT query_id, neighbor_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM cand
-) WHERE rn <= 5
+lsh_pairs AS (
+  SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2, {_COSAB} AS cosine
+  FROM probes a JOIN coded b ON a.probe = b.code AND a.vec_id < b.vec_id
+  WHERE ({_COSAB}) >= 0.45
+)"""
+
+
+ORACLE["embedding_dedup"] = f"""
+WITH {_NZ_CTE},
+{_lsh_ctes("nz", pairs=True)}
+SELECT vec_id_1, vec_id_2, cosine FROM lsh_pairs
 """
+ORACLE["ann_lsh_topk"] = _cosine_topk_sql(
+    [
+        _NZ_CTE,
+        _lsh_ctes("nz"),
+        "q AS (SELECT vec_id AS query_id, embedding, code FROM coded WHERE vec_id < 10)",
+    ],
+    "coded c JOIN q ON c.code = q.code AND q.query_id != c.vec_id",
+)
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,26 +588,15 @@ QUERIES["ann_recall_report"] = ann_recall_report
 
 ORACLE["ann_recall_report"] = f"""
 WITH sample AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500
-    AND list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0
+  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500 AND {_nz_sql()}
 ),
 exact AS (
   SELECT count(*) AS n_exact_pairs
   FROM sample a JOIN sample b ON a.vec_id < b.vec_id
   WHERE ({_COSAB}) >= 0.45
 ),
-coded AS (
-  SELECT vec_id, embedding, ({_lsh_code_sql()}) AS code FROM sample
-),
-probes AS (
-  SELECT vec_id, embedding, xor(code, f) AS probe
-  FROM coded, unnest([{_LSH_FLIPS}]) AS t(f)
-),
-lsh AS (
-  SELECT count(*) AS n_lsh_pairs
-  FROM probes a JOIN coded b ON a.probe = b.code AND a.vec_id < b.vec_id
-  WHERE ({_COSAB}) >= 0.45
-)
+{_lsh_ctes("sample", pairs=True)},
+lsh AS (SELECT count(*) AS n_lsh_pairs FROM lsh_pairs)
 SELECT n_exact_pairs, n_lsh_pairs,
        CASE WHEN n_exact_pairs > 0
             THEN CAST(n_lsh_pairs AS DOUBLE) / n_exact_pairs END AS recall
@@ -1089,14 +1109,9 @@ def _label_cents(spark, sf_dir) -> list:
 
 QUERIES["ann_ivf_topk"] = ann_ivf_topk
 
-# oracle added r11 (was rows-only in r10): the coarse quantizer is
-# ANSI-expressible — recompute the same 1e-6-rounded centroids
-# (label_centroids' oracle already proves they match bitwise), argmax
-# dot with the same tie rule (first max = smallest label), probe the
-# same nprobe=3 lists (Spark's reverse(array_sort) tie rule = larger
-# label first), then exact cosine + top-5 within probed lists.
-ORACLE["ann_ivf_topk"] = f"""
-WITH z AS (
+# the same 1e-6-rounded label centroids as label_centroids (whose
+# oracle proves they match bitwise); also centroid_classifier_eval's
+_LABEL_CENT_CTES = """z AS (
   SELECT label, unnest(list_zip(embedding, range(1, len(embedding)+1))) AS u
   FROM embeddings
 ),
@@ -1105,39 +1120,48 @@ per_dim AS (
          round(sum(CAST(u[1] AS DOUBLE)) / count(*) * 1000000) / 1000000.0 AS mean_v
   FROM z GROUP BY 1, 2
 ),
-cent AS (SELECT label, list(mean_v ORDER BY dim) AS centroid FROM per_dim GROUP BY label),
-nz AS (SELECT * FROM embeddings WHERE list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0),
-assign_scored AS (
-  SELECT e.vec_id, e.embedding, c.label,
+cent AS (SELECT label, list(mean_v ORDER BY dim) AS centroid FROM per_dim GROUP BY label)"""
+
+
+def _ivf_ctes(nprobe: int, materialized: bool = False) -> str:
+    """Twin of ANN.ivf_assign / ivf_probe over a `cent` (label,
+    centroid) CTE: `nz`, the dot scores, `assigned` (max dot, tie
+    smallest label) and `qprobe` (each query's nprobe best, tie larger
+    label first, as Spark's reverse(array_sort)).  Only ids travel
+    through these n x K rows: the vectors stay in `nz`.  ``materialized``
+    as in _km_ctes."""
+    M = "MATERIALIZED " if materialized else ""
+    return f"""nz AS {M}(SELECT * FROM embeddings WHERE {_nz_sql()}),
+assign_scored AS {M}(
+  SELECT e.vec_id, c.label,
          list_sum(list_transform(list_zip(e.embedding, c.centroid),
                                  p -> CAST(p[1] AS DOUBLE) * p[2])) AS s
   FROM nz e CROSS JOIN cent c
 ),
-assigned AS (
-  SELECT vec_id, embedding, label AS centroid_id FROM (
+assigned AS {M}(
+  SELECT vec_id, label AS centroid_id FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
                                  ORDER BY s DESC, label ASC) AS rn
     FROM assign_scored
   ) WHERE rn = 1
 ),
-qprobe AS (
-  SELECT vec_id AS query_id, embedding, label AS centroid_id FROM (
+qprobe AS {M}(
+  SELECT vec_id AS query_id, label AS centroid_id FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
                                  ORDER BY s DESC, label DESC) AS rn
     FROM assign_scored WHERE vec_id < 10
-  ) WHERE rn <= 3
-),
-cand AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_COS} AS cosine
-  FROM assigned c
-  JOIN qprobe q ON c.centroid_id = q.centroid_id AND q.query_id != c.vec_id
+  ) WHERE rn <= {nprobe}
+)"""
+
+
+_IVF_CAND = (
+    "assigned a JOIN nz c USING (vec_id) JOIN qprobe p USING (centroid_id)\n"
+    "  JOIN (SELECT vec_id AS query_id, embedding FROM nz) q USING (query_id)\n"
+    "  WHERE q.query_id != c.vec_id"
 )
-SELECT query_id, neighbor_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM cand
-) WHERE rn <= 5
-"""
+ORACLE["ann_ivf_topk"] = _cosine_topk_sql(
+    [_LABEL_CENT_CTES, _ivf_ctes(3)], _IVF_CAND
+)
 
 
 def pack_documents(spark: SparkSession, sf_dir: str, budget: int = 4096) -> DataFrame:
@@ -1881,47 +1905,16 @@ def _km_update_cents(spark, sf_dir, k, iters) -> list:
 QUERIES["ann_ivf_kmeans_topk"] = ann_ivf_kmeans_topk
 
 # the kmeans CTE chain (shared with kmeans_clusters) produces `fin`,
-# whose micro-rounded means ARE the trained codebook; the probe CTEs
-# mirror ann_ivf_topk's rules exactly (assign: max dot, smallest label;
-# probe: top-nprobe dot, larger label first on ties; exact cosine +
-# top-5 within probed lists).
-ORACLE["ann_ivf_kmeans_topk"] = f"""
-WITH {_KM_CTES.strip().strip(',')},
-cent AS (SELECT cid AS label, list(mean_v ORDER BY dim) AS centroid
-         FROM fin GROUP BY cid),
-nz AS (SELECT * FROM embeddings
-       WHERE list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)) > 0),
-assign_scored AS (
-  SELECT e.vec_id, e.embedding, c.label,
-         list_sum(list_transform(list_zip(e.embedding, c.centroid),
-                                 p -> CAST(p[1] AS DOUBLE) * p[2])) AS s
-  FROM nz e CROSS JOIN cent c
-),
-assigned AS (
-  SELECT vec_id, embedding, label AS centroid_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY s DESC, label ASC) AS rn
-    FROM assign_scored
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, embedding, label AS centroid_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY s DESC, label DESC) AS rn
-    FROM assign_scored WHERE vec_id < 10
-  ) WHERE rn <= 3
-),
-cand AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, {_COS} AS cosine
-  FROM assigned c
-  JOIN qprobe q ON c.centroid_id = q.centroid_id AND q.query_id != c.vec_id
+# whose micro-rounded means ARE the trained codebook; the IVF CTEs and
+# the cosine top-k are ann_ivf_topk's.
+_FIN_CENT = (
+    "cent AS {M}(SELECT cid AS label, list(mean_v ORDER BY dim) AS centroid"
+    " FROM fin GROUP BY cid)"
 )
-SELECT query_id, neighbor_id, cosine, CAST(rn AS INTEGER) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM cand
-) WHERE rn <= 5
-"""
+ORACLE["ann_ivf_kmeans_topk"] = _cosine_topk_sql(
+    [_KM_CTES.strip().strip(","), _FIN_CENT.format(M=""), _ivf_ctes(3)],
+    _IVF_CAND,
+)
 
 
 def frame_sample(
@@ -2013,17 +2006,8 @@ def centroid_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["centroid_classifier_eval"] = centroid_classifier_eval
-ORACLE["centroid_classifier_eval"] = """
-WITH z AS (
-  SELECT label, unnest(list_zip(embedding, range(1, len(embedding)+1))) AS u
-  FROM embeddings
-),
-per_dim AS (
-  SELECT label, CAST(u[2] AS INTEGER) - 1 AS dim,
-         round(sum(CAST(u[1] AS DOUBLE)) / count(*) * 1000000) / 1000000.0 AS mean_v
-  FROM z GROUP BY 1, 2
-),
-cent AS (SELECT label, list(mean_v ORDER BY dim) AS centroid FROM per_dim GROUP BY label),
+ORACLE["centroid_classifier_eval"] = f"""
+WITH {_LABEL_CENT_CTES},
 scored AS (
   SELECT e.vec_id, e.label AS true_label, c.label AS pred,
          list_sum(list_transform(list_zip(e.embedding, c.centroid),
@@ -2292,17 +2276,19 @@ QUERIES["semantic_dedup"] = semantic_dedup
 # replay the SAME trained codebook: the kmeans CTE chain's final
 # assignment a{iters} (micro-rounded means each round => bit-identical
 # centroid literals on both engines), then exact within-cluster cosine
-ORACLE["semantic_dedup"] = f"""
-WITH {_KM_CTES.strip().strip(',')},
+_SD_CTES = f"""{_KM_CTES.strip().strip(',')},
 nzv AS (
   SELECT a.vec_id, a.cid, e.embedding
   FROM a{_KM_ITERS} a JOIN embeddings e USING (vec_id)
-  WHERE list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x)) > 0
-)
+  WHERE {_nz_sql("e.embedding")}
+)"""
+_SD_PAIRS = f"""FROM nzv a JOIN nzv b ON a.cid = b.cid AND a.vec_id < b.vec_id
+WHERE ({_COSAB}) >= {_SD_THRESHOLD}"""
+ORACLE["semantic_dedup"] = f"""
+WITH {_SD_CTES}
 SELECT a.vec_id AS vec_id_1, b.vec_id AS vec_id_2,
        CAST(a.cid AS INTEGER) AS cid, {_COSAB} AS cosine
-FROM nzv a JOIN nzv b ON a.cid = b.cid AND a.vec_id < b.vec_id
-WHERE ({_COSAB}) >= {_SD_THRESHOLD}
+{_SD_PAIRS}
 """
 
 
@@ -2398,9 +2384,11 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-group per component — the groups a curation pipeline actually
     consumes (keep canonical, drop the rest).  Same iterative
     min-label propagation as the text-side dedup_clusters
-    (operators/components.py: O(log diameter) bounded rounds, no graph
-    data on the driver); members serialized at the query boundary
-    (driver canonicalizer cannot sort list cells)."""
+    (operators/components.py: O(diameter) rounds, raising past
+    max_iter; no graph data on the driver; large-star/small-star
+    contraction, about log n rounds, is still open); members
+    serialized at the query boundary (driver canonicalizer cannot sort
+    list cells)."""
     from bank_transaction_data_warehouse_spark.operators.components import (
         connected_components,
     )
@@ -2428,16 +2416,10 @@ QUERIES["semantic_dedup_clusters"] = semantic_dedup_clusters
 # the semantic pair CTEs (same trained codebook) + the recursive-CTE
 # transitive closure the text-side dedup_clusters oracle uses
 ORACLE["semantic_dedup_clusters"] = f"""
-WITH RECURSIVE {_KM_CTES.strip().strip(',')},
-nzv AS (
-  SELECT a.vec_id, a.cid, e.embedding
-  FROM a{_KM_ITERS} a JOIN embeddings e USING (vec_id)
-  WHERE list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x)) > 0
-),
+WITH RECURSIVE {_SD_CTES},
 sp AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM nzv a JOIN nzv b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE ({_COSAB}) >= {_SD_THRESHOLD}
+  {_SD_PAIRS}
 ),
 e2 AS (
   SELECT id_a AS a2, id_b AS b2 FROM sp
@@ -3083,12 +3065,20 @@ def _pq_dist_sql(s: int, cent: list) -> str:
     )
 
 
-def _pq_code_sql(models: list, s: int) -> str:
-    structs = ", ".join(
-        f"named_struct('dm', {_pq_dist_sql(s, c)}, 'cid', {int(cid)})"
-        for cid, c in models[s]
-    )
-    return f"array_sort(array({structs}))[0].cid"
+def _pq_codes(models: list) -> list:
+    """The m PQ code columns _c0.._c{m-1}: each vector's nearest
+    centroid per subspace."""
+    return [
+        F.expr(
+            "array_sort(array("
+            + ", ".join(
+                f"named_struct('dm', {_pq_dist_sql(s, c)}, 'cid', {int(cid)})"
+                for cid, c in models[s]
+            )
+            + "))[0].cid"
+        ).alias(f"_c{s}")
+        for s in range(_PQ_M)
+    ]
 
 
 def _pq_query_table(models: list, qv: DataFrame, s: int) -> DataFrame:
@@ -3102,6 +3092,32 @@ def _pq_query_table(models: list, qv: DataFrame, s: int) -> DataFrame:
         F.col("vec_id").alias(f"qid{s}"),
         F.explode(F.expr(f"array({entries})")).alias("e"),
     ).select(f"qid{s}", f"e.cid{s}", f"e.d{s}")
+
+
+def _adc_topk(
+    cands: DataFrame, models: list, qv: DataFrame, topk: int,
+    qid: str | None = None,
+) -> DataFrame:
+    """The search skeleton with an ADC score: join the candidates'
+    codes to the m broadcast per-query distance tables, sum the
+    distances (adist), drop self matches, keep the per-query top-k.
+    ``qid``: the candidates' query-id column — None when every corpus
+    row is a candidate, and the first table's qid0 becomes it."""
+    for s in range(_PQ_M):
+        cond = F.col(f"_c{s}") == F.col(f"cid{s}")
+        if qid:
+            cond = cond & (F.col(qid) == F.col(f"qid{s}"))
+        cands = cands.join(F.broadcast(_pq_query_table(models, qv, s)), cond)
+        qid = qid or "qid0"
+    adist = sum(F.col(f"d{s}") for s in range(1, _PQ_M)) + F.col("d0")
+    scored = cands.where(F.col("vec_id") != F.col(qid)).select(
+        F.col(qid).alias("query_id"),
+        "vec_id",
+        adist.cast("bigint").alias("approx_dist_micros"),
+    )
+    return ANN.per_query_topk(
+        scored, topk, ["approx_dist_micros", "vec_id"]
+    ).select("query_id", "vec_id", "approx_dist_micros", "rank")
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str, topk: int = _PQ_TOPK) -> DataFrame:
@@ -3124,8 +3140,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str, topk: int = _PQ_TOPK) -> DataF
     baseline (the PQ payoff is bytes, not candidates); ann_ivf_pq_topk
     composes it with IVF partition pruning so only nprobe partitions
     scan."""
-    from pyspark.sql import Window as _W
-
     embs = _embs_wide(spark, sf_dir).select("vec_id", "embedding")
     models = _pq_models(spark, sf_dir)
     if not all(models):
@@ -3136,40 +3150,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str, topk: int = _PQ_TOPK) -> DataF
         return spark.createDataFrame(
             [], "query_id long, vec_id long, approx_dist_micros long, rank int"
         )
-    coded = embs.select(
-        "vec_id",
-        *[F.expr(_pq_code_sql(models, s)).alias(f"_c{s}") for s in range(_PQ_M)],
-    )
-    qv = embs.where(F.col("vec_id") < 10)
-    scored = coded
-    for s in range(_PQ_M):
-        table = _pq_query_table(models, qv, s)
-        cond = F.col(f"_c{s}") == F.col(f"cid{s}")
-        if s > 0:
-            cond = cond & (F.col("qid0") == F.col(f"qid{s}"))
-        scored = scored.join(F.broadcast(table), cond)
-    adist = sum(F.col(f"d{s}") for s in range(1, _PQ_M)) + F.col("d0")
-    ranked = (
-        scored.where(F.col("vec_id") != F.col("qid0"))
-        .select(
-            F.col("qid0").alias("query_id"),
-            "vec_id",
-            adist.cast("bigint").alias("approx_dist_micros"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                _W.partitionBy("query_id").orderBy(
-                    "approx_dist_micros", "vec_id"
-                )
-            ),
-        )
-    )
-    return ranked.where(F.col("rank") <= topk).select(
-        "query_id",
-        "vec_id",
-        "approx_dist_micros",
-        F.col("rank").cast("int").alias("rank"),
+    return _adc_topk(
+        embs.select("vec_id", *_pq_codes(models)),
+        models, embs.where(F.col("vec_id") < 10), topk,
     )
 
 
@@ -3217,37 +3200,46 @@ def _pq_chain_parts(
     return parts
 
 
-def _pq_scored_cte(m: int, iters: int, topk: int) -> str:
-    """Shared oracle back half: full-corpus ADC scoring + per-query
-    rank — CTEs `scored` and `pqtop` (rows already cut at topk)."""
-    code_joins = f"s0a{iters} a0"
-    for s in range(1, m):
-        code_joins += f" JOIN s{s}a{iters} a{s} USING (vec_id)"
-    qd_joins = " JOIN qd0 q0 ON q0.cid = a0.cid"
-    for s in range(1, m):
-        qd_joins += f" JOIN qd{s} q{s} ON q{s}.cid = a{s}.cid AND q{s}.qid = q0.qid"
+def _pq_scored_cte(
+    m: int, iters: int, topk: int,
+    cands: str = (
+        "SELECT e.vec_id, q.vec_id AS query_id"
+        " FROM embeddings e JOIN qv q ON e.vec_id <> q.vec_id"
+    ),
+    materialized: bool = False,
+) -> str:
+    """Shared oracle back half, the twin of _adc_topk: the `cands`
+    (vec_id, query_id) pairs — by default every corpus row for every
+    query — joined to their m codes and the m distance tables, adist
+    summed (`scored`), then the per-query top-k (`pqtop`)."""
+    M = "MATERIALIZED " if materialized else ""
+    joins = "".join(
+        f"\n  JOIN s{s}a{iters} a{s} ON a{s}.vec_id = b.vec_id" for s in range(m)
+    ) + "".join(
+        f"\n  JOIN qd{s} q{s} ON q{s}.cid = a{s}.cid AND q{s}.qid = b.query_id"
+        for s in range(m)
+    )
     total = " + ".join(f"q{s}.d" for s in range(m))
-    return f"""scored AS (
-  SELECT q0.qid AS query_id, a0.vec_id, {total} AS adist
-  FROM {code_joins}{qd_joins}
-  WHERE a0.vec_id <> q0.qid
+    return f"""scored AS {M}(
+  SELECT b.query_id, b.vec_id, {total} AS adist
+  FROM ({cands}) b{joins}
 ),
 pqtop AS (
-  SELECT query_id, vec_id, adist, rn
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY adist, vec_id) AS rn
-        FROM scored)
-  WHERE rn <= {topk}
+{_topk_sql("query_id, vec_id, adist, rn", "scored", "adist, vec_id", topk)}
 )"""
+
+
+_ADC_COLS = (
+    "query_id, vec_id, CAST(adist AS BIGINT) AS approx_dist_micros,"
+    " CAST(rn AS INTEGER) AS rank"
+)
 
 
 def _pq_oracle_sql(m: int, sub_dim: int, kc: int, iters: int, topk: int) -> str:
     parts = _pq_chain_parts(m, sub_dim, kc, iters)
     parts.append(_pq_scored_cte(m, iters, topk))
     return (
-        "WITH " + ",\n".join(parts) + "\n"
-        "SELECT query_id, vec_id, CAST(adist AS BIGINT) AS approx_dist_micros,\n"
-        "       CAST(rn AS INTEGER) AS rank\nFROM pqtop"
+        "WITH " + ",\n".join(parts) + f"\nSELECT {_ADC_COLS} FROM pqtop"
     )
 
 
@@ -3271,8 +3263,6 @@ def ann_pq_recall_report(
     ann_cosine_topk (and like all recall gauges it runs on a bounded
     query sample regardless of corpus SF); the PQ side is the
     ann_pq_topk plan."""
-    from pyspark.sql import Window as _W
-
     pq = ann_pq_topk(spark, sf_dir, topk).select(
         "query_id", "vec_id", F.lit(1).alias("hit")
     )
@@ -3291,21 +3281,15 @@ def ann_pq_recall_report(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    exact = (
+    exact = ANN.per_query_topk(
         embs.crossJoin(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             "vec_id",
             F.round(dm * 1000000).cast("bigint").alias("dm"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("query_id").orderBy("dm", "vec_id")
-            ),
-        )
-        .where(F.col("rn") <= topk)
+        ),
+        topk, ["dm", "vec_id"],
     )
     return (
         exact.join(pq, ["query_id", "vec_id"], "left")
@@ -3331,11 +3315,7 @@ def _pq_recall_oracle_sql(m: int, sub_dim: int, kc: int, iters: int, topk: int) 
         "  FROM qv q JOIN embeddings c ON c.vec_id <> q.vec_id\n)"
     )
     parts.append(
-        "extop AS (\n"
-        "  SELECT query_id, vec_id\n"
-        "  FROM (SELECT *, row_number() OVER (PARTITION BY query_id\n"
-        "                                     ORDER BY dm, vec_id) AS rn\n"
-        f"        FROM ex)\n  WHERE rn <= {topk}\n)"
+        f"extop AS (\n{_topk_sql('query_id, vec_id', 'ex', 'dm, vec_id', topk)}\n)"
     )
     return (
         "WITH " + ",\n".join(parts) + f"""
@@ -3378,8 +3358,6 @@ def ann_ivf_pq_topk(
     tables.  Storage drops ~dim*4/m-fold vs raw vectors and the scan
     is partition-pruned: this is the variant that actually runs at
     billion-vector scale."""
-    from pyspark.sql import Window as _W
-
     embs = _embs_wide(spark, sf_dir).select("vec_id", "embedding")
     models = _pq_models(spark, sf_dir)
     cents = _km_update_cents(spark, sf_dir, _KM_K, _KM_ITERS)
@@ -3387,40 +3365,14 @@ def ann_ivf_pq_topk(
     # one scan computes BOTH the inverted-list id and the m codes —
     # coarse assign and encode are independent literal projections
     coded = ANN.ivf_assign(nz, cents).select(
-        "vec_id",
-        "centroid_id",
-        *[F.expr(_pq_code_sql(models, s)).alias(f"_c{s}") for s in range(_PQ_M)],
+        "vec_id", "centroid_id", *_pq_codes(models)
     )
     probes = ANN.ivf_probe(
         nz.where(F.col("vec_id") < 10), cents, nprobe=nprobe
     ).select("query_id", "centroid_id")
-    qv = embs.where(F.col("vec_id") < 10)
-    scored = coded.join(F.broadcast(probes), "centroid_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    for s in range(_PQ_M):
-        table = _pq_query_table(models, qv, s)
-        scored = scored.join(
-            F.broadcast(table),
-            (F.col(f"_c{s}") == F.col(f"cid{s}"))
-            & (F.col("query_id") == F.col(f"qid{s}")),
-        )
-    adist = sum(F.col(f"d{s}") for s in range(1, _PQ_M)) + F.col("d0")
-    ranked = scored.select(
-        "query_id",
-        "vec_id",
-        adist.cast("bigint").alias("approx_dist_micros"),
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            _W.partitionBy("query_id").orderBy("approx_dist_micros", "vec_id")
-        ),
-    )
-    return ranked.where(F.col("rank") <= topk).select(
-        "query_id",
-        "vec_id",
-        "approx_dist_micros",
-        F.col("rank").cast("int").alias("rank"),
+    return _adc_topk(
+        coded.join(F.broadcast(probes), "centroid_id"),
+        models, embs.where(F.col("vec_id") < 10), topk, qid="query_id",
     )
 
 
@@ -3435,65 +3387,19 @@ def _ivfpq_oracle_sql(
     # five kmeans chains per reference otherwise — see _km_ctes
     parts = _pq_chain_parts(m, sub_dim, kc, iters, materialized=True)
     # coarse chain: the same trained-codebook assign/probe CTEs as
-    # ann_ivf_kmeans_topk's oracle (fin means -> cent; dot scores;
-    # assign tie label ASC, probe tie label DESC)
-    parts.append(_km_ctes(km_k, km_iters, materialized=True))
-    parts.append(
-        "cent AS MATERIALIZED (SELECT cid AS label,"
-        " list(mean_v ORDER BY dim) AS centroid\n"
-        "         FROM fin GROUP BY cid)"
-    )
-    parts.append(
-        "nz AS MATERIALIZED (SELECT * FROM embeddings\n"
-        "       WHERE list_sum(list_transform(embedding,"
-        " x -> CAST(x AS DOUBLE) * x)) > 0)"
-    )
-    parts.append(
-        "assign_scored AS MATERIALIZED (\n"
-        "  SELECT e.vec_id, c.label,\n"
-        "         list_sum(list_transform(list_zip(e.embedding, c.centroid),\n"
-        "                                 p -> CAST(p[1] AS DOUBLE) * p[2])) AS s\n"
-        "  FROM nz e CROSS JOIN cent c\n)"
-    )
-    parts.append(
-        "assigned AS MATERIALIZED (\n"
-        "  SELECT vec_id, label AS centroid_id FROM (\n"
-        "    SELECT *, row_number() OVER (PARTITION BY vec_id\n"
-        "                                 ORDER BY s DESC, label ASC) AS rn\n"
-        "    FROM assign_scored\n  ) WHERE rn = 1\n)"
-    )
-    parts.append(
-        "qprobe AS MATERIALIZED (\n"
-        "  SELECT vec_id AS query_id, label AS centroid_id FROM (\n"
-        "    SELECT *, row_number() OVER (PARTITION BY vec_id\n"
-        "                                 ORDER BY s DESC, label DESC) AS rn\n"
-        "    FROM assign_scored WHERE vec_id < 10\n"
-        f"  ) WHERE rn <= {nprobe}\n)"
-    )
-    code_joins = f"JOIN s0a{iters} a0 ON a0.vec_id = b.vec_id"
-    for s in range(1, m):
-        code_joins += f"\n  JOIN s{s}a{iters} a{s} ON a{s}.vec_id = b.vec_id"
-    qd_joins = "JOIN qd0 q0 ON q0.cid = a0.cid AND q0.qid = p.query_id"
-    for s in range(1, m):
-        qd_joins += (
-            f"\n  JOIN qd{s} q{s} ON q{s}.cid = a{s}.cid"
-            f" AND q{s}.qid = p.query_id"
-        )
-    total = " + ".join(f"q{s}.d" for s in range(m))
-    body = f"""ivfscored AS MATERIALIZED (
-  SELECT p.query_id, b.vec_id, {total} AS adist
-  FROM assigned b
-  JOIN qprobe p ON p.centroid_id = b.centroid_id AND p.query_id <> b.vec_id
-  {code_joins}
-  {qd_joins}
-)
-SELECT query_id, vec_id, CAST(adist AS BIGINT) AS approx_dist_micros,
-       CAST(rn AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY adist, vec_id) AS rn
-      FROM ivfscored)
-WHERE rn <= {topk}"""
-    return "WITH " + ",\n".join(parts) + ",\n" + body
+    # ann_ivf_kmeans_topk's oracle; the probed lists are the candidates
+    parts += [
+        _km_ctes(km_k, km_iters, materialized=True),
+        _FIN_CENT.format(M="MATERIALIZED "),
+        _ivf_ctes(nprobe, materialized=True),
+        _pq_scored_cte(
+            m, iters, topk,
+            "SELECT b.vec_id, p.query_id FROM assigned b JOIN qprobe p"
+            " ON p.centroid_id = b.centroid_id AND p.query_id <> b.vec_id",
+            materialized=True,
+        ),
+    ]
+    return "WITH " + ",\n".join(parts) + f"\nSELECT {_ADC_COLS} FROM pqtop"
 
 
 ORACLE["ann_ivf_pq_topk"] = _ivfpq_oracle_sql(

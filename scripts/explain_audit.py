@@ -11,13 +11,17 @@ filters.  Expression ids are stripped, so two builds of the same plan
 fingerprint identically; diff two files to prove a refactor left every
 plan unchanged.  Persisted frames are fingerprinted through their
 cached plan.  The streaming band-index projection is included under
-``stream:*`` keys, built over the static documents table.
+``stream:*`` keys, built over the static documents table.  Each
+``oracle_sql()`` entry adds an ``oracle:<key>`` digest: the sha1 of
+its SQL with all whitespace removed, so the same diff also shows
+which DuckDB twins changed text.
 
 Usage: python scripts/explain_audit.py [sf_dir] [--json PATH]
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -29,6 +33,7 @@ import __spark_entry__ as E
 from bank_transaction_data_warehouse_spark.session import get_spark
 
 _EXPR_ID = re.compile(r"#\d+L?")
+_SPACE = re.compile(r"\s+")
 
 
 def _seq(jseq) -> list:
@@ -119,19 +124,23 @@ def write_fingerprints(spark, sf_dir, path) -> None:
         except Exception as ex:  # pragma: no cover
             out[name] = {"error": str(ex)[:200]}
         spark.catalog.clearCache()
+    for name, sql in E.oracle_sql().items():
+        out[f"oracle:{name}"] = hashlib.sha1(
+            _SPACE.sub("", sql).encode()
+        ).hexdigest()
     # one plan node per line: a diff of two files reads node by node
     entries = []
     for name, nodes in sorted(out.items()):
-        if isinstance(nodes, dict):
-            body = json.dumps(nodes, sort_keys=True)
-        else:
+        if isinstance(nodes, list):
             body = "[\n" + ",\n".join(
                 "  " + json.dumps(n, sort_keys=True) for n in nodes
             ) + "\n ]"
+        else:
+            body = json.dumps(nodes, sort_keys=True)
         entries.append(f" {json.dumps(name)}: {body}")
     with open(path, "w") as f:
         f.write("{\n" + ",\n".join(entries) + "\n}\n")
-    print(f"wrote {len(out)} plan fingerprints to {path}")
+    print(f"wrote {len(out)} plan fingerprints and oracle digests to {path}")
 
 
 def audit(df):

@@ -3,6 +3,7 @@ near-dup symmetry."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.operators import ann as ANN
@@ -97,6 +98,24 @@ def test_near_dups_lsh_no_cartesian_plan(spark, sf_dir):
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize("fn", ["lsh_topk", "embedding_near_dups_lsh"])
+def test_lsh_dim_mismatch_raises(spark, fn):
+    """32-dim vectors under dim=64 would null-pad in zip_with and hash
+    every vector to bucket 0 (all pairs become candidates): every LSH
+    path must raise instead of returning that output.  The check is a
+    lazy raise_error, so it surfaces when the frame is evaluated, as a
+    SparkRuntimeException or, when several stages fail at once, wrapped
+    in a stage-materialization error: match the message, not the type."""
+    vecs = [(i, [math.sin(i * 32 + d) for d in range(32)]) for i in range(40)]
+    embs = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    args = {
+        "lsh_topk": (embs, embs.where(F.col("vec_id") < 5)),
+        "embedding_near_dups_lsh": (embs,),
+    }[fn]
+    with pytest.raises(Exception, match="dim=64 does not match vector length 32"):
+        getattr(ANN, fn)(*args, dim=64).collect()
 
 
 def test_ivf_topk_recall(spark, sf_dir):

@@ -2,6 +2,7 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.operators.components import (
@@ -64,6 +65,17 @@ def test_components_chain_and_island(spark):
     comp = {r.node: r.comp for r in connected_components(pairs).collect()}
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
+
+
+def test_components_path_longer_than_max_iter_raises(spark):
+    """One-hop label diffusion needs O(diameter) rounds: a path that
+    does not converge within max_iter raises, never returns partial
+    labels."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 8)], "doc_id_1 long, doc_id_2 long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(pairs, max_iter=2)
 
 
 def test_dedup_clusters_members(spark):

@@ -4,6 +4,7 @@ trees (must be value-identical to the Column-API forms they replaced),
 and the fused dedup_edit_distance payload frame."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -184,6 +185,21 @@ def test_dedup_edit_distance_matches_unfused_composition(spark, sf_dir):
 _PIN_PARTS = 3  # distinct from the fixture's shuffle width (8) and 1
 
 
+def _pinned(df):
+    """Run ``df`` and return the user-specified (REPARTITION_BY_NUM)
+    hash exchanges of its EXECUTED plan as ([key columns], width)
+    pairs, expression ids stripped, plus the plan text."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    pins = re.findall(
+        r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan
+    )
+    return [
+        (re.sub(r"#\d+L?", "", cols).split(", "), int(n)) for cols, n in pins
+    ], plan
+
+
 @pytest.mark.parametrize(
     "generator, keys",
     [
@@ -199,8 +215,6 @@ def test_self_join_expansion_pinned_to_parts(spark, sf_dir, generator, keys):
     user-specified hash exchange of width ``parts`` on the join keys —
     AQE coalesces any other exchange from map-output bytes and would
     serialize the quadratic pair blow-up into one task."""
-    import re
-
     docs = T.load_table(spark, sf_dir, "documents")
     if generator == "set_jaccard_pairs":
         df = DD.set_jaccard_pairs(DD.shingle_sets(docs), parts=_PIN_PARTS)
@@ -208,13 +222,26 @@ def test_self_join_expansion_pinned_to_parts(spark, sf_dir, generator, keys):
         df = DD.set_minhash_lsh_pairs(DD.shingle_sets(docs), parts=_PIN_PARTS)
     else:
         df = getattr(DD, generator)(docs, parts=_PIN_PARTS)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    pins = re.findall(
-        r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan
-    )
-    pinned = [
-        (re.sub(r"#\d+L?", "", cols).split(", "), int(n)) for cols, n in pins
-    ]
+    pinned, plan = _pinned(df)
     assert (keys, _PIN_PARTS) in pinned, plan
+
+
+@pytest.mark.parametrize("generator", ["blocked_self_pairs", "embedding_near_dups_lsh"])
+def test_ann_pair_expansion_keeps_width_pins(spark, sf_dir, generator):
+    """The ANN pair generators are not same-key self-joins, but their
+    expansions are pinned the same way: the EXECUTED plan must still
+    hold user-specified hash exchanges — blocked_self_pairs at
+    ``partitions`` on each side's (key, block) columns, the LSH probe
+    side on _id at the conf width."""
+    embs = T.load_table(spark, sf_dir, "embeddings")
+    if generator == "blocked_self_pairs":
+        df = ANN.blocked_self_pairs(
+            embs, "label", "vec_id", shards=4, partitions=_PIN_PARTS
+        )
+        want = [(["label", "_a", "_b"], _PIN_PARTS), (["_key_r", "_a", "_b"], _PIN_PARTS)]
+    else:
+        df = ANN.embedding_near_dups_lsh(embs, threshold=0.45)
+        want = [(["_id"], int(spark.conf.get("spark.sql.shuffle.partitions")))]
+    pinned, plan = _pinned(df)
+    for pin in want:
+        assert pin in pinned, plan
