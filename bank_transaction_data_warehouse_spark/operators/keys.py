@@ -47,22 +47,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bank_transaction_data_warehouse_spark.session import build_stat
+
 _NUMERIC_PREFIXES = (
     "tinyint", "smallint", "int", "bigint", "float", "double", "decimal",
 )
-
-# cache_key -> (mn, mx, offsets): plan-build stats memo so repeated
-# constructions of the same dim (fact_spending builds 4 dims; a driver
-# correctness session constructs dozens of plans that embed dims)
-# don't re-run the two eager stats jobs each time.  Keyed by a
-# caller-supplied string that MUST identify an immutable input
-# (e.g. f"{sf_dir}:dim_customer" over read-only testdata) — never pass
-# a cache_key for a frame whose contents can change between builds.
-_STATS_MEMO: dict[str, tuple[float, float, dict[int, int]]] = {}
-
-
-def clear_surrogate_key_cache() -> None:
-    _STATS_MEMO.clear()
 
 
 def add_surrogate_key(
@@ -81,7 +70,12 @@ def add_surrogate_key(
     out-of-range keys are clamped into the edge buckets.
 
     ``cache_key``: opt-in memoization of the plan-build stats (min/max
-    + per-bucket offsets) for immutable inputs — see _STATS_MEMO."""
+    + per-bucket offsets) through ``session.build_stat``, whose
+    contract it inherits: a string starting with the input's sf_dir
+    (e.g. f"{sf_dir}:dim_customer" over read-only testdata), never
+    passed for a frame whose contents can change between builds.  The
+    memo key adds the shuffle-partition count, because bucketing
+    depends on it."""
     if strategy == "hash":
         return df.withColumn(key_col, F.xxhash64(*natural_cols))
     if strategy == "rownum":
@@ -94,14 +88,27 @@ def add_surrogate_key(
                 f"strategy='hash' for non-numeric keys"
             )
         nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        if cache_key is not None:
-            # bucketing depends on nparts: sessions configured with a
-            # different shuffle-partition count must not share snapshots
-            cache_key = f"{cache_key}#p{nparts}"
-        memo = _STATS_MEMO.get(cache_key) if cache_key is not None else None
-        if memo is not None:
-            mn, mx, offsets = memo
-        else:
+
+        def with_bucket(mn: float, mx: float) -> DataFrame:
+            span = mx - mn + 1.0  # >= 1, ANSI-safe
+            k = F.col(lead).cast("double")
+            # weakly monotone in the key (bigint->double cast preserves
+            # <=), which is all bucket ordering needs; NULL keys ->
+            # bucket -1 (they sort NULLS FIRST inside the window too)
+            return df.withColumn(
+                "_sk_bkt",
+                F.when(F.col(lead).isNull(), F.lit(-1)).otherwise(
+                    F.greatest(
+                        F.least(
+                            F.floor((k - F.lit(mn)) / F.lit(span) * nparts),
+                            F.lit(nparts - 1).cast("bigint"),
+                        ),
+                        F.lit(0).cast("bigint"),
+                    )
+                ),
+            )
+
+        def stats():
             src = bounds if bounds is not None else df
             scol = bounds_col if bounds_col is not None else lead
             # eager 1-row stats over the cheap bounds source (column-
@@ -113,28 +120,12 @@ def add_surrogate_key(
             ).first()
             mn = float(row["mn"]) if row["mn"] is not None else 0.0
             mx = float(row["mx"]) if row["mx"] is not None else 0.0
-        span = mx - mn + 1.0  # >= 1, ANSI-safe
-        k = F.col(lead).cast("double")
-        # weakly monotone in the key (bigint->double cast preserves <=),
-        # which is all bucket ordering needs; NULL keys -> bucket -1
-        # (they sort NULLS FIRST inside the window too)
-        bucket = F.when(F.col(lead).isNull(), F.lit(-1)).otherwise(
-            F.greatest(
-                F.least(
-                    F.floor((k - F.lit(mn)) / F.lit(span) * nparts),
-                    F.lit(nparts - 1).cast("bigint"),
-                ),
-                F.lit(0).cast("bigint"),
-            )
-        )
-        withb = df.withColumn("_sk_bkt", bucket)
-        if memo is None:
             # eager per-bucket counts -> exclusive running offsets as a
             # LITERAL map (<= nparts+1 entries).  -1 (NULL keys) sorts
             # first, matching NULLS FIRST inside the per-bucket window.
             cnt_rows = sorted(
                 (r["_sk_bkt"], r["_sk_n"])
-                for r in withb.groupBy("_sk_bkt")
+                for r in with_bucket(mn, mx).groupBy("_sk_bkt")
                 .agg(F.count("*").alias("_sk_n"))
                 .collect()
             )
@@ -143,13 +134,18 @@ def add_surrogate_key(
             for bkt, n in cnt_rows:
                 offsets[bkt] = acc
                 acc += n
-            if cache_key is not None and offsets:
-                # never memoize an EMPTY offsets snapshot: a later
-                # non-empty build hitting it would fall into the
-                # `off_expr = lit(0)` empty-frame path and mint
-                # colliding per-bucket keys with no error — the exact
-                # silent corruption the raise_error guard exists for
-                _STATS_MEMO[cache_key] = (mn, mx, offsets)
+            # None for an EMPTY snapshot, so it is never memoized: a
+            # later non-empty build hitting it would fall into the
+            # `off_expr = lit(0)` empty-frame path and mint colliding
+            # per-bucket keys with no error — the exact silent
+            # corruption the raise_error guard exists for
+            return (mn, mx, offsets) if offsets else None
+
+        if cache_key is None:
+            snap = stats()
+        else:
+            snap = build_stat(df.sparkSession, f"{cache_key}#p{nparts}", stats)
+        mn, mx, offsets = snap or (0.0, 0.0, {})
         if offsets:
             lookup = F.element_at(
                 F.create_map(
@@ -182,7 +178,7 @@ def add_surrogate_key(
             )
         else:  # empty frame: no rows, any literal works
             off_expr = F.lit(0)
-        ranked = withb.withColumn(
+        ranked = with_bucket(mn, mx).withColumn(
             "_sk_lrk",
             F.row_number().over(
                 Window.partitionBy("_sk_bkt").orderBy(*natural_cols)

@@ -113,55 +113,30 @@ def collect_centroids(stats: DataFrame) -> dict[int, list[float]]:
     return {int(r["cid"]): [float(x) for x in r["c"]] for r in rows}
 
 
-# (cache_key, k, iters, vec_col, id_col) -> final centroids.  The
-# training collects (seed + one per update round) run at PLAN-BUILD
-# time; for immutable inputs (the testdata) the resulting model is a
-# pure function of (input, k, iters), so consumers that rebuild the
-# same plan (bench min-of-3, crosscheck, multiple kmeans-derived
-# queries in one session) can skip retraining.  Same contract as
-# operators/keys.add_surrogate_key(cache_key=...): NEVER pass
-# cache_key for mutable frames — a stale model silently mis-clusters
-# (locally the oracle recomputes from data, so crosscheck would catch
-# drift; production has no such net).
-_CENT_MEMO: dict = {}
-
-
 def kmeans_fit(
     embs: DataFrame,
     k: int = 8,
     iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cache_key: str | None = None,
 ) -> tuple[DataFrame, dict[int, list[float]]]:
     """Bounded-iteration Lloyd: returns (last assignment DataFrame,
     centroids that produced it).  Clusters emptied by an update simply
     drop out of the codebook (standard Lloyd behavior; the oracle's
     group-by mirrors it).  Init: the k smallest-id vectors
     (TakeOrdered — no global sort materialization), cid = seed id.
-    ``cache_key``: memoize the trained model for immutable inputs
-    (see _CENT_MEMO)."""
+    The training collects (seed + one per update round) run at
+    PLAN-BUILD time; callers over immutable inputs memoize the
+    centroids with ``session.build_stat``."""
     if k <= 0 or iters <= 0:
         raise ValueError(f"k={k} and iters={iters} must be positive")
-    memo_key = (
-        (cache_key, k, iters, vec_col, id_col) if cache_key is not None else None
-    )
-    if memo_key is not None and memo_key in _CENT_MEMO:
-        cents = _CENT_MEMO[memo_key]
-        if not cents:
-            return embs.withColumn("cid", F.lit(0)).where(F.lit(False)), {}
-        return assign_clusters(embs, cents, vec_col=vec_col), cents
     seed_rows = embs.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     cents = {int(r[id_col]): [float(x) for x in r[vec_col]] for r in seed_rows}
     if not cents:  # empty input: empty assignment, empty codebook
-        if memo_key is not None:
-            _CENT_MEMO[memo_key] = {}
         return embs.withColumn("cid", F.lit(0)).where(F.lit(False)), {}
     assigned = None
     for it in range(iters):
         assigned = assign_clusters(embs, cents, vec_col=vec_col)
         if it < iters - 1:
             cents = collect_centroids(mean_stats(assigned, vec_col=vec_col))
-    if memo_key is not None:
-        _CENT_MEMO[memo_key] = cents
     return assigned, cents

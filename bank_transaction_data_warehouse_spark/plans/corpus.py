@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from bank_transaction_data_warehouse_spark.functions import text as T
 from bank_transaction_data_warehouse_spark.operators import ann as ANN
 from bank_transaction_data_warehouse_spark.operators import dedup as DD
+from bank_transaction_data_warehouse_spark.session import build_stat
 from bank_transaction_data_warehouse_spark.sources.tables import (
     load_table,
     parallelism_for,
@@ -26,31 +27,6 @@ from bank_transaction_data_warehouse_spark.sources.tables import (
 
 QUERIES: dict = {}
 ORACLE: dict[str, str] = {}
-
-# Plan-build stats memo for IMMUTABLE inputs — the same contract as
-# operators/kmeans._CENT_MEMO and keys.add_surrogate_key(cache_key=):
-# model-sized values (a tiny centroid list, a <=|score classes| row
-# histogram, one max id) that are pure functions of (sf_dir, params)
-# and are baked into plans as literals.  Without the memo every plan
-# REBUILD (bench min-of-3, crosscheck, composed queries) re-ran the
-# producing Spark job: ann_ivf_topk paid a full label_centroids
-# aggregation per build (~0.7 s x 3).  Never memoize anything derived
-# from a mutable frame.  WeakKeyDictionary on the session so a stopped
-# session's stats are collectable (r14 ADVICE).
-from weakref import WeakKeyDictionary as _WKD
-
-_BUILD_STAT_MEMO: _WKD = _WKD()
-
-
-def _build_stat(spark, key, compute):
-    per_session = _BUILD_STAT_MEMO.get(spark)
-    if per_session is None:
-        per_session = {}
-        _BUILD_STAT_MEMO[spark] = per_session
-    if key not in per_session:
-        per_session[key] = compute()
-    return per_session[key]
-
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
@@ -1090,14 +1066,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment is a pure map — no shuffle, no join.  At 100 TB the
     # centroids would be precomputed once and persisted; the collect
     # never scales with the data.  Memoized per immutable input
-    # (_build_stat) — rebuilding the plan must not re-run the job.
+    # (session.build_stat) — rebuilding the plan must not re-run the job.
     cents = _label_cents(spark, sf_dir)
     queries = embs.where(F.col("vec_id") < 10)
     return ANN.ivf_topk(embs, queries, cents, k=5, nprobe=3)
 
 
 def _label_cents(spark, sf_dir) -> list:
-    return _build_stat(
+    return build_stat(
         spark,
         (sf_dir, "label_cents"),
         lambda: [
@@ -1516,8 +1492,8 @@ GROUP BY 1
 
 
 def _km_shared(spark, sf_dir, assign_frame, k=_KM_K, iters=_KM_ITERS):
-    """Train the shared ``{sf_dir}:embeddings`` kmeans model ONCE on
-    the canonical PLAIN scan, then assign the CALLER's frame.
+    """Train the shared kmeans model ONCE per (session, sf_dir, k,
+    iters) on the canonical PLAIN scan, then assign the CALLER's frame.
     r14 coupled all five sharers of the model key to the spread frame
     purely so the memoized model could not depend on which consumer
     trained first — at the cost of a driver-measured 1.8x regression
@@ -1529,9 +1505,11 @@ def _km_shared(spark, sf_dir, assign_frame, k=_KM_K, iters=_KM_ITERS):
     contract = kmeans_fit's (empty frame, empty codebook)."""
     from bank_transaction_data_warehouse_spark.operators import kmeans as KM
 
-    _, cents = KM.kmeans_fit(
-        _embs(spark, sf_dir).select("vec_id", "embedding"),
-        k=k, iters=iters, cache_key=f"{sf_dir}:embeddings",
+    cents = build_stat(
+        spark, (sf_dir, "kmeans", k, iters),
+        lambda: KM.kmeans_fit(
+            _embs(spark, sf_dir).select("vec_id", "embedding"), k=k, iters=iters
+        )[1],
     )
     if not cents:
         return assign_frame.withColumn("cid", F.lit(0)).where(F.lit(False)), {}
@@ -1704,8 +1682,8 @@ def quality_top_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_wide(spark, sf_dir)
     scored = docs.select("doc_id", _q_flags_col().alias("q_flags"))
     # <=|score classes| rows; memoized per immutable input so a plan
-    # rebuild does not re-run the histogram job (_build_stat contract)
-    hist = _build_stat(
+    # rebuild does not re-run the histogram job (session.build_stat)
+    hist = build_stat(
         spark,
         (sf_dir, "q_flags_hist"),
         lambda: sorted(
@@ -1796,8 +1774,8 @@ def vocab_growth(spark: SparkSession, sf_dir: str, nb: int = _VG_NB) -> DataFram
         row = docs.agg(F.max("doc_id").alias("m")).first()
         return int(row["m"]) + 1 if row is not None and row["m"] is not None else 1
 
-    # one max-id row; memoized per immutable input (_build_stat)
-    n_ids = _build_stat(spark, (sf_dir, "vocab_growth_n_ids"), _n_ids)
+    # one max-id row; memoized per immutable input (session.build_stat)
+    n_ids = build_stat(spark, (sf_dir, "vocab_growth_n_ids"), _n_ids)
     w = max(1, (n_ids + nb - 1) // nb)
     inst = docs.select(
         F.least(F.lit(nb - 1), F.expr(f"doc_id div {w}"))
@@ -1899,7 +1877,7 @@ def _km_update_cents(spark, sf_dir, k, iters) -> list:
         )
         return sorted(KM.collect_centroids(KM.mean_stats(assigned)).items())
 
-    return _build_stat(spark, (sf_dir, "km_update_cents", k, iters), _compute)
+    return build_stat(spark, (sf_dir, "km_update_cents", k, iters), _compute)
 
 
 QUERIES["ann_ivf_kmeans_topk"] = ann_ivf_kmeans_topk
@@ -3027,24 +3005,26 @@ _IVFPQ_NPROBE = 3
 
 
 def _pq_models(spark: SparkSession, sf_dir: str) -> list:
-    """Train (or fetch from the kmeans_fit memo) the m per-subspace
-    codebooks.  Model-sized: m x kc rows total; every PQ consumer in a
-    session shares the same trained chains via cache_key."""
+    """Train the m per-subspace codebooks as sorted (cid, centroid)
+    lists.  Model-sized: m x kc rows total; every PQ consumer in a
+    session shares the same trained chains (session.build_stat)."""
     from bank_transaction_data_warehouse_spark.operators import kmeans as KM
 
-    embs = _embs(spark, sf_dir).select("vec_id", "embedding")
-    models = []
-    for s in range(_PQ_M):
-        sub = embs.select(
-            "vec_id",
-            F.slice("embedding", s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("embedding"),
-        )
-        _, cents = KM.kmeans_fit(
-            sub, k=_PQ_KC, iters=_PQ_ITERS,
-            cache_key=f"{sf_dir}:pq:{s}:{_PQ_SUBDIM}:{_PQ_KC}",
-        )
-        models.append(sorted(cents.items()))
-    return models
+    def _compute() -> list:
+        embs = _embs(spark, sf_dir).select("vec_id", "embedding")
+        models = []
+        for s in range(_PQ_M):
+            sub = embs.select(
+                "vec_id",
+                F.slice("embedding", s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("embedding"),
+            )
+            cents = KM.kmeans_fit(sub, k=_PQ_KC, iters=_PQ_ITERS)[1]
+            models.append(sorted(cents.items()))
+        return models
+
+    return build_stat(
+        spark, (sf_dir, "pq", _PQ_M, _PQ_SUBDIM, _PQ_KC, _PQ_ITERS), _compute
+    )
 
 
 # Literal-heavy expressions are generated as SQL TEXT and parsed

@@ -9,6 +9,7 @@ and Arrow for any Pandas-UDF exchange.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +61,32 @@ def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = Non
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+# session -> {key: value}, weakly keyed so the memo itself keeps no
+# session alive (a memoized DataFrame still references its session).
+_BUILD_STATS = weakref.WeakKeyDictionary()
+
+
+def build_stat(spark: SparkSession, key, compute):
+    """Plan-build memo: ``compute()`` once per (session, key).
+
+    Plan builds read source frames and split/row counts, and bake
+    model-sized stats into plans as literals (surrogate-key bucket
+    offsets, kmeans/PQ codebooks, score histograms); a rebuild of the
+    same plan in the same session reuses them and launches no job.
+
+    Contract: only for values derived from IMMUTABLE inputs (the
+    read-only testdata), never from a frame whose contents can change
+    between builds; ``key`` starts with the input's ``sf_dir`` and
+    holds every parameter the value depends on.  A ``None`` result is
+    returned but not stored, so a caller can decline to memoize (e.g.
+    an empty snapshot).  Per session, because a DataFrame belongs to
+    its session."""
+    memo = _BUILD_STATS.setdefault(spark, {})
+    if key in memo:
+        return memo[key]
+    value = compute()
+    if value is not None:
+        memo[key] = value
+    return value

@@ -12,17 +12,20 @@ The reference extracts three OLTP tables + one CSV lookup
   documents/embeddings ≙ training-data corpus (brief-mandated ops)
 
 All readers return lazy DataFrames straight from ``spark.read.parquet``
-so Catalyst keeps predicate pushdown and column pruning; never cache or
-collect here.
+so Catalyst keeps predicate pushdown and column pruning; no DataFrame
+is cached here.  The frames, scan split counts and row counts (one
+footer-answered COUNT job per table) are plan-build stats, memoized
+per session by ``session.build_stat``.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
+
+from bank_transaction_data_warehouse_spark.session import build_stat
 
 TABLES = (
     "region",
@@ -40,56 +43,34 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (session, sf_dir, name) -> base DataFrame.  Plan-BUILD memoization,
-# not data caching: `spark.read.parquet` costs ~70 ms of py4j +
-# file-index JVM round trips, and a single warehouse query touches the
-# base tables up to 14 times (fact_spending: measured 1.0 s of its
-# 2.1 s warm build).  The returned DataFrame is lazy and immutable, so
-# reuse is safe; Catalyst still prunes/pushes per consuming plan.  The
-# testdata directories are immutable for a session's lifetime (the
-# same assumption the surrogate-key stats memo documents).  Keyed on
-# the live SparkSession object (a WeakKeyDictionary of per-session
-# dicts, so a stopped session's frames — unusable anyway — do not pin
-# the session in memory for the process lifetime; r14 ADVICE).
-_FRAME_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-
-
-def _session_memo(spark: SparkSession) -> dict:
-    d = _FRAME_MEMO.get(spark)
-    if d is None:
-        d = {}
-        _FRAME_MEMO[spark] = d
-    return d
-
-
+# Frames are memoized for plan BUILD, not data caching:
+# `spark.read.parquet` costs ~70 ms of py4j + file-index JVM round
+# trips, and a single warehouse query touches the base tables up to 14
+# times (fact_spending: measured 1.0 s of its 2.1 s warm build).  The
+# returned DataFrame is lazy and immutable, so reuse is safe; Catalyst
+# still prunes/pushes per consuming plan.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    memo = _session_memo(spark)
-    key = ("frame", sf_dir, name)
-    df = memo.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        memo[key] = df
-    return df
+    return build_stat(
+        spark, (sf_dir, "frame", name),
+        lambda: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")),
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
-# scan partition count per (sf_dir, table).  One .rdd materialization
-# per table per session (file listing is already cached by
-# load_table's frame); the count is a pure function of the immutable
-# input layout + split confs.  Stored in the per-session WeakKey memo.
 def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
-    memo = _session_memo(spark)
-    key = ("splits", sf_dir, name)
-    n = memo.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, name).rdd.getNumPartitions()
-        memo[key] = n
-    return n
+    """Scan partition count: a pure function of the immutable input
+    layout + split confs, so one .rdd materialization per table per
+    session (the file listing is already cached by load_table's
+    frame)."""
+    return build_stat(
+        spark, (sf_dir, "splits", name),
+        lambda: load_table(spark, sf_dir, name).rdd.getNumPartitions(),
+    )
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -99,13 +80,10 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     at any scale — cheap enough to size partitioning decisions from
     actual data (guide §2: partition by data size, not by a constant
     tuned to one deployment)."""
-    memo = _session_memo(spark)
-    key = ("rows", sf_dir, name)
-    n = memo.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, name).count()
-        memo[key] = n
-    return n
+    return build_stat(
+        spark, (sf_dir, "rows", name),
+        lambda: load_table(spark, sf_dir, name).count(),
+    )
 
 
 # A scan is "degenerate" when parquet's row-group layout gives it at

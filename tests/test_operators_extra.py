@@ -255,10 +255,9 @@ def test_surrogate_key_memo_and_snapshot_guard(spark, sf_dir):
 
     from bank_transaction_data_warehouse_spark.operators.keys import (
         add_surrogate_key,
-        clear_surrogate_key_cache,
     )
 
-    clear_surrogate_key_cache()
+    spark = spark.newSession()  # a fresh plan-build memo
     base = spark.range(1, 101).select(F.col("id").alias("k"))
     ck = "test:memo-guard"
     first = add_surrogate_key(base, ["k"], "sk", "rownum", cache_key=ck)
@@ -280,7 +279,6 @@ def test_surrogate_key_memo_and_snapshot_guard(spark, sf_dir):
     )
     with pytest.raises(Exception, match="plan-build"):
         poisoned.collect()
-    clear_surrogate_key_cache()
 
 
 def test_surrogate_key_empty_memo_not_poisoned(spark):
@@ -291,10 +289,9 @@ def test_surrogate_key_empty_memo_not_poisoned(spark):
 
     from bank_transaction_data_warehouse_spark.operators.keys import (
         add_surrogate_key,
-        clear_surrogate_key_cache,
     )
 
-    clear_surrogate_key_cache()
+    spark = spark.newSession()  # a fresh plan-build memo
     ck = "test:empty-then-full"
     empty = spark.range(0).select(F.col("id").alias("k"))
     assert add_surrogate_key(empty, ["k"], "sk", "rownum", cache_key=ck).count() == 0
@@ -303,4 +300,42 @@ def test_surrogate_key_empty_memo_not_poisoned(spark):
             add_surrogate_key(full, ["k"], "sk", "rownum", cache_key=ck)
             .orderBy("k").collect()]
     assert keys == list(range(1, 201))  # dense, no collisions
-    clear_surrogate_key_cache()
+
+
+def _build_jobs(spark, sf_dir, qname, group):
+    """Jobs launched while BUILDING (not executing) one queries() plan,
+    counted through a job group."""
+    import __spark_entry__ as E
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        E.queries()[qname](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "qname",
+    ["fact_spending", "quality_top_decile", "ann_ivf_kmeans_topk",
+     "ann_pq_topk", "vocab_growth"],
+)
+def test_plan_build_stats_memoized_per_session(spark, sf_dir, qname):
+    """Plan-build stats (frames, row counts, surrogate-key offsets,
+    kmeans/PQ codebooks, histograms) are memoized per session: a
+    rebuild in the same session launches no job, and a new session
+    starts cold even once its source-table stats are warm."""
+    from bank_transaction_data_warehouse_spark.sources.tables import (
+        TABLES,
+        scan_partitions,
+        table_rows,
+    )
+
+    _build_jobs(spark, sf_dir, qname, f"memo-warm-{qname}")
+    assert _build_jobs(spark, sf_dir, qname, f"memo-again-{qname}") == 0
+    fresh = spark.newSession()
+    for t in TABLES:
+        table_rows(fresh, sf_dir, t)
+        scan_partitions(fresh, sf_dir, t)
+    assert _build_jobs(fresh, sf_dir, qname, f"memo-cold-{qname}") >= 1
