@@ -2,10 +2,12 @@
 queries (reference scripts/dashboard.py) plus the README-promised
 feature engineering (spending habits, customer segmentation / RFM).
 
-All of these aggregate the fact after broadcast-joining dims, so at
-100 TB each query is: one fact scan (+codegen agg) and a final
-dim-cardinality-bounded shuffle.  Aggregates are rounded to 2dp so the
-result hash is stable across engines and partition orders.
+All of these aggregate ``warehouse.star`` — the fact star join with the
+dim attributes kept — so at 100 TB each query is: one fact scan
+(+codegen agg) and a final dim-cardinality-bounded shuffle.  Money
+aggregates sum the star's integer ``amount_cents`` and divide by 100.0
+at the end, so the result hash is stable across engines and partition
+orders.
 """
 
 from __future__ import annotations
@@ -19,55 +21,10 @@ from bank_transaction_data_warehouse_spark.plans.warehouse import FACT_CTES
 ORACLE: dict[str, str] = {}
 
 
-def _fact_with_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact joined back to analytic attributes.  The Spark-side fact
-    keeps only keys+measures (like the reference), so analytics re-join
-    the broadcast dims; Catalyst collapses the shared lineage."""
-    txn = WH.load_table(spark, sf_dir, "lineitem")
-    acct = WH.dim_account(spark, sf_dir).select(
-        "account_key",
-        "account_id_source",
-        "customer_id_source",
-        "account_type",
-        "account_open_date",
-    )
-    cust = WH._dim_customer_ext(spark, sf_dir).select(
-        "customer_key",
-        F.col("customer_id_source").alias("cid"),
-        "balance_tier",
-        "segment",
-        "nation_name",
-        F.col("nation_id_source").alias("c_nation"),
-    )
-    loc = WH.dim_location(spark, sf_dir).select(
-        "location_key", "nation_id_source", "region_scope", "region_name"
-    )
-    merch = WH.dim_merchant(spark, sf_dir).select(
-        "merchant_key", "merchant_id_source", "category"
-    )
-    return (
-        txn.join(F.broadcast(acct), txn.l_orderkey == acct.account_id_source)
-        .where(F.col("l_shipdate") >= F.col("account_open_date"))
-        .join(F.broadcast(cust), F.col("customer_id_source") == cust.cid)
-        .join(F.broadcast(loc), cust.c_nation == loc.nation_id_source)
-        .join(F.broadcast(merch), txn.l_partkey == merch.merchant_id_source)
-        .withColumn(
-            "amount_spent",
-            F.col("l_extendedprice") * (1 - F.col("l_discount")),
-        )
-        # exact integer cents: money aggregates sum these (bit-identical
-        # across engines and partition orders), then /100 at the end
-        .withColumn(
-            "amount_cents",
-            F.round(F.col("amount_spent") * 100).cast("bigint"),
-        )
-    )
-
-
 def spend_trend_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly spend trend (dashboard.py sql_trend: Year, Month,
     YearMonth label, total)."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     return (
         f.groupBy(
             F.year("l_shipdate").alias("year"), F.month("l_shipdate").alias("month")
@@ -94,7 +51,7 @@ GROUP BY 1, 2, 3
 
 def top_categories(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
     """Top-N spend categories (dashboard.py sql_category, TOP 5)."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     return (
         f.groupBy("category")
         .agg((F.sum("amount_cents") / 100.0).alias("total_spent"))
@@ -113,7 +70,7 @@ GROUP BY 1 ORDER BY total_spent DESC, category LIMIT 5
 
 def spend_by_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spend by customer tier (dashboard.py sql_age: by Age_Group)."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     return f.groupBy("balance_tier").agg(
         (F.sum("amount_cents") / 100.0).alias("total_spent"),
         F.count("*").cast("bigint").alias("n_txn"),
@@ -130,7 +87,7 @@ FROM fact_spending GROUP BY 1
 
 def spend_by_region_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domestic vs foreign spend split (Dim_Location scope use)."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     return f.groupBy("region_scope").agg(
         (F.sum("amount_cents") / 100.0).alias("total_spent"),
         F.count("*").cast("bigint").alias("n_txn"),
@@ -149,7 +106,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM features per customer (README: customer segmentation) —
     recency (days from last txn to corpus max date), frequency,
     monetary.  One fact-scan groupBy on the surrogate key."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     per_cust = f.groupBy("customer_key").agg(
         F.max("l_shipdate").alias("_last"),
         F.count("*").cast("bigint").alias("frequency"),
@@ -189,7 +146,7 @@ def spending_habits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer per-category spend and share of wallet (README:
     spending-habit feature engineering).  Window over the customer's
     total — partitioned by customer key, no global shuffle."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     per_cat = f.groupBy("customer_key", "category").agg(
         F.sum("amount_cents").alias("_cat_cents")
     )
@@ -231,7 +188,7 @@ def weekend_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the fact's day grain)."""
     from bank_transaction_data_warehouse_spark.functions import warehouse as W
 
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     dow = W.vn_day_of_week(F.col("l_shipdate"))
     return (
         f.withColumn("is_weekend", W.is_weekend(dow))
@@ -278,7 +235,7 @@ def rolling_spend_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     SinglePartition and serializes at scale).  The semi-join back to
     `daily` keeps only days that actually occur in the data, exactly
     matching the range window's output."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     daily = f.groupBy(F.col("l_shipdate").cast("date").alias("day")).agg(
         F.sum("amount_cents").alias("_day_cents")
     ).persist()  # feeds both the explode and the final join
@@ -313,7 +270,7 @@ FROM daily
 def spend_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (tier, region scope): the full subtotal lattice in
     one pass (GROUPING SETS generalization of spend_rollup)."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     return (
         f.cube("balance_tier", "region_scope")
         .agg(
@@ -337,7 +294,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped by first-purchase month (cohort), counted as active in
     each subsequent month-offset.  Two shuffles: first-purchase
     groupBy, then (cohort, offset) count-distinct."""
-    f = _fact_with_dims(spark, sf_dir)
+    f = WH.star(spark, sf_dir)
     ym = (F.year("l_shipdate") * 12 + F.month("l_shipdate") - 1).cast("int")
     activity = f.select(
         F.col("customer_key"), ym.alias("_ym")

@@ -1,7 +1,8 @@
 """Incremental fact loading — the production delta between the
 reference's one-shot batch ETL and a warehouse that stays current.
 
-Three entry points sharing one transformation:
+Three entry points sharing one transformation, ``warehouse.star_join``
+(the fact star join):
 
 - ``fact_increment(spark, sf_dir, from_date_key)``: the batch delta —
   only transactions with date_key > watermark flow through the same
@@ -65,39 +66,14 @@ def stream_fact_into(
     same idempotent partition semantics.  Returns the StreamingQuery.
     """
     spark = txn_stream.sparkSession
-    acct = spark.read.parquet(os.path.join(dims_dir, "dim_account"))
-    cust_dim = spark.read.parquet(os.path.join(dims_dir, "dim_customer"))
-    loc = spark.read.parquet(os.path.join(dims_dir, "dim_location"))
-    merch = spark.read.parquet(os.path.join(dims_dir, "dim_merchant"))
-
-    cust = cust_dim.select(
-        "customer_key",
-        F.col("customer_id_source").alias("_cid"),
-        F.col("nation_name").alias("_cust_nation"),
+    acct, cust, loc, merch = (
+        spark.read.parquet(os.path.join(dims_dir, name))
+        for name in ("dim_account", "dim_customer", "dim_location", "dim_merchant")
     )
-    locs = loc.select("location_key", F.col("nation_name").alias("_loc_nation"))
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        fact = (
-            batch.join(
-                F.broadcast(acct), batch.l_orderkey == acct.account_id_source
-            )
-            .where(F.col("l_shipdate") >= F.col("account_open_date"))
-            .join(F.broadcast(cust), F.col("customer_id_source") == F.col("_cid"))
-            .join(F.broadcast(locs), F.col("_cust_nation") == F.col("_loc_nation"))
-            .join(F.broadcast(merch), batch.l_partkey == merch.merchant_id_source)
-            .select(
-                F.date_format("l_shipdate", "yyyyMMdd").cast("int").alias("date_key"),
-                "customer_key",
-                "account_key",
-                "merchant_key",
-                "location_key",
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                    "amount_spent"
-                ),
-                F.lit(1).cast("int").alias("transaction_count"),
-            )
-        )
-        append_increment(fact, fact_dir)
+        # the persisted dim_customer has no nation id: join on the name
+        fact = WH.star_join(batch, acct, cust, loc, merch, "nation_name")
+        append_increment(fact.select(*WH.FACT_COLUMNS), fact_dir)
 
     return _start_sink(txn_stream, handle, checkpoint_dir)

@@ -11,10 +11,14 @@ Reference parity map (reference etl.py):
   dim_date             ≙ Dim_Date hourly calendar       (etl.py:232-270)
   fact_spending        ≙ Fact_Spending key mapping      (etl.py:307-386)
 
-Scale notes (100 TB): the fact build joins facts to dims; every dim is
-``F.broadcast``-ed so the fact table never shuffles during assembly —
-the plan is scan → N broadcast hash joins → project, one stage, no
-exchange.  Dims themselves involve at most a dim-sized shuffle
+The fact star join is written once, in ``star_join``: ``star`` feeds it
+the built dims for fact_spending and the analytics, and
+plans/incremental.stream_fact_into feeds it the persisted dims.
+
+Scale notes (100 TB): ``star_join`` broadcasts every dim, so the fact
+table never shuffles during assembly — the plan is scan → N broadcast
+hash joins → project, one stage, no exchange (skew notes on
+``star_join``).  Dims themselves involve at most a dim-sized shuffle
 (distinct / window), bounded by dimension cardinality, not data volume.
 Surrogate keys default to 'rownum' for oracle parity; pass
 strategy='hash' for the shuffle-free production path.
@@ -350,19 +354,28 @@ FROM hours
 
 
 # ----------------------------------------------------------------- fact
-def fact_spending(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
-    """Fact_Spending: map natural ids to surrogate keys and keep
-    measures (etl.py:307-386).  The reference re-reads IDENTITY keys
-    from the DB and merges in pandas; here the dims are broadcast so
-    the fact scan never shuffles — one stage end-to-end.
-    Measures: amount_spent = extendedprice*(1-discount) (net spend),
-    transaction_count = 1 (etl.py:362-366).
+FACT_COLUMNS = (
+    "date_key", "customer_key", "account_key", "merchant_key",
+    "location_key", "amount_spent", "transaction_count",
+)
+
+
+def star_join(
+    txn: DataFrame, acct: DataFrame, cust: DataFrame, loc: DataFrame,
+    merch: DataFrame, nation: str,
+) -> DataFrame:
+    """The fact star join (etl.py:307-386): raw transactions ⋈ the
+    four broadcast dims.  ``cust`` and ``loc`` both carry the column
+    ``nation`` that ties a customer to its location.  Keeps every input
+    column and adds the measures (etl.py:362-366): ``date_key``,
+    ``amount_spent`` (net spend, extendedprice*(1-discount)), its exact
+    integer ``amount_cents`` and ``transaction_count`` = 1.
 
     The clean-transactions rule (l_shipdate >= account open date) is
     applied against the broadcast dim_account directly — dim_account
-    IS the clean-accounts set and carries the open date, so the fact
-    path scans the (huge) transaction table once and never re-derives
-    the account cleaning lineage.
+    IS the clean-accounts set and carries the open date, so the star
+    scans the (huge) transaction table once and never re-derives the
+    account cleaning lineage.
 
     Skew at 100 TB: broadcast joins are skew-immune (no shuffle on the
     fact key), which is why every dim here is broadcast.  If a dim
@@ -373,39 +386,51 @@ def fact_spending(spark: SparkSession, sf_dir: str, strategy: str = "rownum") ->
     this broadcast plan on the real fact path, and
     test_salted_join_spreads_hot_key proves the hot key actually
     spreads over `salt` reducers."""
-    txn = load_table(spark, sf_dir, "lineitem")
+    cust = cust.withColumnsRenamed({"customer_id_source": "_cid", nation: "_cust_nation"})
+    # raw double (no per-row round): IEEE mul is bit-identical across
+    # engines; money aggregates sum the exact integer cents, /100 at the end
+    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        txn.join(F.broadcast(acct), txn.l_orderkey == acct.account_id_source)
+        .where(F.col("l_shipdate") >= F.col("account_open_date"))
+        .join(F.broadcast(cust), F.col("customer_id_source") == F.col("_cid"))
+        .join(F.broadcast(loc), F.col("_cust_nation") == loc[nation])
+        .join(F.broadcast(merch), txn.l_partkey == merch.merchant_id_source)
+        .withColumns({
+            "date_key": W.day_date_key(F.col("l_shipdate")),
+            "amount_spent": net,
+            "amount_cents": F.round(net * 100).cast("bigint"),
+            "transaction_count": F.lit(1).cast("int"),
+        })
+    )
+
+
+def star(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
+    """The star over the built dims: transactions with their surrogate
+    keys, measures and every dim attribute the analytics read.  The
+    location joins on the nation id the customer dim keeps internally."""
     acct = dim_account(spark, sf_dir, strategy).select(
         "account_key", "account_id_source", "customer_id_source", "account_open_date"
     )
     cust = _dim_customer_ext(spark, sf_dir, strategy).select(
-        "customer_key",
-        F.col("customer_id_source").alias("cid"),
-        F.col("nation_id_source").alias("c_nation"),
+        "customer_key", "customer_id_source", "nation_id_source", "balance_tier"
     )
-    loc = dim_location(spark, sf_dir, strategy).select("location_key", "nation_id_source")
-    merch = dim_merchant(spark, sf_dir, strategy).select("merchant_key", "merchant_id_source")
+    loc = dim_location(spark, sf_dir, strategy).select(
+        "location_key", "nation_id_source", "region_scope"
+    )
+    merch = dim_merchant(spark, sf_dir, strategy).select(
+        "merchant_key", "merchant_id_source", "category"
+    )
+    txn = load_table(spark, sf_dir, "lineitem")
+    return star_join(txn, acct, cust, loc, merch, "nation_id_source")
 
-    fact = (
-        txn.join(F.broadcast(acct), txn.l_orderkey == acct.account_id_source)
-        .where(F.col("l_shipdate") >= F.col("account_open_date"))
-        .join(F.broadcast(cust), F.col("customer_id_source") == cust.cid)
-        .join(F.broadcast(loc), cust.c_nation == loc.nation_id_source)
-        .join(F.broadcast(merch), txn.l_partkey == merch.merchant_id_source)
-        .select(
-            W.day_date_key(F.col("l_shipdate")).alias("date_key"),
-            F.col("customer_key"),
-            F.col("account_key"),
-            F.col("merchant_key"),
-            F.col("location_key"),
-            # raw double (no per-row round): IEEE mul is bit-identical
-            # across engines; rounding only happens after aggregation
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "amount_spent"
-            ),
-            F.lit(1).cast("int").alias("transaction_count"),
-        )
-    )
-    return fact
+
+def fact_spending(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
+    """Fact_Spending: natural ids mapped to surrogate keys plus the
+    measures (etl.py:307-386).  The reference re-reads IDENTITY keys
+    from the DB and merges in pandas; here it is the broadcast
+    ``star_join`` keeping only the fact columns."""
+    return star(spark, sf_dir, strategy).select(*FACT_COLUMNS)
 
 
 FACT_CTES = f"""
@@ -575,12 +600,9 @@ def spend_by_day_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dashboard query exercising the fact ⋈ Dim_Date star join on
     date_key (the join shape of the reference's sql_trend,
     dashboard.py:35-44), grouped by calendar attribute."""
-    fact = fact_spending(spark, sf_dir).withColumn(
-        "amount_cents", F.round(F.col("amount_spent") * 100).cast("bigint")
-    )
     dd = dim_date_daily(spark, sf_dir)
     return (
-        fact.join(F.broadcast(dd), "date_key")
+        star(spark, sf_dir).join(F.broadcast(dd), "date_key")
         .groupBy("day_of_week", "day_name")
         .agg(
             (F.sum("amount_cents") / 100.0).alias("total_spent"),

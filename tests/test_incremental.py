@@ -58,6 +58,11 @@ def test_stream_fact_into_matches_batch(spark, sf_dir, tmp_path):
         got.agg(F.sum("transaction_count")).collect()[0][0]
         == want.agg(F.sum("transaction_count")).collect()[0][0]
     )
+    # the streamed rows are the batch rows, value for value
+    cols = list(WH.FACT_COLUMNS)
+    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
 
 
 def test_append_increment_leaves_session_conf_alone(

@@ -79,6 +79,18 @@ def test_hash_key_strategy(spark, sf_dir):
     dim = WH.dim_customer(spark, sf_dir, strategy="hash")
     n = dim.count()
     assert dim.select("customer_key").distinct().count() == n
+    # the hash keys flow through the shared star into the fact
+    fact = WH.fact_spending(spark, sf_dir, strategy="hash")
+    assert fact.where(
+        F.col("customer_key").isNull()
+        | F.col("account_key").isNull()
+        | F.col("merchant_key").isNull()
+        | F.col("location_key").isNull()
+    ).count() == 0
+    assert fact.count() == WH.clean_transactions(spark, sf_dir).count()
+    assert fact.select("customer_key").join(
+        dim.select("customer_key"), "customer_key", "left_anti"
+    ).count() == 0
 
 
 def test_spending_habits_shares_sum_to_100(spark, sf_dir):
