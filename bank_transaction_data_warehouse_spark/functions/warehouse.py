@@ -153,3 +153,22 @@ def day_date_key(d: Column) -> Column:
 
 
 DAY_DATE_KEY_SQL = "CAST(strftime({c}, '%Y%m%d') AS INTEGER)"
+
+
+# --- event measures (the activity/spend pair every event aggregate
+# reports: batch windows, sessions, the hour profile and their
+# streaming twins).  Money sums exact integer cents, / 100.0 at the end.
+
+def event_measures() -> tuple[Column, Column]:
+    return (
+        F.count("*").cast("bigint").alias("n_events"),
+        (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
+            "total_value"
+        ),
+    )
+
+
+EVENT_MEASURES_SQL = (
+    "count(*) AS n_events, "
+    "sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value"
+)

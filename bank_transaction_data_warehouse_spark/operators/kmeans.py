@@ -66,7 +66,9 @@ def assign_clusters(
     chain — CLAUDE.md self-join-speed invariant applies to argmins
     too); ties resolve to the smallest cid via the struct's second
     field.  The whole candidate array is ONE parsed SQL expression
-    (see _sq_dist_micros_sql)."""
+    (see _sq_dist_micros_sql).  A stateless zero-shuffle projection, so
+    it routes a live embedding stream unchanged (train offline, serve
+    online)."""
     if not centroids:
         raise ValueError("assign_clusters needs at least one centroid")
     structs = ", ".join(

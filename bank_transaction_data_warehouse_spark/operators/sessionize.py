@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bank_transaction_data_warehouse_spark.functions.warehouse import event_measures
+
 
 def sessionize(
     events: DataFrame,
@@ -44,10 +46,8 @@ def sessionize(
 def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-session aggregates: bounds, event count, total value."""
     s = sessionize(events, gap_minutes=gap_minutes)
-    cents = F.round(F.col("value") * 100).cast("bigint")
     return s.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
-        F.count("*").cast("bigint").alias("n_events"),
-        (F.sum(cents) / 100.0).alias("total_value"),
+        *event_measures(),
     )

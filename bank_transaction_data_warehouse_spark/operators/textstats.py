@@ -23,7 +23,9 @@ def chunk_docs(
     once, posexplode the stride-stepped start offsets, slice the
     materialized token array per chunk.  Scan-only, zero shuffles;
     output rows ∝ input tokens / stride (linear at any corpus size).
-    Empty/whitespace-only texts are dropped (no tokens → no chunks)."""
+    Empty/whitespace-only texts are dropped (no tokens → no chunks).
+    Stateless, so it runs unchanged on a document stream (append mode,
+    no watermark, no state store)."""
     if chunk <= 0 or stride <= 0:
         raise ValueError(f"chunk={chunk} and stride={stride} must be positive")
     t = docs.where(F.length(F.trim(text_col)) > 0).select(

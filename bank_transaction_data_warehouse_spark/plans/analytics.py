@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bank_transaction_data_warehouse_spark.functions import warehouse as W
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
 from bank_transaction_data_warehouse_spark.plans.warehouse import FACT_CTES
 
@@ -186,8 +187,6 @@ FROM per_cat
 def weekend_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekend vs weekday spend (Dim_Date Is_Weekend semantics applied
     at the fact's day grain)."""
-    from bank_transaction_data_warehouse_spark.functions import warehouse as W
-
     f = WH.star(spark, sf_dir)
     dow = W.vn_day_of_week(F.col("l_shipdate"))
     return (
@@ -213,16 +212,12 @@ def hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Dim_Date Hour_Of_Day analytics; events carry the clock)."""
     ev = WH.load_table(spark, sf_dir, "events")
     return ev.groupBy(F.hour("ts").cast("int").alias("hour_of_day")).agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
-            "total_value"
-        ),
+        *W.event_measures()
     )
 
 
-ORACLE["hourly_profile"] = """
-SELECT CAST(hour(ts) AS INTEGER) AS hour_of_day, count(*) AS n_events,
-       sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
+ORACLE["hourly_profile"] = f"""
+SELECT CAST(hour(ts) AS INTEGER) AS hour_of_day, {W.EVENT_MEASURES_SQL}
 FROM events GROUP BY 1
 """
 

@@ -2098,9 +2098,9 @@ _PII_ID = r"\b[0-9]{9,12}\b"
 
 def pii_scrub_frame(docs: DataFrame) -> DataFrame:
     """Frame-level PII scrub body — STATELESS projection, so the exact
-    same plan serves batch (pii_scrub below) and the continuous ingest
-    path (streaming/jobs.pii_scrub_stream): the Kappa guarantee the
-    chunk/quality-gate ops already give."""
+    same plan serves batch (pii_scrub below) and, applied to a
+    read_doc_stream frame, the continuous ingest path: the Kappa
+    guarantee the chunk/quality-gate ops already give."""
     t0 = F.col("text")
     n_emails = F.regexp_count(t0, F.lit(_PII_EMAIL))
     t1 = F.regexp_replace(t0, _PII_EMAIL, "<EMAIL>")

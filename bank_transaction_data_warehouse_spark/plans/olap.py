@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bank_transaction_data_warehouse_spark.functions.warehouse import (
+    EVENT_MEASURES_SQL,
+    event_measures,
+)
 from bank_transaction_data_warehouse_spark.operators.sessionize import session_stats
 from bank_transaction_data_warehouse_spark.sources.tables import load_table
 
@@ -187,33 +191,49 @@ FROM (
 """
 
 
-def events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregate by event type — the batch twin
-    of streaming/spend_stream (same F.window expression runs under
-    readStream with a watermark)."""
-    # explicit null-ts drop: F.window() silently excludes null
-    # timestamps; the oracle must share the policy visibly
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+def per_window(events: DataFrame, window: str, keys, *measures) -> DataFrame:
+    """The one tumbling-window aggregate: ``measures`` per (``window``
+    bucket of ``ts``, ``keys``), as window_start, the keys, then the
+    measures.  Batch queries and their streaming twins call it; a
+    stream sets its watermark on ``events`` first."""
+    agg = events.groupBy(F.window("ts", window).alias("w"), *keys).agg(*measures)
+    return agg.select(F.col("w.start").alias("window_start"), *agg.columns[1:])
+
+
+def rank_per_window(counts: DataFrame, topk: int) -> DataFrame:
+    """The one trending rank: the top ``topk`` event types per
+    window_start by n_events, ties broken by event_type ASC.  The rank
+    window partitions by window_start — bounded per-hour cardinality,
+    never a global (empty-partitionBy) window."""
+    ranked = counts.withColumn(
+        "rnk",
+        F.row_number().over(
+            Window.partitionBy("window_start").orderBy(
+                F.col("n_events").desc(), F.col("event_type")
+            )
+        ),
+    )
+    return ranked.where(F.col("rnk") <= topk).select(
+        "window_start",
+        "event_type",
+        "n_events",
+        F.col("rnk").cast("int").alias("rnk"),
     )
 
 
-ORACLE["events_windowed"] = """
+def events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour window aggregate by event type — the batch twin
+    of streaming/jobs.spend_stream (the same per_window body runs under
+    readStream with a watermark)."""
+    # explicit null-ts drop: the window bucketing silently excludes
+    # null timestamps; the oracle must share the policy visibly
+    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    return per_window(ev, "1 hour", ["event_type"], *event_measures())
+
+
+ORACLE["events_windowed"] = f"""
 SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-       count(*) AS n_events, sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
+       {EVENT_MEASURES_SQL}
 FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 """
 
@@ -228,7 +248,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_stats(ev, gap_minutes=30)
 
 
-ORACLE["events_sessionize"] = """
+ORACLE["events_sessionize"] = f"""
 WITH flagged AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -245,7 +265,7 @@ sess AS (
   FROM flagged
 )
 SELECT user_id, session_seq, min(ts) AS session_start, max(ts) AS session_end,
-       count(*) AS n_events, sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
+       {EVENT_MEASURES_SQL}
 FROM sess GROUP BY 1, 2
 """
 
@@ -1223,33 +1243,16 @@ SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 2000
 
 def trending_topk(spark: SparkSession, sf_dir: str, topk: int = 3) -> DataFrame:
     """Trending event types: tumbling 1-hour windows → per-window
-    top-k types by count, deterministic tie-break (count DESC,
-    event_type ASC).  The rank window partitions by window_start —
-    bounded per-hour cardinality, never a global (empty-partitionBy)
-    window; at 100 TB the rank runs over |event_types| rows per hour
-    bucket.  Streaming twin: streaming/jobs.trending_counts_stream
-    maintains the windowed counts continuously; this body's rank
-    stage reads them (tests assert equality)."""
+    top-k types by count (rank_per_window).  At 100 TB the rank runs
+    over |event_types| rows per hour bucket.  Streaming twin:
+    streaming/jobs.maintain_trending_counts maintains the same
+    per_window counts continuously and read_trending_topk ends in the
+    same rank_per_window (tests assert equality)."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    counts = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(F.count("*").cast("bigint").alias("n_events"))
-    ranked = counts.select(
-        F.col("w.start").alias("window_start"), "event_type", "n_events"
-    ).withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("window_start").orderBy(
-                F.col("n_events").desc(), F.col("event_type")
-            )
-        ),
+    counts = per_window(
+        ev, "1 hour", ["event_type"], F.count("*").cast("bigint").alias("n_events")
     )
-    return ranked.where(F.col("rnk") <= topk).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        F.col("rnk").cast("int").alias("rnk"),
-    )
+    return rank_per_window(counts, topk)
 
 
 ORACLE["trending_topk"] = """

@@ -2,13 +2,9 @@
 sources/jsonl.py (the reference's upstream systems export CSV as often
 as they expose JDBC; etl.py's pandas read_sql is the analog step).
 
-Same philosophy: PERMISSIVE parse with an explicit corrupt-record
-column, split into (clean, quarantine) so a 100 TB load neither dies
-on the first ragged row (FAILFAST) nor silently drops data
-(DROPMALFORMED).  The same Spark caveat applies as for JSON — the
-internal corrupt-record column cannot be filtered in the un-cached
-lazy plan — so the parsed frame is cached and the parse runs ONCE for
-both halves.
+The split itself is jsonl.read_quarantine — the same PERMISSIVE
+parse, corrupt-record column, parse-once cache and (clean, quarantine)
+pair; only the format and the options below differ.
 
 CSV-specific knobs encoded here:
 - ``header``: skips the header line on every FILE (not just the first
@@ -20,10 +16,9 @@ CSV-specific knobs encoded here:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-CORRUPT_COL = "_corrupt_record"
+from bank_transaction_data_warehouse_spark.sources.jsonl import read_quarantine
 
 
 def read_csv_quarantine(
@@ -33,23 +28,7 @@ def read_csv_quarantine(
     header: bool = True,
     sep: str = ",",
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (clean, quarantine): clean rows parsed to ``schema``,
-    quarantine rows as (raw_record string) for audit/replay.  The
-    parse runs once (cached) for both halves."""
-    full_schema = StructType(
-        list(schema.fields) + [StructField(CORRUPT_COL, StringType())]
+    """CSV (clean, quarantine) split; see jsonl.read_quarantine."""
+    return read_quarantine(
+        spark, path, schema, "csv", header=str(header).lower(), sep=sep
     )
-    raw = (
-        spark.read.schema(full_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("header", str(header).lower())
-        .option("sep", sep)
-        .csv(path)
-        .cache()
-    )
-    clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    quarantine = raw.where(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_record")
-    )
-    return clean, quarantine

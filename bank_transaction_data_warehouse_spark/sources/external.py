@@ -2,7 +2,9 @@
 extracts from a relational DB over a driver connection (etl.py:20-50)
 and a CSV lookup (etl.py:52-56).  Spark-native equivalents:
 
-- CSV/JSON: schema-explicit readers (no runaway inference jobs).
+- CSV lookups: schema-explicit reader (no runaway inference job);
+  JSON lines and CSV drops with bad rows go through the quarantine
+  split of sources/jsonl.py.
 - JDBC: partitioned parallel extraction — the distributed replacement
   for the reference's single pandas.read_sql connection.  Config
   builder only in this environment (no DB/driver in the container);
@@ -26,10 +28,6 @@ def read_csv_lookup(
         .option("delimiter", delimiter)
         .csv(path)
     )
-
-
-def read_json_lines(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.schema(schema).json(path)
 
 
 def jdbc_reader(

@@ -30,10 +30,12 @@ from pyspark.sql.types import StringType, StructField, StructType
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_jsonl_quarantine(
-    spark: SparkSession, path: str, schema: StructType
+def read_quarantine(
+    spark: SparkSession, path: str, schema: StructType, fmt: str, **options: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (clean, quarantine): clean rows parsed to ``schema``,
+    """The one quarantine split, for any PERMISSIVE text format
+    (``fmt`` "json" or "csv", format ``options`` passed through).
+    Returns (clean, quarantine): clean rows parsed to ``schema``,
     quarantine rows as (raw_record string) for audit/replay.  The
     parse runs once (cached) for both halves."""
     full_schema = StructType(
@@ -43,7 +45,9 @@ def read_jsonl_quarantine(
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
+        .options(**options)
+        .format(fmt)
+        .load(path)
         .cache()
     )
     clean = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
@@ -51,3 +55,10 @@ def read_jsonl_quarantine(
         F.col(CORRUPT_COL).alias("raw_record")
     )
     return clean, quarantine
+
+
+def read_jsonl_quarantine(
+    spark: SparkSession, path: str, schema: StructType
+) -> tuple[DataFrame, DataFrame]:
+    """JSON-lines (clean, quarantine) split; see read_quarantine."""
+    return read_quarantine(spark, path, schema, "json")

@@ -7,9 +7,16 @@ the same aggregates continuously.  Design:
   stateful sessionization → sink (memory in tests; parquet/Kafka in
   production)
 
-The transformation bodies are shared with the batch plans (same
-F.window expression as plans/olap.events_windowed), so batch backfill
-and the live path cannot drift — the Kappa-style guarantee.
+The transformation bodies are the batch plans' own, written once:
+plans/olap.per_window (the tumbling-window aggregate),
+plans/olap.rank_per_window (the trending rank) and
+functions/warehouse.event_measures (n_events, total_value), so batch
+backfill and the live path cannot drift — the Kappa-style guarantee.
+A stateless batch body (operators/textstats.chunk_docs,
+operators/kmeans.assign_clusters, plans/corpus.pii_scrub_frame) runs
+on a stream unchanged and needs no wrapper here.  This module keeps
+only what a stream adds: sources, watermarks, sinks and the two
+replay protocols below.
 
 Scale notes: windowed aggregation state is bounded by the watermark
 horizon x group cardinality; sessionization state by active users.
@@ -52,6 +59,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from bank_transaction_data_warehouse_spark.functions.warehouse import event_measures
+from bank_transaction_data_warehouse_spark.plans.olap import per_window, rank_per_window
 
 EVENT_SCHEMA = StructType(
     [
@@ -152,21 +162,8 @@ def spend_stream(
     """Continuous tumbling-window spend/activity aggregate by event
     type.  Watermark bounds state: windows older than (max ts -
     watermark) finalize and evict."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
-                "total_value"
-            ),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return per_window(
+        events.withWatermark("ts", watermark), window, ["event_type"], *event_measures()
     )
 
 
@@ -175,18 +172,14 @@ def streaming_sessionizer(
 ) -> DataFrame:
     """Session windows per user via the built-in session_window
     (gap-closed windows) — state-bounded by the watermark.  The batch
-    twin is operators/sessionize.py; both define a session as events
-    separated by < gap."""
+    twin is operators/sessionize.session_stats; both close a session
+    after a gap LONGER than ``gap_minutes`` (a gap of exactly
+    ``gap_minutes`` stays in one session)."""
     gap = f"{gap_minutes} minutes"
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
-                "total_value"
-            ),
-        )
+        .agg(*event_measures())
         .select(
             F.col("user_id"),
             F.col("sw.start").alias("session_start"),
@@ -257,18 +250,8 @@ def spend_stream_by_tier(
     the nightly SCD2 merge) is picked up without restarting the
     query.  The dim side is broadcast — the stream never shuffles."""
     dim = F.broadcast(customer_dim.select(F.col("c_custkey").alias("user_id"), "tier"))
-    return (
-        events.withWatermark("ts", watermark)
-        .join(dim, "user_id")
-        .groupBy(F.window("ts", window).alias("w"), "tier")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias(
-                "total_value"
-            ),
-        )
-        .select(F.col("w.start").alias("window_start"), "tier", "n_events", "total_value")
-    )
+    enriched = events.withWatermark("ts", watermark).join(dim, "user_id")
+    return per_window(enriched, window, ["tier"], *event_measures())
 
 
 DOC_SCHEMA = StructType(
@@ -292,19 +275,6 @@ def read_doc_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
-def chunk_stream(docs: DataFrame, chunk: int = 64, stride: int = 48) -> DataFrame:
-    """Continuous document chunking: the streaming twin of
-    operators/textstats.chunk_docs.  The operator is STATELESS (pure
-    per-row generator — tokenize, stride offsets, slice), so the exact
-    batch plan body runs unchanged on a stream: no watermark, no
-    state store, append-mode safe at any rate.  Batch backfill and the
-    live path share one code path (Kappa guarantee), asserted
-    bit-equal in tests/test_streaming.py."""
-    from bank_transaction_data_warehouse_spark.operators.textstats import chunk_docs
-
-    return chunk_docs(docs, chunk=chunk, stride=stride)
-
-
 def quality_gate_stream(docs: DataFrame, min_flags: int = 2) -> DataFrame:
     """Continuous corpus quality gate: score each arriving document
     with the same quality_flags expression the batch selection
@@ -319,23 +289,6 @@ def quality_gate_stream(docs: DataFrame, min_flags: int = 2) -> DataFrame:
     return docs.withColumn("q_flags", quality_flags(F.col("text"))).where(
         F.col("q_flags") >= min_flags
     )
-
-
-def kmeans_assign_stream(
-    vecs: DataFrame, codebook: dict[int, list[float]]
-) -> DataFrame:
-    """Online vector routing: assign each arriving embedding to its
-    nearest trained centroid — 'train offline, serve online'.  The
-    codebook ships as plan literals (operators/kmeans.assign_clusters),
-    so assignment is a stateless zero-shuffle projection that runs
-    identically on a stream; at scale this is the continuous IVF
-    indexing path (each vector lands in its inverted list's
-    partition)."""
-    from bank_transaction_data_warehouse_spark.operators.kmeans import (
-        assign_clusters,
-    )
-
-    return assign_clusters(vecs, codebook)
 
 
 def dedup_vs_corpus_stream(
@@ -427,18 +380,6 @@ def txn_alert_join_stream(
     return t.join(a, cond, how).select(
         "txn_id", "alert_id", "user_id", "txn_ts", "alert_ts", "txn_value"
     )
-
-
-def pii_scrub_stream(docs: DataFrame) -> DataFrame:
-    """Continuous PII hygiene: the batch pii_scrub projection
-    (plans/corpus.pii_scrub_frame) unchanged on a document stream —
-    STATELESS (pure regexp projection), append-mode safe, no
-    watermark, no state store.  Redaction belongs at INGEST time in a
-    real pipeline: scrub once when the crawl drop lands, not on every
-    downstream read."""
-    from bank_transaction_data_warehouse_spark.plans.corpus import pii_scrub_frame
-
-    return pii_scrub_frame(docs)
 
 
 def maintain_band_index(
@@ -584,17 +525,11 @@ def maintain_trending_counts(
     StreamingQuery."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        counts = (
-            batch.where(F.col("ts").isNotNull())
-            .withColumn("drop_id", _drop_id())
-            .groupBy(F.window("ts", window).alias("w"), "event_type", "drop_id")
-            .agg(F.count("*").cast("bigint").alias("n_events"))
-            .select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
-                "drop_id",
-            )
+        counts = per_window(
+            batch.where(F.col("ts").isNotNull()).withColumn("drop_id", _drop_id()),
+            window,
+            ["event_type", "drop_id"],
+            F.count("*").cast("bigint").alias("n_events"),
         )
         _overwrite_drops(counts, counts_dir)
 
@@ -606,25 +541,11 @@ def read_trending_topk(
 ) -> DataFrame:
     """Rank consumer over the stream-maintained counts table:
     re-aggregate across drops (counts are additive), then the same
-    per-window top-k body as the batch trending_topk query."""
-    from pyspark.sql import Window
-
+    per-window top-k body (rank_per_window) as the batch trending_topk
+    query."""
     counts = (
         spark.read.parquet(counts_dir)
         .groupBy("window_start", "event_type")
         .agg(F.sum("n_events").cast("bigint").alias("n_events"))
     )
-    ranked = counts.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("window_start").orderBy(
-                F.col("n_events").desc(), F.col("event_type")
-            )
-        ),
-    )
-    return ranked.where(F.col("rnk") <= topk).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        F.col("rnk").cast("int").alias("rnk"),
-    )
+    return rank_per_window(counts, topk)

@@ -44,13 +44,28 @@ def test_streaming_sessionizer_runs(spark, event_drop_dir):
     assert all(r.n_events >= 1 for r in rows)
 
 
-def test_streaming_sessionizer_agrees_with_batch(spark, sf_dir, event_drop_dir):
+def _session_rows(frame):
+    return sorted(
+        map(
+            tuple,
+            frame.select("user_id", "session_start", "n_events", "total_value")
+            .collect(),
+        )
+    )
+
+
+def test_streaming_sessionizer_agrees_with_batch(spark, sf_dir, event_drop_dir, tmp_path):
     """session_window (streaming) and the lag-window batch sessionizer
     define sessions identically (gap-closed); their per-user session
-    counts must agree."""
+    counts and their per-session (start, n_events, total_value) rows
+    must agree.  A gap of exactly ``gap_minutes`` stays in one session
+    on both sides; a longer gap splits."""
+    import datetime as dt
+
     from bank_transaction_data_warehouse_spark.operators.sessionize import (
         session_stats,
     )
+    from bank_transaction_data_warehouse_spark.streaming.jobs import EVENT_SCHEMA
 
     stream = read_event_stream(spark, event_drop_dir)
     got = run_to_memory(
@@ -60,13 +75,38 @@ def test_streaming_sessionizer_agrees_with_batch(spark, sf_dir, event_drop_dir):
         r.user_id: r.n for r in
         got.groupBy("user_id").count().withColumnRenamed("count", "n").collect()
     }
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = spark.read.schema(EVENT_SCHEMA).parquet(os.path.join(sf_dir, "events.parquet"))
+    batch = session_stats(ev, gap_minutes=30)
     batch_counts = {
         r.user_id: r.n for r in
-        session_stats(ev, gap_minutes=30)
-        .groupBy("user_id").count().withColumnRenamed("count", "n").collect()
+        batch.groupBy("user_id").count().withColumnRenamed("count", "n").collect()
     }
     assert stream_counts == batch_counts
+    assert _session_rows(got) == _session_rows(batch)
+
+    # pinned boundary: 30 min apart = one session, then a 60 min gap
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    pinned = spark.createDataFrame(
+        [
+            (1, t0, 7, "purchase", 1.0, None),
+            (2, t0 + dt.timedelta(minutes=30), 7, "purchase", 2.0, None),
+            (3, t0 + dt.timedelta(minutes=90), 7, "purchase", 4.0, None),
+        ],
+        EVENT_SCHEMA,
+    )
+    d = str(tmp_path / "pinned_events")
+    pinned.coalesce(1).write.parquet(d)
+    pinned_stream = run_to_memory(
+        spark,
+        streaming_sessionizer(read_event_stream(spark, d), gap_minutes=30),
+        "sessions_pinned_t",
+    )
+    want = [
+        (7, t0, 2, 3.0),
+        (7, t0 + dt.timedelta(minutes=90), 1, 4.0),
+    ]
+    assert _session_rows(pinned_stream) == want
+    assert _session_rows(session_stats(pinned, gap_minutes=30)) == want
 
 
 def test_dedup_stream_drops_redelivered_events(spark, tmp_path):
@@ -147,7 +187,6 @@ def test_chunk_stream_matches_batch(spark, sf_dir, tmp_path):
     from bank_transaction_data_warehouse_spark.operators.textstats import chunk_docs
     from bank_transaction_data_warehouse_spark.sources.tables import load_table
     from bank_transaction_data_warehouse_spark.streaming.jobs import (
-        chunk_stream,
         read_doc_stream,
         run_append_to_memory,
     )
@@ -161,7 +200,7 @@ def test_chunk_stream_matches_batch(spark, sf_dir, tmp_path):
         map(
             tuple,
             run_append_to_memory(
-                spark, chunk_stream(stream), "chunk_stream_t"
+                spark, chunk_docs(stream), "chunk_stream_t"
             ).collect(),
         )
     )
@@ -222,13 +261,13 @@ def test_kmeans_assign_stream_matches_batch(spark, sf_dir, tmp_path):
     )
 
     from bank_transaction_data_warehouse_spark.operators.kmeans import (
+        assign_clusters,
         collect_centroids,
         kmeans_fit,
         mean_stats,
     )
     from bank_transaction_data_warehouse_spark.sources.tables import load_table
     from bank_transaction_data_warehouse_spark.streaming.jobs import (
-        kmeans_assign_stream,
         run_append_to_memory,
     )
 
@@ -253,14 +292,10 @@ def test_kmeans_assign_stream_matches_batch(spark, sf_dir, tmp_path):
         .select("vec_id", "embedding")
     )
     out = run_append_to_memory(
-        spark, kmeans_assign_stream(stream, codebook).select("vec_id", "cid"),
+        spark, assign_clusters(stream, codebook).select("vec_id", "cid"),
         "kmeans_assign_t",
     )
     got = {r.vec_id: r.cid for r in out.collect()}
-    from bank_transaction_data_warehouse_spark.operators.kmeans import (
-        assign_clusters,
-    )
-
     want = {
         r.vec_id: r.cid for r in assign_clusters(embs, codebook).collect()
     }
@@ -354,7 +389,6 @@ def test_pii_scrub_stream_matches_batch(spark, tmp_path):
     batch scrub over the same (PII-laden) documents."""
     from bank_transaction_data_warehouse_spark.plans.corpus import pii_scrub_frame
     from bank_transaction_data_warehouse_spark.streaming.jobs import (
-        pii_scrub_stream,
         read_doc_stream,
         run_append_to_memory,
     )
@@ -372,7 +406,7 @@ def test_pii_scrub_stream_matches_batch(spark, tmp_path):
     docs.coalesce(1).write.parquet(d)
 
     stream = read_doc_stream(spark, d)
-    out = pii_scrub_stream(stream)
+    out = pii_scrub_frame(stream)
     assert out.isStreaming
     got = {
         tuple(r)
