@@ -18,7 +18,6 @@ from bank_transaction_data_warehouse_spark.functions.text import (
     token_count_ws,
 )
 from bank_transaction_data_warehouse_spark.functions.vectors import (
-    cosine_similarity,
     dot,
     l2_norm,
 )
@@ -39,7 +38,6 @@ __all__ = [
     "stopword_ratio",
     "token_count_bpeish",
     "token_count_ws",
-    "cosine_similarity",
     "dot",
     "l2_norm",
 ]

@@ -11,7 +11,6 @@ pandas_udf, port to built-ins if the hot path demands it.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
@@ -22,9 +21,3 @@ def token_count_pd(text: pd.Series) -> pd.Series:
     pandas twin of functions.text.token_count_ws."""
     return text.fillna("").str.split().str.len().astype("int32")
 
-
-def bpe_proxy_tokens(text: Column) -> Column:
-    """Example composition point: call-site looks identical to the
-    JVM-side builders, so swapping a real tokenizer in later is a
-    one-line change."""
-    return token_count_pd(text)

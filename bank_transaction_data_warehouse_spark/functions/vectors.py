@@ -1,8 +1,28 @@
-"""Vector math over array<float> columns — built-in higher-order
-functions (zip_with / aggregate), fully JVM-side.  This is the
-brute-force kernel under the ANN operators; at 100 TB scale the
-LSH-bucketed variant bounds the candidate set and this kernel scores
-only within buckets.
+"""Vector math over array<float> embedding columns: the one module that
+renders a vector fold.  Every embedding dot product, norm, squared
+distance and codebook arg-best in the package is built here, in one
+of three forms:
+
+- Column builders for folds between two array columns (`dot`,
+  `sum_sq`, `l2_norm`): built-in zip_with / aggregate higher-order
+  functions, fully JVM-side.
+- SQL-text renderers for folds against literal model parameters (LSH
+  planes, IVF / label centroids, kmeans / PQ codebooks): `lit_array_sql`,
+  `dot_lit_sql`, `sq_dist_micros_sql`, `nearest_dot_sql`,
+  `nearest_l2_sql`.  The caller parses the text with ONE F.expr: a
+  k x dim literal tree through the Column API costs hundreds of py4j
+  round trips per plan build (~0.5-1 s for k=8 x 64 dims, ~4 s for
+  the PQ codebooks), one parse costs milliseconds.
+- `cosine_score_pairs`, the Arrow kernel that verifies candidate pairs
+  (semantic_dedup's one Python stage).
+
+Bit-exactness (the driver value-hashes against DuckDB at 12
+significant digits): every fold is a sequential left fold in element
+order, ``((0 + p0) + p1) + ...``, as the oracles' list_sum over
+list_transform is; products are float64, after an exact float32
+widening; double literals render via repr, which round-trips exactly
+through Java's correctly-rounded parse.  So a Column fold, its text
+rendering and the Arrow kernel agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -10,8 +30,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+MICROS = 1_000_000
+
 
 def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -19,14 +42,13 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sum_sq(a: Column) -> Column:
+    """Sum of squares in float64; > 0 iff the l2 norm is > 0."""
+    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
+
+
 def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return F.sqrt(sum_sq(a))
 
 
 # NOTE (measured, sf0.1, 787k candidate pairs): statically unrolling
@@ -34,20 +56,64 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 # (31.4s vs 7.4s) — the ~260-node expression tree trips codegen's
 # method-size limits and falls back to interpreted evaluation.  Static
 # unrolling only wins for SMALL arithmetic families (see the MinHash
-# k-family).  The scaling lever for pair scoring is instead: compute
-# l2 norms once per VECTOR before the candidate join (3 folds/pair ->
-# 1), which is bit-identical and cut embedding_dedup 21.7s -> 7.4s.
+# k-family).  The scaling lever for pair and search scoring is
+# instead: compute l2 norms once per VECTOR before the candidate join
+# (3 folds/pair -> 1), which is bit-identical and cut embedding_dedup
+# 21.7s -> 7.4s.  The Arrow kernel below is not a general
+# replacement: at sf0.1 on 4 cores it took embedding_dedup 3.5 -> 2.1 s
+# but slowed every cosine search (ann_cosine_topk 0.55 -> 0.86 s) and
+# the small recall sample (ann_recall_report 0.95 -> 1.5 s).
 
 
-# DuckDB twins (the oracle): list_* lambda forms.
-DOT_SQL = "list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
-NORM_SQL = "sqrt(list_sum(list_transform({a}, x -> x * x)))"
+def lit_array_sql(vec) -> str:
+    """A literal array<double>, each value rendered round-trip exact."""
+    return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vec) + ")"
 
 
-def cosine_sql(a: str, b: str) -> str:
+def dot_lit_sql(vec_sql: str, cvec) -> str:
+    """Dot product of a vector expression with a literal vector."""
     return (
-        f"({DOT_SQL.format(a=a, b=b)}) / "
-        f"(({NORM_SQL.format(a=a)}) * ({NORM_SQL.format(a=b)}))"
+        f"aggregate(zip_with({vec_sql}, {lit_array_sql(cvec)},"
+        " (a, b) -> CAST(a AS DOUBLE) * b), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
+def sq_dist_micros_sql(vec_sql: str, other_sql: str) -> str:
+    """Squared L2 distance between two vector expressions, rounded to
+    an exact int64 count of millionths (the kmeans / PQ distance
+    domain, so cross-engine sums and ties are integer-exact)."""
+    return (
+        f"CAST(round(aggregate(zip_with({vec_sql}, {other_sql},"
+        " (x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)),"
+        f" CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) * {MICROS}) AS BIGINT)"
+    )
+
+
+def _argmin_sql(scores) -> str:
+    """The cid of the smallest score over (cid, score_sql) pairs, ties
+    to the smallest cid: one array_sort over (score, cid) structs, so
+    each score fold appears in the plan exactly once (a when/otherwise
+    chain repeats earlier scores: exponential expression blow-up,
+    ~12 s of analysis + codegen at k=10)."""
+    structs = ", ".join(
+        f"named_struct('dm', {s}, 'cid', {int(cid)})" for cid, s in scores
+    )
+    return f"array_sort(array({structs}))[0].cid"
+
+
+def nearest_l2_sql(vec_sql: str, codebook) -> str:
+    """The cid of the (cid, centroid) codeword at the smallest
+    micro-rounded squared L2 distance, ties to the smallest cid."""
+    return _argmin_sql(
+        (cid, sq_dist_micros_sql(vec_sql, lit_array_sql(c))) for cid, c in codebook
+    )
+
+
+def nearest_dot_sql(vec_sql: str, codebook) -> str:
+    """The cid of the (cid, centroid) codeword with the largest dot
+    product, ties to the smallest cid."""
+    return _argmin_sql(
+        (cid, f"-({dot_lit_sql(vec_sql, c)})") for cid, c in codebook
     )
 
 
@@ -70,16 +136,19 @@ def cosine_score_pairs(
     casts the flat buffer float32 → float64 — an EXACT widening, so
     the products match a JVM-side `cast("double")` bit-for-bit.
 
-    BIT-EXACT contract (driver value-hashes vs DuckDB at 12
-    significant digits): accumulation is column-by-column
+    BIT-EXACT contract: accumulation is column-by-column
     (``acc += a[:, j] * b[:, j]``) — sequential over dims, vectorized
-    over pairs — reproducing the HOF/list_sum left fold
-    ``((0 + p0) + p1) + ...`` in IEEE float64 exactly.  ``np.dot`` /
-    BLAS pairwise summation would drift the 12th significant digit
-    and flip threshold-boundary pairs.
+    over pairs — reproducing the `dot` left fold in IEEE float64
+    exactly.  ``np.dot`` / BLAS pairwise summation would drift the
+    12th significant digit and flip threshold-boundary pairs.
 
-    Scale: the one sanctioned Python stage in the dedup family —
-    candidate GENERATION stays JVM-side (cluster buckets +
+    Every vector in a batch, on both sides, must be non-null and as
+    long as the batch's first one; otherwise the kernel raises
+    ValueError naming the lengths, since reshaping a ragged flat
+    buffer would pair elements of different rows and return a wrong
+    score.
+
+    Scale: candidate GENERATION stays JVM-side (cluster buckets +
     blocked_self_pairs bound the pair count); only the bounded
     verify-kernel arithmetic crosses into Arrow, and it is
     memory-bandwidth-bound, not interpreter-bound.  Measured sf0.1
@@ -101,14 +170,21 @@ def cosine_score_pairs(
             n = b.num_rows
             if n == 0:
                 continue
-
-            def mat(name: str) -> "np.ndarray":
-                col = b.column(in_names.index(name))
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                return flat.astype(np.float64).reshape(n, -1)
-
-            a = mat(v1)
-            c = mat(v2)
+            cols = [b.column(in_names.index(v)) for v in (v1, v2)]
+            lens = [c.value_lengths().to_numpy(zero_copy_only=False) for c in cols]
+            if any(c.null_count for c in cols) or any(
+                (x != lens[0][0]).any() for x in lens
+            ):
+                seen = {x for c in cols for x in c.value_lengths().to_pylist()}
+                raise ValueError(
+                    f"cosine_score_pairs needs non-null vectors of one length"
+                    f" per batch; {v1} / {v2} have lengths {sorted(seen, key=str)}"
+                )
+            a, c = (
+                col.flatten().to_numpy(zero_copy_only=False)
+                .astype(np.float64).reshape(n, int(lens[0][0]))
+                for col in cols
+            )
             acc = np.zeros(n, dtype=np.float64)
             for j in range(a.shape[1]):
                 acc += a[:, j] * c[:, j]

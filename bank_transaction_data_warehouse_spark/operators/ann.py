@@ -1,12 +1,16 @@
 """Similarity search and near-duplicate pairs over embedding columns
-(array<float>).  Every function here follows one of two skeletons.
+(array<float>).  Every function here follows one of two skeletons,
+and every fold it scores with (dot, norm, literal-codebook arg-best)
+comes from functions/vectors.py.
 
 Search: candidates -> score -> per-query top-k, the IVFADC shape of
 Jegou, Douze & Schmid, "Product Quantization for Nearest Neighbor
 Search" (TPAMI 2011).  The small query side is broadcast onto the
 corpus and `per_query_topk` keeps the k best per query_id (Catalyst
 turns its rank filter into a partial top-k).  `_cosine_topk` is the
-one cosine body; the searchers differ only in the candidate join:
+one cosine body: each side's norms are computed once per vector,
+before the join, and candidates score `_cosine`, dot / (na * nb).
+The searchers differ only in the candidate join:
   - brute_force_topk: cross join.  Exact; the correctness baseline,
     fine up to ~10^7 corpus x small query batches.
   - lsh_topk: equi-join on the sign-LSH bucket.  At 100 TB the corpus
@@ -15,13 +19,15 @@ one cosine body; the searchers differ only in the candidate join:
   - ivf_topk: equi-join on the probed IVF centroid (ivf_assign /
     ivf_probe).  At 100 TB the corpus is written partitioned by
     centroid_id, so a query reads nprobe partitions.
+    Assignment and probing score literal centroids as SQL text
+    (vectors.nearest_dot_sql / dot_lit_sql), one parse per build.
 plans/corpus.ann_pq_topk and ann_ivf_pq_topk are the same skeleton
 with an ADC score (product-quantized distance tables).
 
 Pairs: one normed-vector frame -> candidates -> one cosine verify.
 `_normed` drops zero-norm vectors and computes each norm ONCE, before
-any join; `_cosine_verify` scores dot / (na * nb) on candidates only.
-The candidate step has three shapes:
+any join; `_cosine_verify` scores the same `_cosine` on candidates
+only.  The candidate step has three shapes:
   - embedding_near_dups: cross join, id_1 < id_2.  O(n^2): the recall
     oracle, not a scale path.
   - embedding_near_dups_lsh: probe ⋈ code.  Each bucket code and its
@@ -47,25 +53,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.functions import vectors
-from bank_transaction_data_warehouse_spark.functions.vectors import cosine_similarity
 
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot_lit_sql(vec_sql: str, cvec) -> str:
-    """SQL text of the dot product of a (double) vector expression
-    with a literal centroid — the same zip_with/aggregate fold the
-    Column API built, rendered as text so a k-centroid family parses
-    with ONE F.expr instead of k * dim py4j round trips.  Double
-    literals via repr: round-trip exact, so scores are bit-identical
-    to the old F.lit(list) tree."""
-    arr = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in cvec)
-    return (
-        f"aggregate(zip_with({vec_sql}, array({arr}), (a, b) -> a * b),"
-        " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
 
 
 def _nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
@@ -75,10 +66,7 @@ def _nonzero_norm(df: DataFrame, vec_col: str) -> DataFrame:
     100 TB job.  Found by the adversarial fuzz gate
     (tests/test_adversarial_text.py); every oracle mirrors the filter.
     sum-of-squares > 0 <=> l2 norm > 0, one fold per vector."""
-    ss = F.aggregate(
-        F.col(vec_col), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v
-    )
-    return df.where(ss > 0)
+    return df.where(vectors.sum_sq(F.col(vec_col)) > 0)
 
 
 def _nz_vectors(df: DataFrame, vec_col: str, id_col: str, id_name: str,
@@ -100,19 +88,27 @@ def per_query_topk(scored: DataFrame, k: int, order: list) -> DataFrame:
     )
 
 
+def _cosine(va: str, vb: str, na: str, nb: str):
+    """Exact cosine from precomputed norms: dot / (na * nb)."""
+    return vectors.dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb))
+
+
 def _cosine_topk(
     c: DataFrame, q: DataFrame, k: int, on: str | None = None
 ) -> DataFrame:
     """The search skeleton's cosine body: broadcast the query side
     (query_id, qv) onto the corpus side (neighbor_id, cv) — a cross
     join, or an equi-join ``on`` a bucket / centroid column — drop
-    self matches, score exact cosine, keep the per-query top-k.  The
-    cross join stays a crossJoin, so its join type stays Cross."""
-    q = F.broadcast(q)
+    self matches, score exact cosine, keep the per-query top-k.  Each
+    side's norms are computed once per vector, before the join, as in
+    `_normed`.  The cross join stays a crossJoin, so its join type
+    stays Cross."""
+    c = c.withColumn("nc", vectors.l2_norm(F.col("cv")))
+    q = F.broadcast(q.withColumn("nq", vectors.l2_norm(F.col("qv"))))
     scored = (
         (c.crossJoin(q) if on is None else c.join(q, on))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", cosine_similarity(F.col("qv"), F.col("cv")))
+        .withColumn("cosine", _cosine("qv", "cv", "nq", "nc"))
     )
     return per_query_topk(
         scored, k, [F.col("cosine").desc(), F.col("neighbor_id")]
@@ -144,21 +140,14 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Sign-bucket code: bit p = 1 iff dot(v, plane_p) > 0."""
-    code = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.lit(list(plane)),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        code = code + F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(0)
-    return code
+def lsh_bucket(vec_col: str, planes: list[list[float]]):
+    """Sign-bucket code of the column ``vec_col``: bit p = 1 iff
+    dot(v, plane_p) > 0, as one parsed expression."""
+    bits = [
+        f"CASE WHEN {vectors.dot_lit_sql(vec_col, plane)} > 0 THEN {1 << p} ELSE 0 END"
+        for p, plane in enumerate(planes)
+    ]
+    return F.expr(" + ".join(["CAST(0 AS BIGINT)", *bits]))
 
 
 def _lsh_code(vec_col: str, dim: int, n_planes: int):
@@ -181,7 +170,7 @@ def _lsh_code(vec_col: str, dim: int, n_planes: int):
             )
         ),
     )
-    return F.coalesce(check, lsh_bucket(v, _hyperplanes(dim, n_planes)))
+    return F.coalesce(check, lsh_bucket(vec_col, _hyperplanes(dim, n_planes)))
 
 
 def lsh_topk(
@@ -233,10 +222,7 @@ def _cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     """The pair skeleton's one verify: exact cosine dot / (na * nb) on
     the candidates only, kept at >= threshold."""
     return (
-        pairs.withColumn(
-            "cosine",
-            vectors.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-        )
+        pairs.withColumn("cosine", _cosine("va", "vb", "na", "nb"))
         .where(F.col("cosine") >= threshold)
         .select("vec_id_1", "vec_id_2", "cosine")
     )
@@ -327,29 +313,15 @@ def embedding_near_dups_lsh(
 
 def _nearest_centroid(vec_col: str, centroids: list):
     """IVF coarse quantization as one expression: the id of the
-    highest-dot centroid.  Ties go to the SMALLEST cid, which is the
-    first listed when centroids are sorted by cid (ivf_topk's callers
-    sort them)."""
+    highest-dot centroid, ties to the SMALLEST cid
+    (functions/vectors.nearest_dot_sql)."""
     if not centroids:
         raise ValueError(
             "ivf_assign needs at least one centroid: an IVF index over "
             "an empty coarse quantizer is undefined (build centroids "
             "first, e.g. plans/corpus.label_centroids)"
         )
-    # argmax via one array_sort over (negated score, cid) structs, so
-    # each centroid's dot fold appears in the plan exactly once (a
-    # when/otherwise chain repeats earlier scores: exponential
-    # expression blow-up, ~12 s of analysis + codegen at k=10).  The
-    # array is rendered as SQL text and parsed by one F.expr: the
-    # k x dim literal trees through the Column API cost hundreds of
-    # py4j round trips per build (as operators/kmeans.assign_clusters).
-    v_sql = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-    entries = ", ".join(
-        f"named_struct('negs', -({_dot_lit_sql(v_sql, cvec)}),"
-        f" 'cid', CAST({int(cid)} AS INT))"
-        for cid, cvec in centroids
-    )
-    return F.expr(f"element_at(array_sort(array({entries})), 1).cid").cast("int")
+    return F.expr(vectors.nearest_dot_sql(vec_col, centroids))
 
 
 def ivf_assign(vectors: DataFrame, centroids: list, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -383,7 +355,7 @@ def ivf_probe(
     )
     # one parsed SQL expression, as in _nearest_centroid
     entries = ", ".join(
-        f"named_struct('s', {_dot_lit_sql('qv', cvec)},"
+        f"named_struct('s', {vectors.dot_lit_sql('qv', cvec)},"
         f" 'cid', CAST({int(cid)} AS INT))"
         for cid, cvec in centroids
     )

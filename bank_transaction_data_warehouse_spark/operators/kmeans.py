@@ -26,8 +26,9 @@ here on plain DataFrame ops so the driver oracle can replay it):
   as plans/corpus.label_centroids).
 
 Determinism contract: init = the k vectors with the smallest ids;
-distance = squared L2 micro-rounded to int64; ties broken by smallest
-cid.  All three rules are cheap to mirror in ANSI SQL.
+distance = squared L2 micro-rounded to int64
+(functions/vectors.sq_dist_micros_sql); ties broken by smallest cid.
+All three rules are cheap to mirror in ANSI SQL.
 """
 
 from __future__ import annotations
@@ -35,48 +36,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MICROS = 1_000_000
-
-
-def _sq_dist_micros_sql(vec_sql: str, centroid: list[float]) -> str:
-    """SQL text of the micro-rounded squared L2 distance to a literal
-    centroid.  zip_with keeps the fold sequential in array order,
-    matching DuckDB's list_sum over list_transform element order.
-    Rendered as TEXT, not Column calls: a k x dim literal tree through
-    the Column API costs hundreds of py4j round trips per assignment
-    build (~0.5-1 s for k=8 x 64 dims), while one F.expr parse is
-    milliseconds — the same technique operators/dedup.py proved for
-    the minhash family and plans/corpus._pq_dist_sql for PQ.  Double
-    literals render via repr (round-trip exact through Java's
-    correctly-rounded parse), so the math is bit-identical to the old
-    F.lit tree."""
-    arr = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in centroid)
-    return (
-        f"CAST(round(aggregate(zip_with({vec_sql}, array({arr}),"
-        " (x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)),"
-        f" CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) * {MICROS}) AS BIGINT)"
-    )
+from bank_transaction_data_warehouse_spark.functions.vectors import (
+    MICROS,
+    nearest_l2_sql,
+)
 
 
 def assign_clusters(
     embs: DataFrame, centroids: dict[int, list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Append ``cid``: argmin of squared L2 over literal centroids.
-    argmax/argmin via array_sort of structs (never a when/otherwise
-    chain — CLAUDE.md self-join-speed invariant applies to argmins
-    too); ties resolve to the smallest cid via the struct's second
-    field.  The whole candidate array is ONE parsed SQL expression
-    (see _sq_dist_micros_sql).  A stateless zero-shuffle projection, so
-    it routes a live embedding stream unchanged (train offline, serve
-    online)."""
+    """Append ``cid``: argmin of squared L2 over literal centroids,
+    ties to the smallest cid — one parsed SQL expression
+    (functions/vectors.nearest_l2_sql).  A stateless zero-shuffle
+    projection, so it routes a live embedding stream unchanged (train
+    offline, serve online)."""
     if not centroids:
         raise ValueError("assign_clusters needs at least one centroid")
-    structs = ", ".join(
-        f"named_struct('dm', {_sq_dist_micros_sql(vec_col, c)},"
-        f" 'cid', {int(cid)})"
-        for cid, c in sorted(centroids.items())
+    return embs.withColumn(
+        "cid", F.expr(nearest_l2_sql(vec_col, sorted(centroids.items())))
     )
-    return embs.withColumn("cid", F.expr(f"array_sort(array({structs}))[0].cid"))
 
 
 def mean_stats(assigned: DataFrame, vec_col: str = "embedding") -> DataFrame:

@@ -44,8 +44,12 @@ def sessionize(
 
 
 def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Per-session aggregates: bounds, event count, total value."""
-    s = sessionize(events, gap_minutes=gap_minutes)
+    """Per-session aggregates: bounds, event count, total value.
+    Events without a timestamp are dropped, as the streaming twin's
+    session_window drops them: they cannot be ordered into a session
+    (and the lag window would sort them first, as a session of their
+    own with a NULL start)."""
+    s = sessionize(events.where(F.col("ts").isNotNull()), gap_minutes=gap_minutes)
     return s.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),

@@ -45,11 +45,6 @@ def plan_has_exchange(df: DataFrame) -> bool:
     return "Exchange" in plan
 
 
-def plan_exchange_count(df: DataFrame) -> int:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange")
-
-
 def cdc_merge_bucketed(
     spark: SparkSession,
     base_table: str,

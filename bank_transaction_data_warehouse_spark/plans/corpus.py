@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.functions import text as T
+from bank_transaction_data_warehouse_spark.functions import vectors as V
 from bank_transaction_data_warehouse_spark.operators import ann as ANN
 from bank_transaction_data_warehouse_spark.operators import dedup as DD
 from bank_transaction_data_warehouse_spark.session import build_stat
@@ -1938,8 +1939,9 @@ def centroid_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-quality eval.  The centroid argmax is inlined as plan
     literals (model, not data — same footprint as ann_ivf_topk's
     quantizer), so the whole eval is one scan + one groupBy(label):
-    no join, no extra shuffle.  Tie rule: smallest label (array_sort
-    on (-score, label) structs, mirrored ORDER BY s DESC, pred ASC).
+    no join, no extra shuffle.  Tie rule: smallest label
+    (functions/vectors.nearest_dot_sql, mirrored ORDER BY s DESC,
+    pred ASC).
     Zero vectors score 0 against every centroid and deterministically
     take the smallest label on both engines — no nz filter needed (no
     division anywhere: ANSI-safe by construction; accuracy ratio is
@@ -1950,20 +1952,7 @@ def centroid_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "label int, n_vectors bigint, n_correct bigint, accuracy_pct double"
         )
-    entries = []
-    for lbl, cvec in cents:
-        carr = F.lit([float(x) for x in cvec])
-        score = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), carr, lambda a, b: a.cast("double") * b
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        entries.append(
-            F.struct((-score).alias("negs"), F.lit(int(lbl)).cast("int").alias("p"))
-        )
-    pred = F.element_at(F.array_sort(F.array(*entries)), 1)["p"]
+    pred = F.expr(V.nearest_dot_sql("embedding", cents))
     scored = embs.select(F.col("label"), pred.alias("_pred"))
     return (
         scored.groupBy("label")
@@ -2196,8 +2185,6 @@ def semantic_dedup(
     computed once, before the join; ids normalized AFTER the
     symmetric cosine (blocked payload output is orientation-free);
     the assignment itself is a literal-codebook codegen projection."""
-    from bank_transaction_data_warehouse_spark.functions import vectors as V
-
     embs = _embs_wide(spark, sf_dir).select("vec_id", "embedding")
     assigned, _ = _km_shared(spark, sf_dir, embs)
     nz = ANN._nonzero_norm(assigned, "embedding")
@@ -3027,36 +3014,17 @@ def _pq_models(spark: SparkSession, sf_dir: str) -> list:
     )
 
 
-# Literal-heavy expressions are generated as SQL TEXT and parsed
-# with ONE F.expr call each: the Column-API composition of the
-# same trees (4 subspaces x 8 centroids x 16-dim folds, twice)
-# costs thousands of py4j round trips — measured ~4 s of pure
-# plan-build time per run vs ~0.3 s for the text form.  Bit-exact
-# with operators/kmeans._sq_dist_micros: same zip_with/aggregate
-# shape, double literals rendered via repr (round-trip exact
-# through Java's correctly-rounded parse).
-def _pq_dist_sql(s: int, cent: list) -> str:
-    arr = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in cent)
-    sl = f"slice(embedding, {s * _PQ_SUBDIM + 1}, {_PQ_SUBDIM})"
-    return (
-        f"CAST(round(aggregate(zip_with({sl}, array({arr}),"
-        " (x, c) -> (CAST(x AS DOUBLE) - c) * (CAST(x AS DOUBLE) - c)),"
-        " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) * 1000000) AS BIGINT)"
-    )
+def _pq_sub_sql(s: int) -> str:
+    """Subspace s of the embedding, as SQL text."""
+    return f"slice(embedding, {s * _PQ_SUBDIM + 1}, {_PQ_SUBDIM})"
 
 
 def _pq_codes(models: list) -> list:
     """The m PQ code columns _c0.._c{m-1}: each vector's nearest
-    centroid per subspace."""
+    centroid per subspace, one parsed expression each
+    (functions/vectors.nearest_l2_sql)."""
     return [
-        F.expr(
-            "array_sort(array("
-            + ", ".join(
-                f"named_struct('dm', {_pq_dist_sql(s, c)}, 'cid', {int(cid)})"
-                for cid, c in models[s]
-            )
-            + "))[0].cid"
-        ).alias(f"_c{s}")
+        F.expr(V.nearest_l2_sql(_pq_sub_sql(s), models[s])).alias(f"_c{s}")
         for s in range(_PQ_M)
     ]
 
@@ -3065,7 +3033,8 @@ def _pq_query_table(models: list, qv: DataFrame, s: int) -> DataFrame:
     """Per-query ADC distance table for subspace s: (qid{s}, cid{s},
     d{s}), n_queries x kc rows — broadcast-sized by construction."""
     entries = ", ".join(
-        f"named_struct('cid{s}', {int(cid)}, 'd{s}', {_pq_dist_sql(s, c)})"
+        f"named_struct('cid{s}', {int(cid)},"
+        f" 'd{s}', {V.sq_dist_micros_sql(_pq_sub_sql(s), V.lit_array_sql(c))})"
         for cid, c in models[s]
     )
     return qv.select(
@@ -3109,8 +3078,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str, topk: int = _PQ_TOPK) -> DataF
     billion-vector ANN fit: m codes per vector instead of the vector.
 
     Integer-exact across engines: per-subspace distances reuse the
-    kmeans micro-rounded int64 squared-L2 (operators/kmeans.
-    _sq_dist_micros ≙ the oracle's _KM_DIST), so the ADC total is an
+    kmeans micro-rounded int64 squared-L2 (functions/vectors.
+    sq_dist_micros_sql ≙ the oracle's _KM_DIST), so the ADC total is an
     exact bigint sum, and ranks tie-break on (dist, vec_id).
 
     Scale: codebooks are model literals (m·kc rows); encoding is a
@@ -3250,24 +3219,14 @@ def ann_pq_recall_report(
     qv = embs.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
     )
-    # same fold as the oracle's _PQ_EXACT_D: elementwise (x-y)^2 then
-    # an in-order sum, micro-rounded to an exact bigint
-    dm = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            F.col("qemb").cast("array<double>"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     exact = ANN.per_query_topk(
         embs.crossJoin(F.broadcast(qv))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             "vec_id",
-            F.round(dm * 1000000).cast("bigint").alias("dm"),
+            # the oracle's _PQ_EXACT_D: micro-rounded squared L2
+            F.expr(V.sq_dist_micros_sql("embedding", "qemb")).alias("dm"),
         ),
         topk, ["dm", "vec_id"],
     )

@@ -240,12 +240,11 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap) with per-session stats.
-    Events without a timestamp are dropped EXPLICITLY: they cannot be
-    ordered into a session, and the engines' null-ordering defaults
-    differ (Spark windows sort nulls first, DuckDB last — found by
-    the adversarial fuzz gate)."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    return session_stats(ev, gap_minutes=30)
+    session_stats drops events without a timestamp, and the oracle
+    drops them EXPLICITLY: the engines' null-ordering defaults differ
+    (Spark windows sort nulls first, DuckDB last — found by the
+    adversarial fuzz gate)."""
+    return session_stats(load_table(spark, sf_dir, "events"), gap_minutes=30)
 
 
 ORACLE["events_sessionize"] = f"""

@@ -40,8 +40,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Frames are memoized for plan BUILD, not data caching:
 # `spark.read.parquet` costs ~70 ms of py4j + file-index JVM round

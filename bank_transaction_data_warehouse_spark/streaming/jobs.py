@@ -174,7 +174,8 @@ def streaming_sessionizer(
     (gap-closed windows) — state-bounded by the watermark.  The batch
     twin is operators/sessionize.session_stats; both close a session
     after a gap LONGER than ``gap_minutes`` (a gap of exactly
-    ``gap_minutes`` stays in one session)."""
+    ``gap_minutes`` stays in one session), and both drop events with a
+    NULL ``ts``."""
     gap = f"{gap_minutes} minutes"
     return (
         events.withWatermark("ts", watermark)

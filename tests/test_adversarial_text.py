@@ -146,6 +146,13 @@ VEC_QUERIES = [
     "semantic_dedup",
     "semantic_dedup_clusters",
     "cluster_balanced_sample",
+    "ann_cosine_topk",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "ann_ivf_kmeans_topk",
+    "ann_pq_topk",
+    "ann_pq_recall_report",
+    "ann_ivf_pq_topk",
 ]
 
 

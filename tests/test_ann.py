@@ -100,6 +100,29 @@ def test_near_dups_lsh_no_cartesian_plan(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_cosine_score_pairs_rejects_ragged_vectors(spark):
+    """The Arrow verify kernel reshapes each batch's flat buffer to
+    (rows, dim): a ragged batch would pair elements of different rows
+    ([1,2,3] and [4..8] scored against themselves gave 30.0 and 174.0,
+    not the fold's 14.0 and 190.0).  It must raise, naming the
+    lengths; a batch of one length scores as the fold does."""
+    from bank_transaction_data_warehouse_spark.functions.vectors import (
+        cosine_score_pairs,
+    )
+
+    def score(vecs):
+        pairs = spark.createDataFrame(
+            [(i, v, v, 1.0, 1.0) for i, v in enumerate(vecs)],
+            "id long, va array<float>, vb array<float>, na double, nb double",
+        ).coalesce(1)
+        out = cosine_score_pairs(pairs, "va", "vb", "na", "nb", keep_cols=("id",))
+        return sorted(tuple(r) for r in out.collect())
+
+    assert score([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]]) == [(0, 14.0), (1, 77.0)]
+    with pytest.raises(Exception, match=r"have lengths \[3, 5\]"):
+        score([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0, 7.0, 8.0]])
+
+
 @pytest.mark.parametrize("fn", ["lsh_topk", "embedding_near_dups_lsh"])
 def test_lsh_dim_mismatch_raises(spark, fn):
     """32-dim vectors under dim=64 would null-pad in zip_with and hash

@@ -84,13 +84,15 @@ def test_streaming_sessionizer_agrees_with_batch(spark, sf_dir, event_drop_dir, 
     assert stream_counts == batch_counts
     assert _session_rows(got) == _session_rows(batch)
 
-    # pinned boundary: 30 min apart = one session, then a 60 min gap
+    # pinned boundary: 30 min apart = one session, then a 60 min gap;
+    # an event without a ts belongs to no session on either side
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     pinned = spark.createDataFrame(
         [
             (1, t0, 7, "purchase", 1.0, None),
             (2, t0 + dt.timedelta(minutes=30), 7, "purchase", 2.0, None),
             (3, t0 + dt.timedelta(minutes=90), 7, "purchase", 4.0, None),
+            (4, None, 7, "purchase", 2.0, None),  # no ts: dropped by both
         ],
         EVENT_SCHEMA,
     )
