@@ -16,9 +16,17 @@ generator has the same three-step shape:
              set_minhash_lsh_pairs, plans/corpus.dedup_edit_distance),
              or Hamming distance of the carried fingerprints (simhash)
 
-Every approximate path can run on the portable char-polynomial base
-hash (base_hash='poly'), which DuckDB reproduces bit-for-bit, so all of
-them are oracle-checked (plans/corpus.py).
+MinHash and SimHash have ONE base hash: the portable char-polynomial
+fold (_poly_sql), which DuckDB reproduces bit-for-bit, so every
+approximate path is oracle-checked (plans/corpus.py) and the streamed
+band index (streaming/jobs.maintain_band_index) holds the same
+band_hash values as the batch queries and their oracles.  An xxhash64
+base hash was measured no faster (4 cores, warm: minhash_band_keys
+0.26-0.33 s vs 0.23-0.28 s poly on 500 docs, 0.48-0.61 vs 0.43-0.62 s
+at sf0.1; LSH pairs and simhash equal within noise) and the MinHash
+family reduces every base hash mod 2^31-1 anyway.  xxhash64 remains
+only as the 64-bit element key of EXACT set Jaccard (set_jaccard_pairs,
+_jaccard_verify), where no hash value reaches the output.
 
 Scale notes (100 TB):
 - exact: a single hash-partitioned groupBy on a 16-byte key.
@@ -277,18 +285,6 @@ def _poly_sql(s: str, mult: int = 131) -> str:
     )
 
 
-def _poly_hash(s: str):
-    """The portable base hash as a parsed Column; takes SQL text (a
-    column name or expression snippet), not a Column — the fold is
-    rendered as SQL and parsed with one F.expr (literal-heavy trees
-    through the Column API cost ~1 s of py4j per query)."""
-    if not isinstance(s, str):
-        raise TypeError(
-            "_poly_hash takes SQL text (column name/expression), not a Column"
-        )
-    return F.expr(_poly_sql(s))
-
-
 _SHINGLE_MULT = 1000003
 
 
@@ -302,7 +298,7 @@ def _token_hash_shingles(
     """(doc_id, _hs array<long>): distinct shingle hashes composed from
     per-TOKEN poly hashes — each token's chars are folded once, then a
     shingle hash is n integer mul-adds, instead of re-folding ~n*6
-    chars per shingle (~16x less char work than _poly_hash over the
+    chars per shingle (~16x less char work than _poly_sql over the
     joined shingle string; cut the poly-minhash query 5.8s -> 4.4s).
     Shingle hash = fold(acc*M + h_tok) % p starting acc=0 over the
     window of n token hashes; docs shorter than n tokens fold over all
@@ -341,45 +337,28 @@ def _token_hash_shingles(
     )
 
 
-def _base_hash_sql(s: str, base_hash: str) -> str:
-    """SQL text of the per-element base hash over a string snippet."""
-    if base_hash == "xxhash64":
-        return f"pmod(xxhash64({s}), {_MINHASH_MOD})"
-    if base_hash == "poly":
-        return _poly_sql(s)
-    raise ValueError(f"unknown base_hash {base_hash!r}")
-
-
 def minhash_signatures(
     docs: DataFrame,
     k: int = 64,
     n: int = 3,
     id_col: str = "doc_id",
-    base_hash: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash signature per doc: each shingle is hashed ONCE with
-    xxhash64, then the k-family is derived arithmetically
-    (sig[i] = min over shingles of (a_i*h + b_i) mod 2^31-1) — k
-    mul-adds per shingle instead of k string hashes, ~10x cheaper.
-    All JVM-side; a_i/b_i are fixed Knuth-style constants so the
-    signature is reproducible everywhere.
+    """MinHash signature per doc: each shingle is hashed ONCE with the
+    portable token-composed poly hash (_token_hash_shingles), then the
+    k-family is derived arithmetically (sig[i] = min over shingles of
+    (a_i*h + b_i) mod 2^31-1) — k mul-adds per shingle instead of k
+    string hashes.  All JVM-side; a_i/b_i are fixed Knuth-style
+    constants, so the signature is bit-identical in the DuckDB twin
+    (plans/corpus._minhash_banded_ctes).
 
     The k families are STATICALLY UNROLLED in Python (k array_min
     expressions with literal constants) rather than one nested
     transform over sequence(0,k-1): measured 8x faster (2.3s vs 19s at
     sf0.1) — literal constants let codegen specialize the inner loop,
     while lambda-derived constants are re-evaluated per element."""
-    if base_hash == "poly":
-        # token-composed portable hashes: see _token_hash_shingles
-        base = _token_hash_shingles(docs, n=n, id_col=id_col)
-    else:
-        base = shingle_sets(docs, n=n, id_col=id_col).select(
-            "doc_id",
-            F.expr(
-                f"transform(sh_set, s -> {_base_hash_sql('s', base_hash)})"
-            ).alias("_hs"),
-        )
-    return base.select("doc_id", _kfamily_signature(k).alias("signature"))
+    return _token_hash_shingles(docs, n=n, id_col=id_col).select(
+        "doc_id", _kfamily_signature(k).alias("signature")
+    )
 
 
 def _kfamily_signature(k: int):
@@ -433,7 +412,6 @@ def minhash_band_keys(
     k: int = 64,
     bands: int = 16,
     n: int = 3,
-    base_hash: str = "xxhash64",
 ) -> DataFrame:
     """(doc_id, band, band_hash): the LSH banding projection — a pure
     per-row pipeline (shingle -> minhash signature -> per-band
@@ -442,7 +420,7 @@ def minhash_band_keys(
     against a static corpus index with exactly this projection).
     Band hash is a statically-unrolled integer fold — no per-band
     string building."""
-    sigs = minhash_signatures(docs, k=k, n=n, base_hash=base_hash)
+    sigs = minhash_signatures(docs, k=k, n=n)
     return _band_keys(sigs, k, bands)
 
 
@@ -452,7 +430,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     n: int = 3,
     threshold: float = 0.8,
-    base_hash: str = "xxhash64",
     parts: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via LSH banding over MinHash signatures,
@@ -461,7 +438,7 @@ def minhash_lsh_pairs(
     bands=16, rows=4 → S-curve threshold ≈ (1/16)^(1/4) ≈ 0.5: pairs
     above ~0.5 estimated Jaccard almost surely collide in some band.
     """
-    banded = minhash_band_keys(docs, k=k, bands=bands, n=n, base_hash=base_hash)
+    banded = minhash_band_keys(docs, k=k, bands=bands, n=n)
     cand = _lsh_candidates(banded, parts=parts)
     return _jaccard_verify(cand, shingle_sets(docs, n=n), threshold)
 
@@ -472,7 +449,6 @@ def set_minhash_lsh_pairs(
     k: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    base_hash: str = "xxhash64",
     parts: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs over ARBITRARY element sets
@@ -481,20 +457,19 @@ def set_minhash_lsh_pairs(
     elements are hashed once, the k-family signature + banding run
     exactly as in the shingle path, the band self-join generates
     candidates on uniform (band, band_hash) keys, and exact set
-    Jaccard verifies ONLY the candidates.  base_hash='poly' gives the
-    DuckDB-reproducible char-polynomial element hash (elements are
-    hashed DIRECTLY — unlike the text path there is no token
-    composition).  Empty sets are excluded (array_min over an empty
-    signature family is undefined); callers' set builders emit
-    sentinel elements instead (shingle_sets, frame_hash_sets)."""
+    Jaccard verifies ONLY the candidates.  Elements are hashed
+    DIRECTLY with the portable char-polynomial hash (unlike the text
+    path there is no token composition), so the DuckDB twin
+    (plans/corpus.media_frame_lsh_dedup) replays it.  Empty sets are
+    excluded (array_min over an empty signature family is undefined);
+    callers' set builders emit sentinel elements instead
+    (shingle_sets, frame_hash_sets)."""
     # array_distinct defends the 'arbitrary sets' contract (see
     # _jaccard_verify)
     base = sets.select(
         "doc_id",
         F.array_distinct(
-            F.expr(
-                f"transform({set_col}, s -> {_base_hash_sql('s', base_hash)})"
-            )
+            F.expr(f"transform({set_col}, s -> {_poly_sql('s')})")
         ).alias("_hs"),
     ).where(F.size("_hs") > 0)
     sigs = base.select("doc_id", _kfamily_signature(k).alias("signature"))
@@ -565,34 +540,24 @@ def _jaccard_verify(
 
 
 # --------------------------------------------------------------- SimHash
-def simhash(
-    docs: DataFrame,
-    bits: int = 63,
-    id_col: str = "doc_id",
-    base_hash: str = "xxhash64",
-) -> DataFrame:
-    """SimHash per doc from distinct tokens: sign-sum of per-token
-    hash bits, all in built-in higher-order functions.  Default: 63
-    bits of xxhash64 (63 keeps the accumulator positive in an int64).
-    base_hash='poly' packs two portable 31-bit char-polynomial hashes
-    (multipliers 131/137) into a 62-bit token hash so DuckDB can
-    reproduce the whole fingerprint bit-for-bit (caps bits at 62).
-    Both heavy projections (the ~62-way unrolled bit-count fold and
-    the fingerprint sum) are SQL text parsed by one F.expr each —
-    the Column-API trees cost ~2 s of py4j plan-build per run."""
+def simhash(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """62-bit SimHash per doc from distinct tokens: sign-sum of per-token
+    hash bits, all in built-in higher-order functions.  The token hash
+    packs two portable 31-bit char-polynomial hashes (multipliers
+    131/137) into one 62-bit long, so DuckDB reproduces the whole
+    fingerprint bit-for-bit (plans/corpus._simhash_oracle_sql); 62
+    bits keep the fingerprint sum positive in an int64.  Both heavy
+    projections (the 62-way unrolled bit-count fold and the
+    fingerprint sum) are SQL text parsed by one F.expr each — the
+    Column-API trees cost ~2 s of py4j plan-build per run."""
+    bits = 62  # two packed 31-bit poly hashes
     toks = f"array_distinct({_tokens_sql('text')})"
-    if base_hash == "poly":
-        bits = min(bits, 62)
-        # hash each token ONCE (the char fold is the expensive part),
-        # then read bits off the packed long
-        hs = (
-            f"transform({toks}, t -> {_poly_sql('t', 131)}"
-            f" + shiftleft({_poly_sql('t', 137)}, 31))"
-        )
-    elif base_hash == "xxhash64":
-        hs = f"transform({toks}, t -> xxhash64(t))"
-    else:
-        raise ValueError(f"unknown base_hash {base_hash!r}")
+    # hash each token ONCE (the char fold is the expensive part), then
+    # read bits off the packed long
+    hs = (
+        f"transform({toks}, t -> {_poly_sql('t', 131)}"
+        f" + shiftleft({_poly_sql('t', 137)}, 31))"
+    )
     # per-bit expressions unroll statically (literal shift amounts)
     bitvec = "array(" + ", ".join(
         f"CAST((shiftright(h, {j}) & 1) * 2 - 1 AS BIGINT)" for j in range(bits)
@@ -616,7 +581,6 @@ def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     chunks: int = 4,
-    base_hash: str = "xxhash64",
     parts: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming.  Pigeonhole
@@ -629,7 +593,7 @@ def simhash_pairs(
             f"(got {max_hamming} >= {chunks}): pairs differing in every "
             "chunk would be silently missed"
         )
-    sh = simhash(docs, base_hash=base_hash)
+    sh = simhash(docs)
     width = 64 // chunks
     chunked = sh.select(
         "doc_id",

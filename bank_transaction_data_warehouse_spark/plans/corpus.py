@@ -33,8 +33,8 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
-# Rows-per-task weights for the two corpus tables (r15 width sweep,
-# scripts/width_sweep.py at fixed local[32]): the text pipelines'
+# Rows-per-task weights for the two corpus tables (r15 width sweep at
+# fixed local[32], table in OPTIMIZATION_r15.md): the text pipelines'
 # sweet spot is ~300-600 rows/task (width 8-16 at sf0.1's 5,000 docs
 # — e.g. dup_shingle_ratio 0.86 s at width 32 vs 0.45 s at 8-16), the
 # vector pipelines' ~250 (width 8 at 2,000 vectors: kmeans 0.47 s at
@@ -216,20 +216,19 @@ shp AS (
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard — the scale
-    path.  Oracle-checked as of r11: the exposed query uses the
-    portable char-polynomial base hash (operators/dedup._poly_hash),
-    whose integer math DuckDB reproduces bit-for-bit, so the ENTIRE
-    pipeline — k-family signatures, banding, candidate join, exact
-    verify — has an ANSI twin.  Production default stays xxhash64
-    (faster; same structure).  tests/test_dedup.py additionally
-    asserts the verified output equals dedup_ngram_jaccard's pairs
-    whenever LSH recall is 1."""
+    path.  MinHash runs on the portable char-polynomial base hash
+    (operators/dedup._poly_sql), whose integer math DuckDB reproduces
+    bit-for-bit, so the ENTIRE pipeline — k-family signatures,
+    banding, candidate join, exact verify — has an ANSI twin, and its
+    band keys are the ones the streamed band index holds (an xxhash64
+    base hash was measured no faster: operators/dedup docstring).
+    tests/test_dedup.py additionally asserts the verified output
+    equals dedup_ngram_jaccard's pairs whenever LSH recall is 1."""
     return DD.minhash_lsh_pairs(
         _docs_wide(spark, sf_dir),
         k=64,
         bands=16,
         threshold=0.8,
-        base_hash="poly",
         parts=_docs_parts(spark, sf_dir),
     )
 
@@ -312,7 +311,7 @@ WHERE {isect} * 1.0 / (a.n + b.n - {isect}) >= {threshold}"""
 
 
 def _minhash_oracle_sql(k: int = 64, bands: int = 16, threshold: float = 0.8) -> str:
-    """DuckDB twin of minhash_lsh_pairs(base_hash='poly') — banded
+    """DuckDB twin of minhash_lsh_pairs — banded
     candidate join + exact-Jaccard verify over the shared banded CTEs."""
     return f"""
 WITH {_minhash_banded_ctes(k, bands)},
@@ -324,13 +323,13 @@ ORACLE["dedup_minhash_lsh"] = _minhash_oracle_sql(64, 16, 0.8)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked as of r11: base_hash='poly' packs two portable
-    31-bit char-polynomial hashes into a 62-bit token hash, so the
-    sign-sum fingerprint, pigeonhole chunk join, and Hamming verify
-    all have a bit-exact ANSI twin.  Production default stays
-    xxhash64 (63 bits, faster)."""
+    """operators/dedup.simhash packs two portable 31-bit
+    char-polynomial hashes into a 62-bit token hash, so the sign-sum
+    fingerprint, pigeonhole chunk join, and Hamming verify all have a
+    bit-exact ANSI twin.  A 63-bit xxhash64 token hash was measured no
+    faster (operators/dedup module docstring)."""
     return DD.simhash_pairs(
-        _docs_wide(spark, sf_dir), max_hamming=3, base_hash="poly",
+        _docs_wide(spark, sf_dir), max_hamming=3,
         parts=_docs_parts(spark, sf_dir),
     )
 
@@ -341,7 +340,7 @@ QUERIES["dedup_simhash"] = dedup_simhash
 def _simhash_oracle_sql(
     bits: int = 62, chunks: int = 4, max_hamming: int = 3
 ) -> str:
-    """DuckDB twin of simhash_pairs(base_hash='poly')."""
+    """DuckDB twin of simhash_pairs."""
     mod = 2147483647
     width = 64 // chunks
 
@@ -858,7 +857,9 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs1 = docs.join(surv, "doc_id", "left_semi")
     # 2. near-dup removal: in each connected component keep the
     #    canonical (= component label = min id)
-    pairs = DD.ngram_jaccard_pairs(docs1, n=3, threshold=0.8)
+    pairs = DD.ngram_jaccard_pairs(
+        docs1, n=3, threshold=0.8, parts=_docs_parts(spark, sf_dir)
+    )
     comp = connected_components(pairs)
     losers = comp.where(F.col("node") != F.col("comp")).select(
         F.col("node").alias("doc_id")
@@ -2309,8 +2310,7 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample, n=3, threshold=0.8, parts=sample_parts
     ).agg(F.count("*").alias("n_exact_pairs"))
     n_lsh = DD.minhash_lsh_pairs(
-        sample, k=64, bands=16, threshold=0.8,
-        base_hash="poly", parts=sample_parts,
+        sample, k=64, bands=16, threshold=0.8, parts=sample_parts,
     ).agg(F.count("*").alias("n_lsh_pairs"))
     return n_exact.crossJoin(n_lsh).select(
         "n_exact_pairs",
@@ -2608,7 +2608,7 @@ def dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.md5("text")).cast("bigint").alias("n_unique_texts"),
     )
     near = DD.minhash_lsh_pairs(
-        docs, k=64, bands=16, threshold=0.8, base_hash="poly",
+        docs, k=64, bands=16, threshold=0.8,
         parts=_docs_parts(spark, sf_dir),
     ).agg(F.count("*").cast("bigint").alias("n_near_dup_pairs"))
     return tot.crossJoin(near).select(
@@ -2782,7 +2782,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale one 1.8 KB/doc shuffle strictly beats two of 0.8 + 1.0 KB
     # (guide §8: move the payload once).
     docs = _docs_wide(spark, sf_dir)
-    banded = DD.minhash_band_keys(docs, k=64, bands=16, n=3, base_hash="poly")
+    banded = DD.minhash_band_keys(docs, k=64, bands=16, n=3)
     cand = DD._lsh_candidates(banded, parts=_docs_parts(spark, sf_dir))
     fold = F.regexp_replace("text", r"[^\x00-\x7f]", "?").alias("_ft")
     pairs = DD._jaccard_verify(
@@ -2892,9 +2892,7 @@ def band_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shorter rows per band) or route hot buckets through
     blocked_self_pairs.  Integer-exact throughout; two
     map-side-combined groupBys on uniform keys, no joins."""
-    keys = DD.minhash_band_keys(
-        _docs_wide(spark, sf_dir), k=64, bands=16, n=3, base_hash="poly"
-    )
+    keys = DD.minhash_band_keys(_docs_wide(spark, sf_dir), k=64, bands=16, n=3)
     buckets = keys.groupBy("band", "band_hash").agg(F.count("*").alias("c"))
     return (
         buckets.groupBy("band")
@@ -2948,9 +2946,10 @@ def media_frame_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidates only.  media_frame_dedup is this query's exact
     all-pairs twin; at 100 TB only this variant runs (the band join
     shuffles on uniform keys and exact work scales with candidates,
-    not corpus²).  base_hash='poly' so DuckDB replays the whole
-    pipeline bit-for-bit; bands=16/rows=4 puts the S-curve knee at
-    ~0.5 — matched to the threshold, same trade as the text family."""
+    not corpus²).  The element hash is the portable poly hash, so
+    DuckDB replays the whole pipeline bit-for-bit; bands=16/rows=4
+    puts the S-curve knee at ~0.5 — matched to the threshold, same
+    trade as the text family."""
     from bank_transaction_data_warehouse_spark.multimodal.pipeline import (
         frame_hash_sets,
     )
@@ -2961,7 +2960,6 @@ def media_frame_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_MFL_K,
         bands=_MFL_BANDS,
         threshold=_MFL_THRESHOLD,
-        base_hash="poly",
         # frames are heavier per doc than shingles (len/160 elements):
         # width 8 at sf0.1 (sweep w8 1.18 vs w16 1.22; the 8-core run
         # confirms 8-wide end-to-end beats 16)

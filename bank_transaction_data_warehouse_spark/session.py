@@ -32,12 +32,8 @@ def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = Non
         # Advisory default 16m locally (A/B over 64m/16m/8m; the 8-60
         # MB aggregate shuffles keep a few parallel reducers while
         # tiny shuffles still collapse to one task); production sets
-        # BTDW_AQE_ADVISORY_BYTES=256m per the guide's §9 baseline —
-        # both knobs env-parameterized, never hardcoded to this box.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("BTDW_AQE_PARALLELISM_FIRST", "false"),
-        )
+        # BTDW_AQE_ADVISORY_BYTES=256m per the guide's §9 baseline.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get("BTDW_AQE_ADVISORY_BYTES", "16m"),

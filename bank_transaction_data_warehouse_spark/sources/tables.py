@@ -103,7 +103,7 @@ def parallelism_for(
     FASTER on 8 cores than 32 because every pinned exchange was sized
     to spark.sql.shuffle.partitions — past ~a few hundred rows/task
     the per-task fixed overhead (dispatch, codegen setup, fetch)
-    swamps the compute win (width sweep, scripts/width_sweep.py:
+    swamps the compute win (width sweep table, OPTIMIZATION_r15.md:
     e.g. dup_shingle_ratio 0.86 s at width 32 vs 0.45 s at width 8 on
     the SAME 32 cores).  At cluster scale rows/rows_per_task exceeds
     any realistic shuffle.partitions, so this degrades to exactly the

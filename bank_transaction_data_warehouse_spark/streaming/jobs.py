@@ -315,8 +315,11 @@ def dedup_vs_corpus_stream(
     4 drops at sf0.1, 32 cores).
 
     At 100 TB the corpus side is the PRECOMPUTED band-key table
-    (written bucketed by (band, band_hash)), not a live recompute —
-    swap `minhash_band_keys(corpus_docs)` for a read of that table."""
+    (maintain_band_index's output, bucketed by (band, band_hash)), not
+    a live recompute — swap `minhash_band_keys(corpus_docs)` for a
+    read of that table.  Both sides band with the one portable poly
+    base hash, so their keys equal the batch LSH queries' and the
+    DuckDB oracle's."""
     from bank_transaction_data_warehouse_spark.operators.dedup import (
         minhash_band_keys,
     )
@@ -397,8 +400,11 @@ def maintain_band_index(
     dedup_vs_corpus_stream (and the batch dedup family) consults —
     closing the loop so the 'precomputed band-key table' the 100 TB
     design assumes is itself kept current by a stream, not a nightly
-    rebuild.  Replay-safe by drop-id partition overwrite (protocol 1 of
-    the module docstring).  Returns the StreamingQuery."""
+    rebuild.  The keys come from the one portable poly base hash, so
+    the index rows equal the batch queries' banding and the DuckDB
+    oracle's `banded` CTE (plans/corpus._minhash_banded_ctes).
+    Replay-safe by drop-id partition overwrite (protocol 1 of the
+    module docstring).  Returns the StreamingQuery."""
     from bank_transaction_data_warehouse_spark.operators.dedup import (
         minhash_band_keys,
     )

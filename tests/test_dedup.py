@@ -107,8 +107,7 @@ def test_set_minhash_lsh_pairs_over_frame_sets(spark):
     got = {
         (r["doc_id_1"], r["doc_id_2"]): round(r["jaccard"], 4)
         for r in set_minhash_lsh_pairs(
-            frame_hash_sets(docs), set_col="frame_set", threshold=0.5,
-            base_hash="poly",
+            frame_hash_sets(docs), set_col="frame_set", threshold=0.5
         ).collect()
     }
     assert got[(1, 2)] == 1.0

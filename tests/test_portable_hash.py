@@ -1,5 +1,5 @@
 """Cross-engine contract for the portable char-polynomial hash: the
-Spark fold (operators/dedup._poly_hash) and the DuckDB twin
+Spark fold (operators/dedup._poly_sql) and the DuckDB twin
 (plans/corpus.POLY_HASH_SQL) must agree byte-for-byte on arbitrary
 text — including unicode (F.ascii and ord() both return codepoints),
 empties, and whitespace edge cases.  This is the foundation the
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.operators.dedup import (
     _MINHASH_MOD,
-    _poly_hash,
+    _poly_sql,
     _token_hash_shingles,
 )
 from bank_transaction_data_warehouse_spark.plans.corpus import POLY_HASH_SQL
@@ -49,7 +49,7 @@ EDGE_STRINGS = _FUZZ_STRINGS + [
 
 def test_poly_hash_matches_duckdb(spark):
     df = spark.createDataFrame([(s,) for s in EDGE_STRINGS], "s string")
-    got = [r.h for r in df.select(_poly_hash("s").alias("h")).collect()]
+    got = [r.h for r in df.select(F.expr(_poly_sql("s")).alias("h")).collect()]
 
     con = duckdb.connect()
     expr = POLY_HASH_SQL.format(s="s")

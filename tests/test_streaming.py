@@ -485,12 +485,19 @@ def test_txn_alert_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
 
 def test_maintain_band_index_matches_batch_and_is_idempotent(spark, sf_dir, tmp_path):
     """The streamed LSH band index must equal the batch banding of the
-    whole corpus, and replaying all drops from a fresh checkpoint must
-    leave the index unchanged (partition-per-drop idempotence)."""
+    whole corpus AND the DuckDB oracle's `banded` rows (the keys the
+    oracle-checked LSH queries join on), and replaying all drops from
+    a fresh checkpoint must leave the index unchanged
+    (partition-per-drop idempotence)."""
     import shutil as _sh
+
+    import duckdb
 
     from bank_transaction_data_warehouse_spark.operators.dedup import (
         minhash_band_keys,
+    )
+    from bank_transaction_data_warehouse_spark.plans.corpus import (
+        _minhash_banded_ctes,
     )
     from bank_transaction_data_warehouse_spark.sources.tables import load_table
     from bank_transaction_data_warehouse_spark.streaming.jobs import (
@@ -524,6 +531,16 @@ def test_maintain_band_index_matches_batch_and_is_idempotent(spark, sf_dir, tmp_
         tuple(r) for r in minhash_band_keys(docs, k=64, bands=16, n=3).collect()
     }
     assert got == want and len(got) > 0
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{os.path.join(sf_dir, 'documents.parquet')}')"
+    )
+    oracle = con.execute(
+        f"WITH {_minhash_banded_ctes(64, 16)} "
+        "SELECT doc_id, band, band_hash FROM banded"
+    ).fetchall()
+    assert set(oracle) == want and len(oracle) == len(want)
 
     # full replay from a FRESH checkpoint: every drop reprocessed;
     # the index must come out identical (no duplicate rows)
