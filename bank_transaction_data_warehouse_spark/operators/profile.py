@@ -19,37 +19,21 @@ NUMERIC = {"int", "bigint", "double", "float", "smallint", "tinyint", "decimal"}
 def profile_table(df: DataFrame, approx_rsd: float = 0.02) -> DataFrame:
     """Returns one row per column: n, n_null, approx_distinct, and for
     numeric columns min/max/mean."""
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    cols = df.dtypes
-    for c, t in cols:
-        base = t.split("(")[0]
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.approx_count_distinct(c, approx_rsd).alias(f"{c}__distinct"))
-        if base in NUMERIC:
-            aggs.append(F.min(c).cast("double").alias(f"{c}__min"))
-            aggs.append(F.max(c).cast("double").alias(f"{c}__max"))
-            aggs.append(F.avg(c).alias(f"{c}__mean"))
-    row = df.agg(*aggs)
-    # unpivot driver-side over the SINGLE stats row (one row — not data)
-    stats = row.collect()[0].asDict()
-    spark = df.sparkSession
-    out = []
-    for c, t in cols:
-        out.append(
-            (
-                c,
-                t,
-                int(stats["_n"]),
-                # zero-row tables: sum() aggregates return NULL
-                int(stats[f"{c}__nulls"] or 0),
-                int(stats[f"{c}__distinct"] or 0),
-                stats.get(f"{c}__min"),
-                stats.get(f"{c}__max"),
-                stats.get(f"{c}__mean"),
-            )
+    rows = [
+        F.struct(
+            F.lit(c).alias("column"),
+            F.lit(t).alias("dtype"),
+            F.count(F.lit(1)).alias("n"),
+            # zero-row tables: sum() returns NULL
+            F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)).alias("n_null"),
+            F.approx_count_distinct(c, approx_rsd).alias("approx_distinct"),
+            *(
+                (fn(c) if t.split("(")[0] in NUMERIC else F.lit(None)).cast("double").alias(s)
+                for s, fn in (("min", F.min), ("max", F.max), ("mean", F.avg))
+            ),
         )
-    return spark.createDataFrame(
-        out,
-        "column string, dtype string, n bigint, n_null bigint, "
-        "approx_distinct bigint, min double, max double, mean double",
-    )
+        for c, t in df.dtypes
+    ]
+    # the SINGLE stats row unpivots inside Spark (inline over one struct
+    # per column): no driver round trip, no Python-side rows
+    return df.agg(F.array(*rows).alias("_cols")).select(F.inline("_cols"))

@@ -13,6 +13,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bank_transaction_data_warehouse_spark.functions import text as T
 from bank_transaction_data_warehouse_spark.functions import vectors as V
@@ -31,6 +32,14 @@ ORACLE: dict[str, str] = {}
 
 def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
+
+
+def _empty(spark: SparkSession, ddl: str) -> DataFrame:
+    """Zero rows of schema ``ddl`` (an empty input's result), planned in
+    the JVM — createDataFrame([]) would still be a Python RDD."""
+    return spark.range(0).select(
+        *(F.lit(None).cast(f.dataType).alias(f.name) for f in StructType.fromDDL(ddl))
+    )
 
 
 # Rows-per-task weights for the two corpus tables (r15 width sweep at
@@ -1532,9 +1541,7 @@ def kmeans_clusters(
     embs = _embs_wide(spark, sf_dir).select("vec_id", "embedding")
     assigned, cents = _km_shared(spark, sf_dir, embs, k=k, iters=iters)
     if not cents:  # empty input: 0 rows with the query's exact schema
-        return spark.createDataFrame(
-            [], "cid bigint, n_vectors bigint, centroid_micros string"
-        )
+        return _empty(spark, "cid bigint, n_vectors bigint, centroid_micros string")
     # Per-dim sums as ONE groupBy(cid) with dim sum columns instead of
     # posexplode -> groupBy(cid, dim) -> regroup(cid): same values
     # (identical per-dim double sums, identical micro-rounding chain),
@@ -1950,9 +1957,7 @@ def centroid_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     embs = _embs(spark, sf_dir)
     cents = _label_cents(spark, sf_dir)
     if not cents:  # empty corpus: empty eval (oracle yields 0 rows too)
-        return spark.createDataFrame(
-            [], "label int, n_vectors bigint, n_correct bigint, accuracy_pct double"
-        )
+        return _empty(spark, "label int, n_vectors bigint, n_correct bigint, accuracy_pct double")
     pred = F.expr(V.nearest_dot_sql("embedding", cents))
     scored = embs.select(F.col("label"), pred.alias("_pred"))
     return (
@@ -3094,9 +3099,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str, topk: int = _PQ_TOPK) -> DataF
         # documented contract) and the code/distance-table literal
         # generators would emit array()[0] — ill-typed.  The oracle
         # yields 0 rows over empty embeddings; mirror it exactly.
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, approx_dist_micros long, rank int"
-        )
+        return _empty(spark, "query_id long, vec_id long, approx_dist_micros long, rank int")
     return _adc_topk(
         embs.select("vec_id", *_pq_codes(models)),
         models, embs.where(F.col("vec_id") < 10), topk,

@@ -22,13 +22,11 @@ Three entry points sharing one transformation, ``warehouse.star_join``
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
-from bank_transaction_data_warehouse_spark.plans.materialize import _write_fact
+from bank_transaction_data_warehouse_spark.plans.materialize import _fact_from_dims, _write_fact
 from bank_transaction_data_warehouse_spark.streaming.jobs import _start_sink
 
 
@@ -62,18 +60,13 @@ def stream_fact_into(
     checkpoint_dir: str,
 ):
     """Continuous fact loading: each micro-batch of raw transactions is
-    joined to the (broadcast) persisted dims and appended with the
-    same idempotent partition semantics.  Returns the StreamingQuery.
+    joined to the (broadcast) persisted dims by the star build_warehouse
+    writes its fact with (materialize._fact_from_dims) and appended with
+    the same idempotent partition semantics.  Returns the StreamingQuery.
     """
-    spark = txn_stream.sparkSession
-    acct, cust, loc, merch = (
-        spark.read.parquet(os.path.join(dims_dir, name))
-        for name in ("dim_account", "dim_customer", "dim_location", "dim_merchant")
-    )
+    star = _fact_from_dims(txn_stream.sparkSession, dims_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        # the persisted dim_customer has no nation id: join on the name
-        fact = WH.star_join(batch, acct, cust, loc, merch, "nation_name")
-        append_increment(fact.select(*WH.FACT_COLUMNS), fact_dir)
+        append_increment(star(batch), fact_dir)
 
     return _start_sink(txn_stream, handle, checkpoint_dir)

@@ -8,6 +8,8 @@ Layout decisions for 100 TB:
 - facts written sorted-within-partitions by customer_key so per-
   customer analytics get row-group locality (min/max pruning).
 - dims are single-directory small parquet — always broadcastable.
+- build order (the reference's): dims first, then the fact star-joined
+  from the dims just written — each dim is built once per run.
 - writes are idempotent (overwrite by partition), so backfills and
   re-runs are safe — the property the reference's `if_exists=append`
   load lacks (etl.py:290).
@@ -16,11 +18,13 @@ Layout decisions for 100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
+from bank_transaction_data_warehouse_spark.sources.tables import load_table
 
 EXPECTED_SCHEMAS = {
     # schema.sql analog (reference data_source/schema.sql:71-135):
@@ -118,26 +122,41 @@ def build_warehouse(
 ) -> dict[str, str]:
     """Clean → conform → validate → write the whole star schema.
     Returns table → path.  Equivalent of running the reference's
-    etl.py end-to-end (etl.py:284-386)."""
-    tables: dict[str, DataFrame] = {
+    etl.py end-to-end (etl.py:284-386), in its order: the six dims,
+    then the fact from the dims just written (the reference re-reads
+    its loaded dims to map keys), so the fact scans the transactions
+    once and reads each written dim once."""
+    dims: dict[str, DataFrame] = {
         "dim_customer": WH.dim_customer(spark, sf_dir, strategy),
         "dim_account": WH.dim_account(spark, sf_dir, strategy),
         "dim_location": WH.dim_location(spark, sf_dir, strategy),
         "dim_merchant": WH.dim_merchant(spark, sf_dir, strategy),
         "dim_date": WH.dim_date(spark, sf_dir),
         "dim_date_daily": WH.dim_date_daily(spark, sf_dir),
-        "fact_spending": WH.fact_spending(spark, sf_dir, strategy),
     }
-    paths: dict[str, str] = {}
-    for name, df in tables.items():
+    paths = {name: os.path.join(out_dir, name) for name in EXPECTED_SCHEMAS}
+    for name, df in dims.items():
         validate_schema(df, name)
-        path = os.path.join(out_dir, name)
-        if name == "fact_spending":
-            _write_fact(df, path, "static")
-        else:
-            df.write.mode("overwrite").parquet(path)
-        paths[name] = path
+        df.write.mode("overwrite").parquet(paths[name])
+    fact = _fact_from_dims(spark, out_dir)(load_table(spark, sf_dir, "lineitem"))
+    validate_schema(fact, "fact_spending")
+    _write_fact(fact, paths["fact_spending"], "static")
     return paths
+
+
+def _fact_from_dims(spark: SparkSession, dims_dir: str) -> Callable[[DataFrame], DataFrame]:
+    """Reads the four written star dims under ``dims_dir`` once and
+    returns ``txn → fact rows`` (``warehouse.star_join``, FACT_COLUMNS):
+    build_warehouse's fact and incremental.stream_fact_into's batches.
+    The written dim_customer has no nation id, so the location joins
+    on ``nation_name`` (unique per nation)."""
+    acct, cust, loc, merch = (
+        spark.read.parquet(os.path.join(dims_dir, name))
+        for name in ("dim_account", "dim_customer", "dim_location", "dim_merchant")
+    )
+    return lambda txn: WH.star_join(txn, acct, cust, loc, merch, "nation_name").select(
+        *WH.FACT_COLUMNS
+    )
 
 
 def _write_fact(fact: DataFrame, path: str, partition_overwrite: str) -> None:

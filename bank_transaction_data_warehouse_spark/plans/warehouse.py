@@ -13,7 +13,8 @@ Reference parity map (reference etl.py):
 
 The fact star join is written once, in ``star_join``: ``star`` feeds it
 the built dims for fact_spending and the analytics, and
-plans/incremental.stream_fact_into feeds it the persisted dims.
+plans/materialize._fact_from_dims feeds it the written dims for both
+fact writers (build_warehouse, incremental.stream_fact_into).
 
 Scale notes (100 TB): ``star_join`` broadcasts every dim, so the fact
 table never shuffles during assembly — the plan is scan → N broadcast
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 from bank_transaction_data_warehouse_spark.functions import warehouse as W
 from bank_transaction_data_warehouse_spark.operators.keys import add_surrogate_key
 from bank_transaction_data_warehouse_spark.sources.tables import (
-    MCC_RULES,
+    MCC_SQL,
     load_table,
     merchant_category_rules,
     spread_scan,
@@ -282,10 +283,9 @@ def dim_merchant(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> 
     )
 
 
-_MCC_VALUES = ", ".join(f"('{t}', '{c}')" for t, c in MCC_RULES)
 _FALLBACK = W.FALLBACK_CATEGORY_SQL.format(c="p.p_name")
 _DIM_MERCHANT_CTE = f"""
-mcc AS (SELECT * FROM (VALUES {_MCC_VALUES}) AS t(p_type, category)),
+mcc AS ({MCC_SQL}),
 dim_merchant AS (
   SELECT row_number() OVER (ORDER BY p.p_partkey) AS merchant_key,
          p.p_partkey AS merchant_id_source,
@@ -366,7 +366,9 @@ def star_join(
 ) -> DataFrame:
     """The fact star join (etl.py:307-386): raw transactions ⋈ the
     four broadcast dims.  ``cust`` and ``loc`` both carry the column
-    ``nation`` that ties a customer to its location.  Keeps every input
+    ``nation`` that ties a customer to its location: ``star`` joins
+    the built dims on ``nation_id_source``, materialize._fact_from_dims
+    the written dims on ``nation_name``.  Keeps every input
     column and adds the measures (etl.py:362-366): ``date_key``,
     ``amount_spent`` (net spend, extendedprice*(1-discount)), its exact
     integer ``amount_cents`` and ``transaction_count`` = 1.

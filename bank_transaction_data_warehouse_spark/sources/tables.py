@@ -163,24 +163,7 @@ def spread_scan(
     return df.repartition(width, *[F.col(k) for k in keys])
 
 
-def merchant_category_rules(spark: SparkSession) -> DataFrame:
-    """The MCC-style lookup table (reference tbl_MCC_Mapping.csv,
-    etl.py:52-56).  The reference ships a merchant-name → category CSV;
-    our catalog table is ``part``, so the lookup maps the catalog's
-    ``p_type`` to a spend category.  Small by construction → always the
-    broadcast side of the categorization join.
-    """
-    rows = [
-        ("ECONOMY", "Essentials"),
-        ("STANDARD", "Everyday"),
-        ("PROMO", "Deals & Offers"),
-        ("LARGE", "Big Ticket"),
-        ("SMALL", "Small Goods"),
-    ]
-    return spark.createDataFrame(rows, "p_type string, category string")
-
-
-# Plain-Python twin of merchant_category_rules for oracle-SQL generation.
+# The MCC lookup rows: the only copy; Spark and the oracle both run MCC_SQL.
 MCC_RULES = [
     ("ECONOMY", "Essentials"),
     ("STANDARD", "Everyday"),
@@ -188,3 +171,19 @@ MCC_RULES = [
     ("LARGE", "Big Ticket"),
     ("SMALL", "Small Goods"),
 ]
+MCC_SQL = (
+    "SELECT * FROM (VALUES "
+    + ", ".join(f"('{t}', '{c}')" for t, c in MCC_RULES)
+    + ") AS t(p_type, category)"
+)
+
+
+def merchant_category_rules(spark: SparkSession) -> DataFrame:
+    """The MCC-style lookup table (reference tbl_MCC_Mapping.csv,
+    etl.py:52-56).  The reference ships a merchant-name → category CSV;
+    our catalog table is ``part``, so the lookup maps the catalog's
+    ``p_type`` to a spend category.  A SQL ``VALUES`` table (a JVM
+    LocalTableScan: no Python worker) whose text the oracle runs too.
+    Small by construction → always the broadcast side of the
+    categorization join."""
+    return spark.sql(MCC_SQL)

@@ -14,6 +14,9 @@ values-parity tests can't see.
    exception: operators/keys.py's rownum surrogate mode, which is the
    oracle-parity mode with `hash` as the scale default — it is not
    reachable from any queries() entry, which is what this sweeps.
+3. No Python-side RDD — `spark.createDataFrame(<python list>)` plans
+   a LogicalRDD over a PythonRDD, so every job that reads it forks
+   Python workers.  Literal tables are SQL `VALUES` (LocalRelation).
 """
 
 import pytest
@@ -87,6 +90,44 @@ def test_no_cartesian_product_in_plan(spark, sf_dir, name):
     assert "CartesianProduct" not in plan, (
         f"{name} plans a CartesianProduct — broadcast the scalar side "
         "or rewrite as an equi-join on a derived key"
+    )
+
+
+def _collect_python_rdds(jplan, found):
+    """LogicalRDD / RDDScanExec leaves whose RDD lineage holds a
+    PythonRDD, following persisted frames (InMemoryRelation /
+    InMemoryTableScanExec) into their cached plans and adaptive plans
+    into their input plans."""
+    name = jplan.getClass().getSimpleName()
+    if name in ("LogicalRDD", "RDDScanExec"):
+        if "PythonRDD" in jplan.rdd().toDebugString():
+            found.append(jplan.toString().splitlines()[0][:160])
+        return
+    inner = {
+        "InMemoryRelation": lambda: jplan.cacheBuilder().cachedPlan(),
+        "InMemoryTableScanExec": lambda: jplan.relation().cacheBuilder().cachedPlan(),
+        "AdaptiveSparkPlanExec": lambda: jplan.inputPlan(),
+    }.get(name)
+    kids = [inner()] if inner else []
+    children = jplan.children()
+    kids += [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        _collect_python_rdds(kid, found)
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_no_python_rdd_in_plan(spark, sf_dir, name):
+    """No queries() plan reads a Python-side RDD: a LogicalRDD built by
+    `createDataFrame(<python list>)` runs through PythonRDD, forking
+    Python workers in every job that touches it.  Checkpointed frames
+    (JVM RDDs) pass."""
+    df = E.queries()[name](spark, sf_dir)
+    found = []
+    _collect_python_rdds(df._jdf.queryExecution().optimizedPlan(), found)
+    assert not found, (
+        f"{name} reads a Python-side RDD: {found}. Build literal "
+        "tables as SQL VALUES (sources/tables.MCC_SQL) and derived "
+        "rows with Spark expressions, never createDataFrame(list)."
     )
 
 

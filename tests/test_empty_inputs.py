@@ -11,6 +11,7 @@ import pytest
 
 import __spark_entry__ as E
 from bank_transaction_data_warehouse_spark.sources.tables import TABLES
+from test_driver_contract import _collect_python_rdds
 
 SCHEMAS = {
     "region": "r_regionkey int, r_name string",
@@ -84,12 +85,16 @@ def test_every_query_survives_empty_inputs(spark, empty_sf_dir):
                 fn(spark, empty_sf_dir).collect()
             continue
         try:
-            srows = sorted(
-                tuple(str(v) for v in r) for r in fn(spark, empty_sf_dir).collect()
-            )
+            df = fn(spark, empty_sf_dir)
+            srows = sorted(tuple(str(v) for v in r) for r in df.collect())
         except Exception as ex:  # noqa: BLE001 — collecting all failures
             failures.append(f"{name}: spark raised {type(ex).__name__}: {ex}")
             continue
+        # the empty-result early returns are plans too: no Python-side RDD
+        python_rdds = []
+        _collect_python_rdds(df._jdf.queryExecution().optimizedPlan(), python_rdds)
+        if python_rdds:
+            failures.append(f"{name}: reads a Python-side RDD {python_rdds}")
         try:
             drows = sorted(
                 tuple(str(v) for v in r) for r in con.sql(oracles[name]).fetchall()
