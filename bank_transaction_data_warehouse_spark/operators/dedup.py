@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-WS_SPLIT = r"\s+"
+from bank_transaction_data_warehouse_spark.functions.text import WS_SPLIT
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -2,7 +2,8 @@
 reference's one-shot batch ETL and a warehouse that stays current.
 
 Three entry points sharing one transformation, ``warehouse.star_join``
-(the fact star join):
+(the fact star join; its one location join is null-safe on the
+conformed ``nation_name``, assumed unique per nation):
 
 - ``fact_increment(spark, sf_dir, from_date_key)``: the batch delta —
   only transactions with date_key > watermark flow through the same

@@ -9,7 +9,11 @@ Layout decisions for 100 TB:
   customer analytics get row-group locality (min/max pruning).
 - dims are single-directory small parquet — always broadcastable.
 - build order (the reference's): dims first, then the fact star-joined
-  from the dims just written — each dim is built once per run.
+  from the dims just written — each dim is built once per run.  The
+  fact goes through ``warehouse.star_join``, the join the
+  fact_spending query computes (location null-safe on the conformed
+  ``nation_name``, assumed unique per nation), so the written fact
+  equals the query row for row.
 - writes are idempotent (overwrite by partition), so backfills and
   re-runs are safe — the property the reference's `if_exists=append`
   load lacks (etl.py:290).
@@ -25,6 +29,18 @@ from pyspark.sql import functions as F
 
 from bank_transaction_data_warehouse_spark.plans import warehouse as WH
 from bank_transaction_data_warehouse_spark.sources.tables import load_table
+
+_DAILY_CALENDAR = {
+    "date_key": "int",
+    "full_date": "date",
+    "day_of_week": "int",
+    "day_name": "string",
+    "is_weekend": "boolean",
+    "month": "int",
+    "month_name": "string",
+    "quarter": "int",
+    "year": "int",
+}
 
 EXPECTED_SCHEMAS = {
     # schema.sql analog (reference data_source/schema.sql:71-135):
@@ -59,29 +75,10 @@ EXPECTED_SCHEMAS = {
         "brand": "string",
         "category": "string",
     },
-    "dim_date": {
-        "date_key": "int",
-        "full_date": "date",
-        "day_of_week": "int",
-        "day_name": "string",
-        "is_weekend": "boolean",
-        "month": "int",
-        "month_name": "string",
-        "quarter": "int",
-        "year": "int",
-        "hour_of_day": "int",
-    },
-    "dim_date_daily": {
-        "date_key": "int",
-        "full_date": "date",
-        "day_of_week": "int",
-        "day_name": "string",
-        "is_weekend": "boolean",
-        "month": "int",
-        "month_name": "string",
-        "quarter": "int",
-        "year": "int",
-    },
+    # one calendar body (warehouse._calendar): the hourly dim is the
+    # daily one plus the hour
+    "dim_date": {**_DAILY_CALENDAR, "hour_of_day": "int"},
+    "dim_date_daily": _DAILY_CALENDAR,
     "fact_spending": {
         "date_key": "int",
         "customer_key": "bigint",
@@ -126,14 +123,9 @@ def build_warehouse(
     then the fact from the dims just written (the reference re-reads
     its loaded dims to map keys), so the fact scans the transactions
     once and reads each written dim once."""
-    dims: dict[str, DataFrame] = {
-        "dim_customer": WH.dim_customer(spark, sf_dir, strategy),
-        "dim_account": WH.dim_account(spark, sf_dir, strategy),
-        "dim_location": WH.dim_location(spark, sf_dir, strategy),
-        "dim_merchant": WH.dim_merchant(spark, sf_dir, strategy),
-        "dim_date": WH.dim_date(spark, sf_dir),
-        "dim_date_daily": WH.dim_date_daily(spark, sf_dir),
-    }
+    dims = {name: build(spark, sf_dir, strategy) for name, build in WH.STAR_DIMS.items()}
+    dims["dim_date"] = WH.dim_date(spark, sf_dir)
+    dims["dim_date_daily"] = WH.dim_date_daily(spark, sf_dir)
     paths = {name: os.path.join(out_dir, name) for name in EXPECTED_SCHEMAS}
     for name, df in dims.items():
         validate_schema(df, name)
@@ -145,18 +137,12 @@ def build_warehouse(
 
 
 def _fact_from_dims(spark: SparkSession, dims_dir: str) -> Callable[[DataFrame], DataFrame]:
-    """Reads the four written star dims under ``dims_dir`` once and
-    returns ``txn → fact rows`` (``warehouse.star_join``, FACT_COLUMNS):
-    build_warehouse's fact and incremental.stream_fact_into's batches.
-    The written dim_customer has no nation id, so the location joins
-    on ``nation_name`` (unique per nation)."""
-    acct, cust, loc, merch = (
-        spark.read.parquet(os.path.join(dims_dir, name))
-        for name in ("dim_account", "dim_customer", "dim_location", "dim_merchant")
-    )
-    return lambda txn: WH.star_join(txn, acct, cust, loc, merch, "nation_name").select(
-        *WH.FACT_COLUMNS
-    )
+    """Reads the four written star dims (``warehouse.STAR_DIMS``) under
+    ``dims_dir`` once and returns ``txn → fact rows``
+    (``warehouse.star_join``, FACT_COLUMNS): build_warehouse's fact
+    and incremental.stream_fact_into's batches."""
+    dims = [spark.read.parquet(os.path.join(dims_dir, name)) for name in WH.STAR_DIMS]
+    return lambda txn: WH.star_join(txn, *dims).select(*WH.FACT_COLUMNS)
 
 
 def _write_fact(fact: DataFrame, path: str, partition_overwrite: str) -> None:

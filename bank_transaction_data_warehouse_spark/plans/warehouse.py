@@ -11,10 +11,17 @@ Reference parity map (reference etl.py):
   dim_date             ≙ Dim_Date hourly calendar       (etl.py:232-270)
   fact_spending        ≙ Fact_Spending key mapping      (etl.py:307-386)
 
-The fact star join is written once, in ``star_join``: ``star`` feeds it
-the built dims for fact_spending and the analytics, and
-plans/materialize._fact_from_dims feeds it the written dims for both
-fact writers (build_warehouse, incremental.stream_fact_into).
+The fact star join is written once, in ``star_join``, over the four
+dims named once in ``STAR_DIMS``: ``star`` feeds it the built dims for
+fact_spending and the analytics, and plans/materialize._fact_from_dims
+feeds it the written dims for both fact writers (build_warehouse,
+incremental.stream_fact_into).  So the queried, written and streamed
+facts compute one join, and the location joins the customer on the
+conformed ``nation_name`` null-safe: correct as long as nation names
+are unique (NULL counting as a value), as in TPC-H.  The FACT_CTES
+oracle keeps its join on the nation id, so crosscheck proves the two
+agree.  Both calendars (``dim_date`` hourly, ``dim_date_daily``) are
+one body, ``_calendar``.
 
 Scale notes (100 TB): ``star_join`` broadcasts every dim, so the fact
 table never shuffles during assembly — the plan is scan → N broadcast
@@ -120,10 +127,9 @@ SELECT * FROM clean_txn
 
 
 # ----------------------------------------------------------------- dims
-def _dim_customer_ext(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
-    """dim_customer plus the internal nation_id_source column the fact
-    build needs to resolve the location key without re-scanning the
-    customer table."""
+def dim_customer(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
+    """Dim_Customer: surrogate key, name, derived tier bucket
+    (age-group analog, etl.py:146-165), segment, geo attributes."""
     cust = active_customers(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     dim = (
@@ -135,7 +141,6 @@ def _dim_customer_ext(spark: SparkSession, sf_dir: str, strategy: str = "rownum"
             F.col("c_mktsegment").alias("segment"),
             F.col("n_name").alias("nation_name"),
             (F.round(F.col("c_acctbal") * 100) / 100.0).alias("acct_balance"),
-            F.col("c_nationkey").alias("nation_id_source"),
         )
     )
     return add_surrogate_key(
@@ -149,12 +154,6 @@ def _dim_customer_ext(spark: SparkSession, sf_dir: str, strategy: str = "rownum"
         # re-constructs them dozens of times
         cache_key=f"{sf_dir}:dim_customer",
     )
-
-
-def dim_customer(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
-    """Dim_Customer: surrogate key, name, derived tier bucket
-    (age-group analog, etl.py:146-165), segment, geo attributes."""
-    return _dim_customer_ext(spark, sf_dir, strategy).drop("nation_id_source")
 
 
 _TIER = W.BALANCE_TIER_SQL.format(c="c.c_acctbal")
@@ -301,22 +300,24 @@ SELECT * FROM dim_merchant
 """
 
 
-def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dim_Date at hourly grain from the event stream (etl.py:232-270):
-    Date_Key=yyyyMMddHH, VN day-of-week (Mon=2..Sun=8), day name,
-    weekend flag, month/quarter/year.  Natural key IS the surrogate key
-    (the reference computes Date_Key arithmetically too)."""
-    events = load_table(spark, sf_dir, "events").select("ts")
-    hours = events.select(
-        W.hour_date_key(F.col("ts")).alias("date_key"),
-        F.to_date("ts").alias("full_date"),
-        F.hour("ts").alias("hour_of_day"),
-        W.vn_day_of_week(F.col("ts")).alias("day_of_week"),
-        F.month("ts").alias("month"),
-        F.quarter("ts").alias("quarter"),
-        F.year("ts").alias("year"),
+def _calendar(src: DataFrame, c: str, hourly: bool) -> DataFrame:
+    """The one calendar body: the distinct day (or hour) of every
+    timestamp in column ``c`` of ``src``, with the date_key (yyyyMMdd,
+    or yyyyMMddHH when ``hourly``), VN day-of-week (Mon=2..Sun=8), day
+    name, weekend flag and month/quarter/year.  The natural key IS the
+    surrogate key (the reference computes Date_Key arithmetically too)."""
+    t = F.col(c)
+    hour = ["hour_of_day"] if hourly else []
+    stamps = src.select(
+        (W.hour_date_key if hourly else W.day_date_key)(t).alias("date_key"),
+        t.cast("date").alias("full_date"),
+        *[F.hour(t).alias(h) for h in hour],
+        W.vn_day_of_week(t).alias("day_of_week"),
+        F.month(t).alias("month"),
+        F.quarter(t).alias("quarter"),
+        F.year(t).alias("year"),
     ).distinct()
-    return hours.select(
+    return stamps.select(
         "date_key",
         "full_date",
         "day_of_week",
@@ -326,31 +327,57 @@ def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
         W.month_name(F.col("month")).alias("month_name"),
         "quarter",
         "year",
-        "hour_of_day",
+        *hour,
     )
 
 
-_DOW = W.VN_DOW_SQL.format(c="ts")
-ORACLE["dim_date"] = f"""
-WITH hours AS (
+def _calendar_sql(table: str, c: str, hourly: bool) -> str:
+    """``_calendar``'s DuckDB twin."""
+    key = W.HOUR_DATE_KEY_SQL if hourly else W.DAY_DATE_KEY_SQL
+    cte = "hours" if hourly else "days"
+    hour = f"CAST(hour({c}) AS INTEGER) AS hour_of_day," if hourly else ""
+    return f"""
+WITH {cte} AS (
   SELECT DISTINCT
-    {W.HOUR_DATE_KEY_SQL.format(c='ts')} AS date_key,
-    CAST(ts AS DATE) AS full_date,
-    CAST(hour(ts) AS INTEGER) AS hour_of_day,
-    CAST({_DOW} AS INTEGER) AS day_of_week,
-    CAST(month(ts) AS INTEGER) AS month,
-    CAST(quarter(ts) AS INTEGER) AS quarter,
-    CAST(year(ts) AS INTEGER) AS year
-  FROM events
+    {key.format(c=c)} AS date_key,
+    CAST({c} AS DATE) AS full_date,
+    {hour}
+    CAST({W.VN_DOW_SQL.format(c=c)} AS INTEGER) AS day_of_week,
+    CAST(month({c}) AS INTEGER) AS month,
+    CAST(quarter({c}) AS INTEGER) AS quarter,
+    CAST(year({c}) AS INTEGER) AS year
+  FROM {table}
 )
 SELECT date_key, full_date, day_of_week,
        {W.DAY_NAME_SQL.format(c='day_of_week')} AS day_name,
        {W.IS_WEEKEND_SQL.format(c='day_of_week')} AS is_weekend,
        month,
        {W.MONTH_NAME_SQL.format(c='month')} AS month_name,
-       quarter, year, hour_of_day
-FROM hours
+       quarter, year{", hour_of_day" if hourly else ""}
+FROM {cte}
 """
+
+
+def dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dim_Date at hourly grain from the event stream (etl.py:232-270):
+    ``_calendar`` over ``events.ts``, plus ``hour_of_day``."""
+    return _calendar(load_table(spark, sf_dir, "events"), "ts", hourly=True)
+
+
+ORACLE["dim_date"] = _calendar_sql("events", "ts", hourly=True)
+
+
+def dim_date_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-grain calendar conformed to the fact's date_key (yyyyMMdd):
+    the dimension Fact_Spending actually joins.  The hour-grain
+    dim_date (events clock) serves the event stream; transactions are
+    day-grain in this corpus, so the star needs both calendars.
+    Built from the observed transaction dates (the reference derives
+    Dim_Date from observed timestamps too, etl.py:232-240)."""
+    return _calendar(load_table(spark, sf_dir, "lineitem"), "l_shipdate", hourly=False)
+
+
+ORACLE["dim_date_daily"] = _calendar_sql("lineitem", "l_shipdate", hourly=False)
 
 
 # ----------------------------------------------------------------- fact
@@ -360,18 +387,30 @@ FACT_COLUMNS = (
 )
 
 
+# The four dims the fact joins, by table name, in ``star_join``'s
+# argument order: ``star`` builds them, build_warehouse writes them and
+# materialize._fact_from_dims reads them back by these names.
+STAR_DIMS = {
+    "dim_account": dim_account,
+    "dim_customer": dim_customer,
+    "dim_location": dim_location,
+    "dim_merchant": dim_merchant,
+}
+
+
 def star_join(
-    txn: DataFrame, acct: DataFrame, cust: DataFrame, loc: DataFrame,
-    merch: DataFrame, nation: str,
+    txn: DataFrame, acct: DataFrame, cust: DataFrame, loc: DataFrame, merch: DataFrame
 ) -> DataFrame:
     """The fact star join (etl.py:307-386): raw transactions ⋈ the
-    four broadcast dims.  ``cust`` and ``loc`` both carry the column
-    ``nation`` that ties a customer to its location: ``star`` joins
-    the built dims on ``nation_id_source``, materialize._fact_from_dims
-    the written dims on ``nation_name``.  Keeps every input
-    column and adds the measures (etl.py:362-366): ``date_key``,
-    ``amount_spent`` (net spend, extendedprice*(1-discount)), its exact
-    integer ``amount_cents`` and ``transaction_count`` = 1.
+    four broadcast dims (``STAR_DIMS``).  The customer's location is
+    its conformed ``nation_name``, joined null-safe (``eqNullSafe``),
+    so a customer of a NULL-named nation keeps its location row: this
+    equals a join on the nation id as long as nation names are unique,
+    NULL counting as one value.  Keeps every input column except the
+    customer's copy of ``nation_name`` and adds the measures
+    (etl.py:362-366): ``date_key``, ``amount_spent`` (net spend,
+    extendedprice*(1-discount)), its exact integer ``amount_cents``
+    and ``transaction_count`` = 1.
 
     The clean-transactions rule (l_shipdate >= account open date) is
     applied against the broadcast dim_account directly — dim_account
@@ -388,7 +427,7 @@ def star_join(
     this broadcast plan on the real fact path, and
     test_salted_join_spreads_hot_key proves the hot key actually
     spreads over `salt` reducers."""
-    cust = cust.withColumnsRenamed({"customer_id_source": "_cid", nation: "_cust_nation"})
+    cust = cust.withColumnRenamed("customer_id_source", "_cid")
     # raw double (no per-row round): IEEE mul is bit-identical across
     # engines; money aggregates sum the exact integer cents, /100 at the end
     net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -396,7 +435,8 @@ def star_join(
         txn.join(F.broadcast(acct), txn.l_orderkey == acct.account_id_source)
         .where(F.col("l_shipdate") >= F.col("account_open_date"))
         .join(F.broadcast(cust), F.col("customer_id_source") == F.col("_cid"))
-        .join(F.broadcast(loc), F.col("_cust_nation") == loc[nation])
+        .join(F.broadcast(loc), cust.nation_name.eqNullSafe(loc.nation_name))
+        .drop(cust.nation_name)
         .join(F.broadcast(merch), txn.l_partkey == merch.merchant_id_source)
         .withColumns({
             "date_key": W.day_date_key(F.col("l_shipdate")),
@@ -409,22 +449,9 @@ def star_join(
 
 def star(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
     """The star over the built dims: transactions with their surrogate
-    keys, measures and every dim attribute the analytics read.  The
-    location joins on the nation id the customer dim keeps internally."""
-    acct = dim_account(spark, sf_dir, strategy).select(
-        "account_key", "account_id_source", "customer_id_source", "account_open_date"
-    )
-    cust = _dim_customer_ext(spark, sf_dir, strategy).select(
-        "customer_key", "customer_id_source", "nation_id_source", "balance_tier"
-    )
-    loc = dim_location(spark, sf_dir, strategy).select(
-        "location_key", "nation_id_source", "region_scope"
-    )
-    merch = dim_merchant(spark, sf_dir, strategy).select(
-        "merchant_key", "merchant_id_source", "category"
-    )
-    txn = load_table(spark, sf_dir, "lineitem")
-    return star_join(txn, acct, cust, loc, merch, "nation_id_source")
+    keys, measures and every dim attribute the analytics read."""
+    dims = (build(spark, sf_dir, strategy) for build in STAR_DIMS.values())
+    return star_join(load_table(spark, sf_dir, "lineitem"), *dims)
 
 
 def fact_spending(spark: SparkSession, sf_dir: str, strategy: str = "rownum") -> DataFrame:
@@ -545,56 +572,6 @@ th AS (
 SELECT b.l_orderkey, b.l_linenumber, b.c_mktsegment, b.net_spend
 FROM base b JOIN th USING (c_mktsegment)
 WHERE b.net_spend > th.p99
-"""
-
-
-def dim_date_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-grain calendar conformed to the fact's date_key (yyyyMMdd):
-    the dimension Fact_Spending actually joins.  The hour-grain
-    dim_date (events clock) serves the event stream; transactions are
-    day-grain in this corpus, so the star needs both calendars.
-    Built from the observed transaction dates (the reference derives
-    Dim_Date from observed timestamps too, etl.py:232-240)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_shipdate")
-    days = li.select(
-        W.day_date_key(F.col("l_shipdate")).alias("date_key"),
-        F.col("l_shipdate").cast("date").alias("full_date"),
-        W.vn_day_of_week(F.col("l_shipdate")).alias("day_of_week"),
-        F.month("l_shipdate").alias("month"),
-        F.quarter("l_shipdate").alias("quarter"),
-        F.year("l_shipdate").alias("year"),
-    ).distinct()
-    return days.select(
-        "date_key",
-        "full_date",
-        "day_of_week",
-        W.day_name(F.col("day_of_week")).alias("day_name"),
-        W.is_weekend(F.col("day_of_week")).alias("is_weekend"),
-        "month",
-        W.month_name(F.col("month")).alias("month_name"),
-        "quarter",
-        "year",
-    )
-
-
-ORACLE["dim_date_daily"] = f"""
-WITH days AS (
-  SELECT DISTINCT
-    {W.DAY_DATE_KEY_SQL.format(c='l_shipdate')} AS date_key,
-    CAST(l_shipdate AS DATE) AS full_date,
-    CAST({W.VN_DOW_SQL.format(c='l_shipdate')} AS INTEGER) AS day_of_week,
-    CAST(month(l_shipdate) AS INTEGER) AS month,
-    CAST(quarter(l_shipdate) AS INTEGER) AS quarter,
-    CAST(year(l_shipdate) AS INTEGER) AS year
-  FROM lineitem
-)
-SELECT date_key, full_date, day_of_week,
-       {W.DAY_NAME_SQL.format(c='day_of_week')} AS day_name,
-       {W.IS_WEEKEND_SQL.format(c='day_of_week')} AS is_weekend,
-       month,
-       {W.MONTH_NAME_SQL.format(c='month')} AS month_name,
-       quarter, year
-FROM days
 """
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    parts = shuffle_partitions or int(os.environ.get("BTDW_SHUFFLE_PARTITIONS", cpus))
+    parts = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -11,7 +11,9 @@ filters.  Expression ids are stripped, so two builds of the same plan
 fingerprint identically; diff two files to prove a refactor left every
 plan unchanged.  Persisted frames are fingerprinted through their
 cached plan.  The streaming band-index projection is included under
-``stream:*`` keys, built over the static documents table.  Each
+``stream:*`` keys, built over the static documents table.  The fact
+writer's plan (materialize._fact_from_dims over the four star dims,
+written to a temp dir) is the ``write:fact_spending`` key.  Each
 ``oracle_sql()`` entry adds an ``oracle:<key>`` digest: the sha1 of
 its SQL with all whitespace removed, so the same diff also shows
 which DuckDB twins changed text.
@@ -26,6 +28,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -113,17 +116,35 @@ def _stream_projections(spark, sf_dir) -> dict:
     }
 
 
+def _fact_writer(spark, sf_dir, dims_dir) -> dict:
+    """The plan build_warehouse and stream_fact_into write the fact
+    with: the star join over the four star dims, written under
+    ``dims_dir`` first."""
+    from bank_transaction_data_warehouse_spark.plans import warehouse as WH
+    from bank_transaction_data_warehouse_spark.plans.materialize import _fact_from_dims
+    from bank_transaction_data_warehouse_spark.sources.tables import load_table
+
+    def fact():
+        for name, build in WH.STAR_DIMS.items():
+            build(spark, sf_dir).write.mode("overwrite").parquet(os.path.join(dims_dir, name))
+        return _fact_from_dims(spark, dims_dir)(load_table(spark, sf_dir, "lineitem"))
+
+    return {"write:fact_spending": fact}
+
+
 def write_fingerprints(spark, sf_dir, path) -> None:
     builders = {n: (lambda fn=fn: fn(spark, sf_dir)) for n, fn in E.queries().items()}
     builders.update(_stream_projections(spark, sf_dir))
     out = {}
-    for name in sorted(builders):
-        try:
-            df = builders[name]()
-            out[name] = fingerprint(df._jdf.queryExecution().executedPlan())
-        except Exception as ex:  # pragma: no cover
-            out[name] = {"error": str(ex)[:200]}
-        spark.catalog.clearCache()
+    with tempfile.TemporaryDirectory() as dims_dir:
+        builders.update(_fact_writer(spark, sf_dir, dims_dir))
+        for name in sorted(builders):
+            try:
+                df = builders[name]()
+                out[name] = fingerprint(df._jdf.queryExecution().executedPlan())
+            except Exception as ex:  # pragma: no cover
+                out[name] = {"error": str(ex)[:200]}
+            spark.catalog.clearCache()
     for name, sql in E.oracle_sql().items():
         out[f"oracle:{name}"] = hashlib.sha1(
             _SPACE.sub("", sql).encode()

@@ -2,7 +2,10 @@
 read-back parity."""
 
 import os
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,8 +27,32 @@ def test_validate_schema_catches_drift(spark, sf_dir):
         validate_schema(dim.withColumn("rogue", F.lit(1)), "dim_customer")
 
 
-@pytest.mark.parametrize("strategy", ["rownum", "hash"])
-def test_build_and_read_back(spark, sf_dir, tmp_path, strategy):
+def _null_nation_copy(sf_dir, tmp_path):
+    """The sf tables with the first nation's n_name set to NULL: its
+    customers must still reach their location in every fact path."""
+    out = tmp_path / "null_nation"
+    out.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != "nation.parquet":
+            os.symlink(os.path.join(sf_dir, name), out / name)
+    nation = pq.read_table(os.path.join(sf_dir, "nation.parquet"))
+    names = nation.column("n_name").to_pylist()
+    nation = nation.set_column(
+        nation.schema.get_field_index("n_name"), "n_name",
+        pa.array([None] + names[1:], pa.string()),
+    )
+    pq.write_table(nation, out / "nation.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "strategy, null_nation",
+    [("rownum", False), ("hash", False), ("rownum", True)],
+    ids=["rownum", "hash", "rownum-null_nation_name"],
+)
+def test_build_and_read_back(spark, sf_dir, tmp_path, strategy, null_nation):
+    if null_nation:
+        sf_dir = _null_nation_copy(sf_dir, tmp_path)
     out = str(tmp_path / "dw")
     paths = build_warehouse(spark, sf_dir, out, strategy)
     assert set(paths) == {
@@ -34,11 +61,17 @@ def test_build_and_read_back(spark, sf_dir, tmp_path, strategy):
     }
     wh = read_warehouse(spark, out)
     # the fact written from the persisted dims IS the fact_spending
-    # query, row for row (ym partition column added by the layout)
+    # query, row for row (ym partition column added by the layout),
+    # and keeps every clean transaction
     written = wh["fact_spending"].select(*WH.FACT_COLUMNS).collect()
     query = WH.fact_spending(spark, sf_dir, strategy).collect()
     assert written
     assert sorted(written) == sorted(query)
+    assert len(written) == WH.clean_transactions(spark, sf_dir).count()
+    # each written star dim is its builder's rows
+    for name, build in WH.STAR_DIMS.items():
+        want = build(spark, sf_dir, strategy).collect()
+        assert Counter(wh[name].collect()) == Counter(want), name
     # monthly partitions exist on disk → partition pruning works
     ym_dirs = [d for d in os.listdir(paths["fact_spending"]) if d.startswith("ym=")]
     assert len(ym_dirs) > 10
