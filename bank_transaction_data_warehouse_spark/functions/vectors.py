@@ -13,8 +13,27 @@ of three forms:
   k x dim literal tree through the Column API costs hundreds of py4j
   round trips per plan build (~0.5-1 s for k=8 x 64 dims, ~4 s for
   the PQ codebooks), one parse costs milliseconds.
-- `cosine_score_pairs`, the Arrow kernel that verifies candidate pairs
-  (semantic_dedup's one Python stage).
+- `cosine_verify`, the one pair verify (every candidate-pair cosine
+  in the package: semantic_dedup and operators/ann._cosine_verify).
+  It routes by the number of vectors entering the pair join, which
+  the plan layer knows at build time (a memoized table row count or
+  a fixed sample size): below `KERNEL_MIN_VECTORS` the JVM fold
+  (`dot`), from it on the Arrow kernel `cosine_score_pairs`, which
+  starts Python workers.  Measured
+  crossover, warm exec seconds fold / kernel at 4 cores on row
+  subsets of the sf0.1 embeddings (ENGINEERING_NOTES.md has the
+  fresh-session runs, the second process of each cell and how the
+  3,500 / 5,000 sets were made):
+
+      vectors   semantic_dedup   embedding_dedup
+        500      0.40 / 0.67      0.56 / 0.50
+      1,000      0.55 / 0.70      1.12 / 0.79
+      2,000      1.47 / 1.05      3.57 / 1.64
+      3,500      3.47 / 1.86     12.23 / 3.57
+      5,000      5.75 / 3.18     27.69 / 7.07
+
+  So sf0.01 (500 vectors) verifies on the fold and starts no Python
+  worker, and sf0.1 (2,000) on the kernel.
 
 Bit-exactness (the driver value-hashes against DuckDB at 12
 significant digits): every fold is a sequential left fold in element
@@ -22,7 +41,8 @@ order, ``((0 + p0) + p1) + ...``, as the oracles' list_sum over
 list_transform is; products are float64, after an exact float32
 widening; double literals render via repr, which round-trips exactly
 through Java's correctly-rounded parse.  So a Column fold, its text
-rendering and the Arrow kernel agree bit-for-bit.
+rendering and the Arrow kernel agree bit-for-bit, and the two routes
+of `cosine_verify` return identical rows.
 """
 
 from __future__ import annotations
@@ -32,11 +52,19 @@ from pyspark.sql import functions as F
 
 MICROS = 1_000_000
 
+# The pair verify's size rule: `cosine_verify` scores on the Arrow
+# kernel when at least this many vectors enter the pair join, on the
+# JVM fold below it (crossover table in the module docstring).
+KERNEL_MIN_VECTORS = 1000
+
 
 def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<double> columns."""
+    """Dot product of two numeric array columns, each element widened
+    to double inside the fold (exact for float32; a no-op cast, which
+    the optimizer drops, for array<double>), so no widened copy of
+    either array is built per row."""
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -61,8 +89,9 @@ def l2_norm(a: Column) -> Column:
 # (3 folds/pair -> 1), which is bit-identical and cut embedding_dedup
 # 21.7s -> 7.4s.  The Arrow kernel below is not a general
 # replacement: at sf0.1 on 4 cores it took embedding_dedup 3.5 -> 2.1 s
-# but slowed every cosine search (ann_cosine_topk 0.55 -> 0.86 s) and
-# the small recall sample (ann_recall_report 0.95 -> 1.5 s).
+# but slowed every cosine search (ann_cosine_topk 0.55 -> 0.86 s), so
+# searches stay on the fold and only the pair verify routes, by size
+# (`cosine_verify`).
 
 
 def lit_array_sql(vec) -> str:
@@ -126,7 +155,7 @@ def cosine_score_pairs(
     keep_cols: tuple[str, ...],
 ) -> "DataFrame":
     """Arrow-native cosine scoring of a candidate-pair frame (the
-    verify stage of semantic dedup): ``mapInArrow`` over batches,
+    kernel route of `cosine_verify`): ``mapInArrow`` over batches,
     reading each vector column's flat Arrow buffer directly —
     zero-copy reshape to (rows, dim), no per-row pandas object
     arrays.  Emits ``keep_cols + (cosine double,)``.
@@ -198,3 +227,36 @@ def cosine_score_pairs(
             )
 
     return df.select(*keep_cols, v1, v2, n1, n2).mapInArrow(score, out_schema)
+
+
+def cosine_verify(
+    pairs: "DataFrame",
+    va: str,
+    vb: str,
+    na: str,
+    nb: str,
+    keep_cols: tuple[str, ...],
+    n_vectors: int,
+) -> "DataFrame":
+    """The one pair verify: exact cosine dot / (na * nb) of each
+    candidate pair, whose norms ``na`` / ``nb`` were computed once per
+    vector before the join.  The vectors ``va`` / ``vb`` arrive as
+    float32 arrays (semantic_dedup: half the shuffle and Arrow bytes)
+    or as float64 arrays widened once per vector (the ANN pair
+    skeleton, whose small-sample fold then multiplies doubles).
+    Emits ``keep_cols + (cosine double,)``.
+
+    ``n_vectors`` is the number of vectors entering the pair join, as
+    the plan layer knows it at build time; it picks the route, and no
+    Spark job is run to learn it.  Below `KERNEL_MIN_VECTORS` the pairs
+    score on the JVM fold (`dot`); from it on, on the Arrow kernel
+    `cosine_score_pairs`.  Both widen float32 to float64 exactly (a
+    no-op for float64) and sum in the same left-fold order, so they return the same rows bit
+    for bit; only the plan shows the route (a MapInArrow node on the
+    kernel route).  One difference is not a result: a pair of vectors
+    of unequal length scores NULL on the fold (zip_with pads) and
+    raises on the kernel."""
+    if n_vectors >= KERNEL_MIN_VECTORS:
+        return cosine_score_pairs(pairs, va, vb, na, nb, keep_cols)
+    cosine = dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb))
+    return pairs.select(*keep_cols, cosine.alias("cosine"))

@@ -26,16 +26,18 @@ with an ADC score (product-quantized distance tables).
 
 Pairs: one normed-vector frame -> candidates -> one cosine verify.
 `_normed` drops zero-norm vectors and computes each norm ONCE, before
-any join; `_cosine_verify` scores the same `_cosine` on candidates
-only.  The candidate step has three shapes:
+any join; `_cosine_verify` scores the candidates only, through the
+package's one pair verify, functions/vectors.cosine_verify, which
+picks the JVM fold or the Arrow kernel by the number of vectors the
+caller passes as ``n_vectors``.  The candidate step has three shapes:
   - embedding_near_dups: cross join, id_1 < id_2.  O(n^2): the recall
     oracle, not a scale path.
   - embedding_near_dups_lsh: probe ⋈ code.  Each bucket code and its
     1-bit flips probe the code column; the 100 TB path.
   - blocked_self_pairs: block ⋈ block.  A same-key pair set split into
     shard-pair blocks so a hot key spreads over many tasks;
-    plans/corpus.semantic_dedup verifies these pairs with the Arrow
-    kernel (functions/vectors.cosine_score_pairs).
+    plans/corpus.semantic_dedup verifies these pairs with the same
+    vectors.cosine_verify.
 Probes meet codes and blocks meet blocks, so neither join is the
 same-key equi-join of operators/dedup._keyed_self_join.
 
@@ -200,7 +202,11 @@ def _normed(corpus: DataFrame, vec_col: str, id_col: str, *extra) -> DataFrame:
     once per VECTOR, not per pair: bit-identical cosine (same fold,
     same order) at a third of the per-pair work, measured 21.7 s ->
     7.4 s for embedding_dedup at sf0.1.  (Unrolling the dot statically
-    is a regression here — see the NOTE in functions/vectors.py.)"""
+    is a regression here — see the NOTE in functions/vectors.py.)
+    The vectors are widened once here, not per pair in the fold:
+    carrying float32 and widening inside the fold read
+    ann_recall_report 1.03 -> 1.11 s (median of 10 sf0.1 bench pairs,
+    slower in 8), though it halves the kernel route's Arrow bytes."""
     return _nz_vectors(corpus, vec_col, id_col, "_id", "_v", *extra).withColumn(
         "_norm", vectors.l2_norm(F.col("_v"))
     )
@@ -218,14 +224,13 @@ def _pair_side(normed: DataFrame, i: int, *extra) -> DataFrame:
     )
 
 
-def _cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
+def _cosine_verify(pairs: DataFrame, threshold: float, n_vectors: int) -> DataFrame:
     """The pair skeleton's one verify: exact cosine dot / (na * nb) on
-    the candidates only, kept at >= threshold."""
-    return (
-        pairs.withColumn("cosine", _cosine("va", "vb", "na", "nb"))
-        .where(F.col("cosine") >= threshold)
-        .select("vec_id_1", "vec_id_2", "cosine")
-    )
+    the candidates only (vectors.cosine_verify, routed by the
+    ``n_vectors`` entering the pair join), kept at >= threshold."""
+    return vectors.cosine_verify(
+        pairs, "va", "vb", "na", "nb", ("vec_id_1", "vec_id_2"), n_vectors
+    ).where(F.col("cosine") >= threshold)
 
 
 def embedding_near_dups(
@@ -233,17 +238,22 @@ def embedding_near_dups(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    n_vectors: int = 0,
 ) -> DataFrame:
     """Vector near-duplicate pairs: cosine >= threshold, id1 < id2.
     Brute-force all-pairs — O(n^2): the correctness/recall oracle for
     `embedding_near_dups_lsh`, NOT a scale path.  The exposed
-    `embedding_dedup` query uses the LSH-bucketed variant."""
+    `embedding_dedup` query uses the LSH-bucketed variant.
+    ``n_vectors``: the corpus's vector count as the caller knows it
+    at build time (0 if unknown); it only picks the verify route
+    (vectors.cosine_verify), never the result."""
     normed = _normed(corpus, vec_col, id_col)
     return _cosine_verify(
         _pair_side(normed, 1)
         .crossJoin(_pair_side(normed, 2))
         .where(F.col("vec_id_1") < F.col("vec_id_2")),
         threshold,
+        n_vectors,
     )
 
 
@@ -255,6 +265,7 @@ def embedding_near_dups_lsh(
     multiprobe_bits: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    n_vectors: int = 0,
 ) -> DataFrame:
     """Vector near-dup pairs via sign-LSH bucketing — the 100 TB path.
 
@@ -272,6 +283,7 @@ def embedding_near_dups_lsh(
     pair set with `blocked_self_pairs` — same pairs, parallelism
     ~shards²/2 per hot key.  A vector whose length is not ``dim``
     raises (see _lsh_code) when the frame is evaluated, not here.
+    ``n_vectors`` picks the verify route, as in embedding_near_dups.
     """
     if multiprobe_bits not in (0, 1):
         raise ValueError("multiprobe_bits must be 0 or 1")
@@ -308,6 +320,7 @@ def embedding_near_dups_lsh(
             (probes.probe == right.code) & (probes.vec_id_1 < right.vec_id_2),
         ),
         threshold,
+        n_vectors,
     )
 
 

@@ -480,7 +480,8 @@ def embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.45 to exercise a non-empty path.  The oracle mirrors the exact
     same bucketing (same deterministic planes), so parity is exact."""
     return ANN.embedding_near_dups_lsh(
-        _embs_wide(spark, sf_dir), threshold=0.45, n_planes=4, dim=64
+        _embs_wide(spark, sf_dir), threshold=0.45, n_planes=4, dim=64,
+        n_vectors=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -543,18 +544,22 @@ ORACLE["ann_lsh_topk"] = _cosine_topk_sql(
 )
 
 
+_ANN_SAMPLE = 500
+
+
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the LSH-bucketed near-dup path vs exact all-pairs,
-    measured on a bounded eval sample (vec_id < 500) — the standard
-    ML-eval pattern: the exact side is quadratic, so it runs on a
-    fixed-size sample regardless of corpus SF.  One-row report the
-    driver can hash: pair counts + recall fraction."""
-    sample = _embs_wide(spark, sf_dir).where(F.col("vec_id") < 500)
-    n_exact = ANN.embedding_near_dups(sample, threshold=0.45).agg(
-        F.count("*").alias("n_exact_pairs")
-    )
+    measured on a bounded eval sample (vec_id < _ANN_SAMPLE) — the
+    standard ML-eval pattern: the exact side is quadratic, so it runs
+    on a fixed-size sample regardless of corpus SF; the sample bound
+    is also the vector count both verifies route by.  One-row report
+    the driver can hash: pair counts + recall fraction."""
+    sample = _embs_wide(spark, sf_dir).where(F.col("vec_id") < _ANN_SAMPLE)
+    n_exact = ANN.embedding_near_dups(
+        sample, threshold=0.45, n_vectors=_ANN_SAMPLE
+    ).agg(F.count("*").alias("n_exact_pairs"))
     n_lsh = ANN.embedding_near_dups_lsh(
-        sample, threshold=0.45, n_planes=4, dim=64
+        sample, threshold=0.45, n_planes=4, dim=64, n_vectors=_ANN_SAMPLE
     ).agg(F.count("*").alias("n_lsh_pairs"))
     # NULL recall when the corpus has no exact pairs: under ANSI mode
     # the bare division would raise divideByZeroError on such corpora
@@ -573,7 +578,7 @@ QUERIES["ann_recall_report"] = ann_recall_report
 
 ORACLE["ann_recall_report"] = f"""
 WITH sample AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500 AND {_nz_sql()}
+  SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_ANN_SAMPLE} AND {_nz_sql()}
 ),
 exact AS (
   SELECT count(*) AS n_exact_pairs
@@ -2190,7 +2195,11 @@ def semantic_dedup(
     2.1 s → 1.2 s vs fetch-after via two id joins); per-vector norms
     computed once, before the join; ids normalized AFTER the
     symmetric cosine (blocked payload output is orientation-free);
-    the assignment itself is a literal-codebook codegen projection."""
+    the assignment itself is a literal-codebook codegen projection.
+    The verify is vectors.cosine_verify, routed by the embeddings
+    table's row count: the JVM fold at sf0.01 (500 vectors, so the
+    query starts no Python worker), the Arrow kernel at sf0.1
+    (2,000); both routes return the same rows."""
     embs = _embs_wide(spark, sf_dir).select("vec_id", "embedding")
     assigned, _ = _km_shared(spark, sf_dir, embs)
     nz = ANN._nonzero_norm(assigned, "embedding")
@@ -2198,9 +2207,8 @@ def semantic_dedup(
         nz.select(
             "vec_id",
             # carry the ORIGINAL float32 vectors (half the shuffle +
-            # Arrow-transfer bytes of pre-cast doubles); the verify
-            # kernel widens float32 → float64 exactly, so products
-            # match a JVM-side cast("double") bit-for-bit
+            # Arrow-transfer bytes of pre-cast doubles); both verify
+            # routes widen float32 → float64 exactly
             F.col("embedding").alias("_vf"),
             F.col("cid").cast("int").alias("cid"),
         )
@@ -2214,8 +2222,8 @@ def semantic_dedup(
         .persist()
     )
     # partitions pinned: the join input is tiny (the corpus side) so
-    # AQE would coalesce the pair blow-up AND the Arrow verify kernel
-    # into one task; the k*shards*(shards+1)/2 block groups spread
+    # AQE would coalesce the pair blow-up AND the verify into one
+    # task; the k*shards*(shards+1)/2 block groups spread
     # over a DATA-derived width instead (was a hardcoded 32 —
     # r15 width sweep: 0.96 s at width 4-8 vs 1.27 s at 32 on the
     # same 32 cores; at cluster scale this is the full conf width)
@@ -2223,13 +2231,9 @@ def semantic_dedup(
         coded, "cid", "vec_id", shards=4, payload_cols=("_vf", "_norm"),
         partitions=_embs_parts(spark, sf_dir),
     )
-    # verify kernel: Arrow-native numpy dot over pair batches
-    # (bit-exact left-fold accumulation — see cosine_score_pairs'
-    # contract) instead of the interpreted HOF fold; candidate
-    # generation above stays JVM-side
-    scored = V.cosine_score_pairs(
+    scored = V.cosine_verify(
         pairs, "_vf_1", "_vf_2", "_norm_1", "_norm_2",
-        keep_cols=("id_1", "id_2", "cid"),
+        ("id_1", "id_2", "cid"), table_rows(spark, sf_dir, "embeddings"),
     )
     return (
         scored.where(F.col("cosine") >= threshold)

@@ -499,15 +499,34 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cleaning step's reject side WITH reason codes — the
     reference silently drops bad rows (etl.py:104-136); production
     pipelines quarantine them for audit.  One pass, reasons as a pure
-    CASE cascade (first matching reason wins)."""
+    CASE cascade (first matching reason wins).  UNKNOWN_LOCATION is a
+    transaction that passes cleaning (clean_transactions: it ships on
+    or after the open date of an account with a non-negative total
+    and an existing customer) but whose customer's ``c_nationkey``
+    matches no nation: dim_customer inner-joins the nation, so the
+    fact has no row for it."""
     li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    placeless = (
+        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left_anti")
+        .select(F.col("c_custkey").alias("_placeless")).distinct()
+    )
+    orders = load_table(spark, sf_dir, "orders")
+    orders = orders.join(
+        F.broadcast(placeless), orders.o_custkey == F.col("_placeless"), "left"
+    ).select("o_orderkey", "o_orderdate", "o_totalprice", "_placeless")
     joined = li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left")
     reason = (
         F.when(F.col("o_orderkey").isNull(), "ORPHAN_ACCOUNT")
         .when(F.col("l_shipdate") < F.col("o_orderdate"), "PREDATES_OPEN")
         .when(F.col("l_quantity") <= 0, "NONPOSITIVE_QTY")
         .when(F.col("l_extendedprice") < 0, "NEGATIVE_AMOUNT")
+        .when(
+            (F.col("l_shipdate") >= F.col("o_orderdate")) & (F.col("o_totalprice") >= 0)
+            & F.col("_placeless").isNotNull(),
+            "UNKNOWN_LOCATION",
+        )
     )
     return (
         joined.withColumn("reject_reason", reason)
@@ -516,17 +535,21 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["quarantine_transactions"] = """
-SELECT l_orderkey, l_linenumber,
-       CASE WHEN o.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
+_REJECT_REASON_SQL = """CASE WHEN o.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
             WHEN l.l_shipdate < o.o_orderdate THEN 'PREDATES_OPEN'
             WHEN l.l_quantity <= 0 THEN 'NONPOSITIVE_QTY'
-            WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT' END AS reject_reason
+            WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT'
+            WHEN l.l_shipdate >= o.o_orderdate AND o.o_totalprice >= 0
+                 AND p.c_custkey IS NOT NULL THEN 'UNKNOWN_LOCATION' END"""
+ORACLE["quarantine_transactions"] = f"""
+WITH placeless AS (
+  SELECT DISTINCT c.c_custkey FROM customer c
+  WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
+)
+SELECT l_orderkey, l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
 FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE (CASE WHEN o.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
-            WHEN l.l_shipdate < o.o_orderdate THEN 'PREDATES_OPEN'
-            WHEN l.l_quantity <= 0 THEN 'NONPOSITIVE_QTY'
-            WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT' END) IS NOT NULL
+LEFT JOIN placeless p ON o.o_custkey = p.c_custkey
+WHERE ({_REJECT_REASON_SQL}) IS NOT NULL
 """
 
 

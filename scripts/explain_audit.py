@@ -13,10 +13,16 @@ plan unchanged.  Persisted frames are fingerprinted through their
 cached plan.  The streaming band-index projection is included under
 ``stream:*`` keys, built over the static documents table.  The fact
 writer's plan (materialize._fact_from_dims over the four star dims,
-written to a temp dir) is the ``write:fact_spending`` key.  Each
-``oracle_sql()`` entry adds an ``oracle:<key>`` digest: the sha1 of
-its SQL with all whitespace removed, so the same diff also shows
-which DuckDB twins changed text.
+written to a temp dir) is the ``write:fact_spending`` key.  Work a
+query runs eagerly at build time is fingerprinted too: each pair frame
+a query hands to operators.components.connected_components is the
+``eager:<query>:connected_components`` key (the query's returned plan
+reads only the materialized labels).  The pair-verify keys are built a
+second time with vectors.cosine_verify forced onto its Arrow-kernel
+route (``route:<key>:kernel``), the route the size rule picks only
+above sf0.01.  Each ``oracle_sql()`` entry adds an ``oracle:<key>``
+digest: the sha1 of its SQL with all whitespace removed, so the same
+diff also shows which DuckDB twins changed text.
 
 Usage: python scripts/explain_audit.py [sf_dir] [--json PATH]
 """
@@ -132,19 +138,56 @@ def _fact_writer(spark, sf_dir, dims_dir) -> dict:
     return {"write:fact_spending": fact}
 
 
+# The queries whose returned plan holds a vectors.cosine_verify.
+VERIFY_KEYS = ("ann_recall_report", "embedding_dedup", "semantic_dedup")
+
+
+def _kernel_routes(spark, sf_dir) -> dict:
+    """The verify keys built with the size rule's crossover at 0, so
+    cosine_verify takes its Arrow-kernel route."""
+    from bank_transaction_data_warehouse_spark.functions import vectors
+
+    def build(fn):
+        saved, vectors.KERNEL_MIN_VECTORS = vectors.KERNEL_MIN_VECTORS, 0
+        try:
+            return fn(spark, sf_dir)
+        finally:
+            vectors.KERNEL_MIN_VECTORS = saved
+
+    queries = E.queries()
+    return {f"route:{k}:kernel": (lambda fn=queries[k]: build(fn)) for k in VERIFY_KEYS}
+
+
+def _plan(df) -> list:
+    return fingerprint(df._jdf.queryExecution().executedPlan())
+
+
 def write_fingerprints(spark, sf_dir, path) -> None:
+    from bank_transaction_data_warehouse_spark.operators import components
+
     builders = {n: (lambda fn=fn: fn(spark, sf_dir)) for n, fn in E.queries().items()}
     builders.update(_stream_projections(spark, sf_dir))
+    builders.update(_kernel_routes(spark, sf_dir))
     out = {}
-    with tempfile.TemporaryDirectory() as dims_dir:
-        builders.update(_fact_writer(spark, sf_dir, dims_dir))
-        for name in sorted(builders):
-            try:
-                df = builders[name]()
-                out[name] = fingerprint(df._jdf.queryExecution().executedPlan())
-            except Exception as ex:  # pragma: no cover
-                out[name] = {"error": str(ex)[:200]}
-            spark.catalog.clearCache()
+    eager = components.connected_components
+
+    def fingerprinted_components(pairs, *args, **kwargs):
+        # ``name``: the builder running now (the loop below)
+        out[f"eager:{name}:connected_components"] = _plan(pairs)
+        return eager(pairs, *args, **kwargs)
+
+    components.connected_components = fingerprinted_components
+    try:
+        with tempfile.TemporaryDirectory() as dims_dir:
+            builders.update(_fact_writer(spark, sf_dir, dims_dir))
+            for name in sorted(builders):
+                try:
+                    out[name] = _plan(builders[name]())
+                except Exception as ex:  # pragma: no cover
+                    out[name] = {"error": str(ex)[:200]}
+                spark.catalog.clearCache()
+    finally:
+        components.connected_components = eager
     for name, sql in E.oracle_sql().items():
         out[f"oracle:{name}"] = hashlib.sha1(
             _SPACE.sub("", sql).encode()

@@ -167,10 +167,26 @@ def adv_vec_dir(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("qname", VEC_QUERIES)
-def test_adversarial_vector_parity(spark, adv_vec_dir, qname):
+# the keys whose pairs go through vectors.cosine_verify: a 10-vector
+# corpus routes them to the JVM fold, so each runs a second time with
+# the crossover at 0, to reach the Arrow kernel too
+VERIFY_QUERIES = ["embedding_dedup", "ann_recall_report", "semantic_dedup",
+                  "semantic_dedup_clusters"]
+
+
+@pytest.mark.parametrize(
+    "qname, kernel",
+    [pytest.param(q, False, id=q) for q in VEC_QUERIES]
+    + [pytest.param(q, True, id=f"{q}-kernel") for q in VERIFY_QUERIES],
+)
+def test_adversarial_vector_parity(spark, adv_vec_dir, qname, kernel, monkeypatch):
     """Zero-norm vectors (NaN cosine), exact duplicates, and negations
-    must produce identical results from the Spark plan and the oracle."""
+    must produce identical results from the Spark plan and the oracle,
+    on both routes of the pair verify."""
+    if kernel:
+        from bank_transaction_data_warehouse_spark.functions import vectors
+
+        monkeypatch.setattr(vectors, "KERNEL_MIN_VECTORS", 0)
     sdf = E.queries()[qname](spark, adv_vec_dir)
     got = sorted(
         tuple(_norm(v) for v in r) for r in sdf.select(sorted(sdf.columns)).collect()

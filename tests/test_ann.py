@@ -123,6 +123,50 @@ def test_cosine_score_pairs_rejects_ragged_vectors(spark):
         score([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0, 7.0, 8.0]])
 
 
+VERIFY_KEYS = ["semantic_dedup", "embedding_dedup", "ann_recall_report"]
+
+
+def _crosscheck():
+    import importlib.util
+    import pathlib
+
+    import __spark_entry__ as E
+
+    path = pathlib.Path(E.__file__).resolve().parent / "scripts" / "crosscheck.py"
+    spec = importlib.util.spec_from_file_location("crosscheck", path)
+    crosscheck = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(crosscheck)
+    return crosscheck
+
+
+def test_verify_route_pin_and_equivalence(spark, sf_dir, monkeypatch):
+    """vectors.cosine_verify routes by the vector count: at sf0.01
+    (500 vectors) no verify key plans a Python eval node; with the
+    crossover at 0 each plans one.  Both routes give the same
+    crosscheck value hash."""
+    import os
+
+    import __spark_entry__ as E
+    from bank_transaction_data_warehouse_spark.functions import vectors
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    queries, table_sig = E.queries(), _crosscheck().table_sig
+
+    def run(name):
+        df = queries[name](spark, sf001)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        sig = table_sig(df.columns, [tuple(r) for r in df.collect()])
+        spark.catalog.clearCache()
+        return "MapInArrow" in plan, sig
+
+    fold = {k: run(k) for k in VERIFY_KEYS}
+    monkeypatch.setattr(vectors, "KERNEL_MIN_VECTORS", 0)
+    kernel = {k: run(k) for k in VERIFY_KEYS}
+    assert [fold[k][0] for k in VERIFY_KEYS] == [False] * 3
+    assert [kernel[k][0] for k in VERIFY_KEYS] == [True] * 3
+    assert {k: s for k, (_, s) in kernel.items()} == {k: s for k, (_, s) in fold.items()}
+
+
 @pytest.mark.parametrize("fn", ["lsh_topk", "embedding_near_dups_lsh"])
 def test_lsh_dim_mismatch_raises(spark, fn):
     """32-dim vectors under dim=64 would null-pad in zip_with and hash

@@ -102,3 +102,41 @@ def test_spending_habits_shares_sum_to_100(spark, sf_dir):
     )
     for r in per_cust:
         assert abs(r.total - 100.0) < 0.5, r
+
+
+def test_dangling_nation_key_is_quarantined(spark, sf_dir, tmp_path):
+    """A customer whose c_nationkey matches no nation has no
+    dim_customer row, so the fact drops its transactions: each of
+    them must be quarantined as UNKNOWN_LOCATION, so that every clean
+    transaction is either in the fact or quarantined, in both engines."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    out = tmp_path / "dangling_nation"
+    out.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != "customer.parquet":
+            os.symlink(os.path.join(sf_dir, name), out / name)
+    cust = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
+    i = cust.schema.get_field_index("c_nationkey")
+    keys = cust.column(i).to_pylist()
+    cust = cust.set_column(i, "c_nationkey", pa.array([99] + keys[1:], cust.schema.field(i).type))
+    pq.write_table(cust, out / "customer.parquet")
+    d = str(out)
+
+    q = WH.quarantine_transactions(spark, d)
+    unknown = q.where(F.col("reject_reason") == "UNKNOWN_LOCATION").count()
+    assert unknown > 0
+    assert WH.clean_transactions(spark, d).count() == WH.fact_spending(spark, d).count() + unknown
+
+    con = duckdb.connect()
+    for t in ("lineitem", "orders", "customer", "nation"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
+    want = sorted(con.sql(E.oracle_sql()["quarantine_transactions"]).fetchall())
+    got = sorted(tuple(r) for r in q.select("l_orderkey", "l_linenumber", "reject_reason").collect())
+    assert got == want
