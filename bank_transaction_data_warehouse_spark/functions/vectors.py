@@ -16,21 +16,19 @@ of three forms:
 - `cosine_verify`, the one pair verify (every candidate-pair cosine
   in the package: semantic_dedup and operators/ann._cosine_verify).
   It routes by the number of vectors entering the pair join, which
-  the plan layer knows at build time (a memoized table row count or
-  a fixed sample size): below `KERNEL_MIN_VECTORS` the JVM fold
-  (`dot`), from it on the Arrow kernel `cosine_score_pairs`, which
-  starts Python workers.  Measured
+  the plan layer knows at build time (the memoized embeddings row
+  count; a caller that passes none gets the fold): below
+  `KERNEL_MIN_VECTORS` the JVM fold (`dot`), from it on the Arrow
+  kernel `cosine_score_pairs`, which starts Python workers.  Measured
   crossover, warm exec seconds fold / kernel at 4 cores on row
   subsets of the sf0.1 embeddings (ENGINEERING_NOTES.md has the
-  fresh-session runs, the second process of each cell and how the
-  3,500 / 5,000 sets were made):
+  fresh-session runs, the second process of each cell and the larger
+  sets):
 
       vectors   semantic_dedup   embedding_dedup
         500      0.40 / 0.67      0.56 / 0.50
       1,000      0.55 / 0.70      1.12 / 0.79
       2,000      1.47 / 1.05      3.57 / 1.64
-      3,500      3.47 / 1.86     12.23 / 3.57
-      5,000      5.75 / 3.18     27.69 / 7.07
 
   So sf0.01 (500 vectors) verifies on the fold and starts no Python
   worker, and sf0.1 (2,000) on the kernel.

@@ -28,8 +28,8 @@ Pairs: one normed-vector frame -> candidates -> one cosine verify.
 `_normed` drops zero-norm vectors and computes each norm ONCE, before
 any join; `_cosine_verify` scores the candidates only, through the
 package's one pair verify, functions/vectors.cosine_verify, which
-picks the JVM fold or the Arrow kernel by the number of vectors the
-caller passes as ``n_vectors``.  The candidate step has three shapes:
+picks the JVM fold or the Arrow kernel by the number of vectors
+entering the pair join.  The candidate step has three shapes:
   - embedding_near_dups: cross join, id_1 < id_2.  O(n^2): the recall
     oracle, not a scale path.
   - embedding_near_dups_lsh: probe ⋈ code.  Each bucket code and its
@@ -224,10 +224,11 @@ def _pair_side(normed: DataFrame, i: int, *extra) -> DataFrame:
     )
 
 
-def _cosine_verify(pairs: DataFrame, threshold: float, n_vectors: int) -> DataFrame:
+def _cosine_verify(pairs: DataFrame, threshold: float, n_vectors: int = 0) -> DataFrame:
     """The pair skeleton's one verify: exact cosine dot / (na * nb) on
     the candidates only (vectors.cosine_verify, routed by the
-    ``n_vectors`` entering the pair join), kept at >= threshold."""
+    ``n_vectors`` entering the pair join; 0, unknown, is the fold),
+    kept at >= threshold."""
     return vectors.cosine_verify(
         pairs, "va", "vb", "na", "nb", ("vec_id_1", "vec_id_2"), n_vectors
     ).where(F.col("cosine") >= threshold)
@@ -238,22 +239,18 @@ def embedding_near_dups(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    n_vectors: int = 0,
 ) -> DataFrame:
     """Vector near-duplicate pairs: cosine >= threshold, id1 < id2.
     Brute-force all-pairs — O(n^2): the correctness/recall oracle for
-    `embedding_near_dups_lsh`, NOT a scale path.  The exposed
-    `embedding_dedup` query uses the LSH-bucketed variant.
-    ``n_vectors``: the corpus's vector count as the caller knows it
-    at build time (0 if unknown); it only picks the verify route
-    (vectors.cosine_verify), never the result."""
+    `embedding_near_dups_lsh`, NOT a scale path, so it runs on small
+    samples and verifies on the JVM fold.  The exposed
+    `embedding_dedup` query uses the LSH-bucketed variant."""
     normed = _normed(corpus, vec_col, id_col)
     return _cosine_verify(
         _pair_side(normed, 1)
         .crossJoin(_pair_side(normed, 2))
         .where(F.col("vec_id_1") < F.col("vec_id_2")),
         threshold,
-        n_vectors,
     )
 
 
@@ -283,7 +280,9 @@ def embedding_near_dups_lsh(
     pair set with `blocked_self_pairs` — same pairs, parallelism
     ~shards²/2 per hot key.  A vector whose length is not ``dim``
     raises (see _lsh_code) when the frame is evaluated, not here.
-    ``n_vectors`` picks the verify route, as in embedding_near_dups.
+    ``n_vectors``: the corpus's vector count as the caller knows it
+    at build time (0 if unknown); it only picks the verify route
+    (vectors.cosine_verify), never the result.
     """
     if multiprobe_bits not in (0, 1):
         raise ValueError("multiprobe_bits must be 0 or 1")

@@ -544,22 +544,20 @@ ORACLE["ann_lsh_topk"] = _cosine_topk_sql(
 )
 
 
-_ANN_SAMPLE = 500
-
-
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the LSH-bucketed near-dup path vs exact all-pairs,
-    measured on a bounded eval sample (vec_id < _ANN_SAMPLE) — the
-    standard ML-eval pattern: the exact side is quadratic, so it runs
-    on a fixed-size sample regardless of corpus SF; the sample bound
-    is also the vector count both verifies route by.  One-row report
-    the driver can hash: pair counts + recall fraction."""
-    sample = _embs_wide(spark, sf_dir).where(F.col("vec_id") < _ANN_SAMPLE)
-    n_exact = ANN.embedding_near_dups(
-        sample, threshold=0.45, n_vectors=_ANN_SAMPLE
-    ).agg(F.count("*").alias("n_exact_pairs"))
+    measured on a bounded eval sample (vec_id < 500) — the standard
+    ML-eval pattern: the exact side is quadratic, so it runs on a
+    fixed-size sample regardless of corpus SF.  Both verifies pass no
+    vector count, so they run on the JVM fold (500 vectors is below
+    the kernel crossover).  One-row report the driver can hash: pair
+    counts + recall fraction."""
+    sample = _embs_wide(spark, sf_dir).where(F.col("vec_id") < 500)
+    n_exact = ANN.embedding_near_dups(sample, threshold=0.45).agg(
+        F.count("*").alias("n_exact_pairs")
+    )
     n_lsh = ANN.embedding_near_dups_lsh(
-        sample, threshold=0.45, n_planes=4, dim=64, n_vectors=_ANN_SAMPLE
+        sample, threshold=0.45, n_planes=4, dim=64
     ).agg(F.count("*").alias("n_lsh_pairs"))
     # NULL recall when the corpus has no exact pairs: under ANSI mode
     # the bare division would raise divideByZeroError on such corpora
@@ -578,7 +576,7 @@ QUERIES["ann_recall_report"] = ann_recall_report
 
 ORACLE["ann_recall_report"] = f"""
 WITH sample AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_ANN_SAMPLE} AND {_nz_sql()}
+  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500 AND {_nz_sql()}
 ),
 exact AS (
   SELECT count(*) AS n_exact_pairs

@@ -98,6 +98,12 @@ WHERE EXISTS (SELECT 1 FROM clean_accounts a WHERE a.o_custkey = c.c_custkey)
 """
 
 
+# clean_transactions' one line-level rule, shared with the quarantine's
+# UNKNOWN_LOCATION: a line ships on or after its account's open date
+SHIPS_AFTER_OPEN = "l_shipdate >= o_orderdate"
+_SHIPS_AFTER_OPEN_SQL = "l.l_shipdate >= a.o_orderdate"
+
+
 def clean_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transactions that postdate their account's open date
     (etl.py:123-136: TransactionTimestamp >= OpenDate, inner join).
@@ -108,7 +114,7 @@ def clean_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     accts = clean_accounts(spark, sf_dir).select("o_orderkey", "o_orderdate")
     return (
         li.join(accts, li.l_orderkey == accts.o_orderkey, "inner")
-        .where(F.col("l_shipdate") >= F.col("o_orderdate"))
+        .where(F.expr(SHIPS_AFTER_OPEN))
         .drop("o_orderkey", "o_orderdate")
     )
 
@@ -117,7 +123,7 @@ _CLEAN_TXN_CTE = f"""
 clean_txn AS (
   SELECT l.* FROM lineitem l
   JOIN clean_accounts a ON l.l_orderkey = a.o_orderkey
-  WHERE l.l_shipdate >= a.o_orderdate
+  WHERE {_SHIPS_AFTER_OPEN_SQL}
 )"""
 
 ORACLE["clean_transactions"] = f"""
@@ -499,34 +505,33 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cleaning step's reject side WITH reason codes — the
     reference silently drops bad rows (etl.py:104-136); production
     pipelines quarantine them for audit.  One pass, reasons as a pure
-    CASE cascade (first matching reason wins).  UNKNOWN_LOCATION is a
-    transaction that passes cleaning (clean_transactions: it ships on
-    or after the open date of an account with a non-negative total
-    and an existing customer) but whose customer's ``c_nationkey``
-    matches no nation: dim_customer inner-joins the nation, so the
-    fact has no row for it."""
+    CASE cascade (first matching reason wins).  UNKNOWN_LOCATION comes
+    first: a clean line (one of a clean_accounts account, kept by
+    SHIPS_AFTER_OPEN) whose customer's ``c_nationkey`` matches no
+    nation (NULL included) has no fact row, as dim_customer
+    inner-joins the nation, so it is labelled by why the fact lacks it
+    whatever its line-level faults (a NONPOSITIVE_QTY line that passes
+    cleaning is still in the fact).  So every clean line is in
+    fact_spending or quarantined as UNKNOWN_LOCATION, not both."""
     li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-    placeless = (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left_anti")
-        .select(F.col("c_custkey").alias("_placeless")).distinct()
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    orders = orders.join(
-        F.broadcast(placeless), orders.o_custkey == F.col("_placeless"), "left"
-    ).select("o_orderkey", "o_orderdate", "o_totalprice", "_placeless")
-    joined = li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left")
+    placeless = cust.join(
+        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left_anti"
+    ).select(F.col("c_custkey").alias("_placeless"))
+    unlocated = clean_accounts(spark, sf_dir).join(
+        F.broadcast(placeless), F.col("o_custkey") == F.col("_placeless"), "left_semi"
+    ).select(F.col("o_orderkey").alias("_unlocated"))
+    joined = li.join(
+        F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left"
+    ).join(F.broadcast(unlocated), F.col("l_orderkey") == F.col("_unlocated"), "left")
     reason = (
-        F.when(F.col("o_orderkey").isNull(), "ORPHAN_ACCOUNT")
+        F.when(F.col("_unlocated").isNotNull() & F.expr(SHIPS_AFTER_OPEN), "UNKNOWN_LOCATION")
+        .when(F.col("o_orderkey").isNull(), "ORPHAN_ACCOUNT")
         .when(F.col("l_shipdate") < F.col("o_orderdate"), "PREDATES_OPEN")
         .when(F.col("l_quantity") <= 0, "NONPOSITIVE_QTY")
         .when(F.col("l_extendedprice") < 0, "NEGATIVE_AMOUNT")
-        .when(
-            (F.col("l_shipdate") >= F.col("o_orderdate")) & (F.col("o_totalprice") >= 0)
-            & F.col("_placeless").isNotNull(),
-            "UNKNOWN_LOCATION",
-        )
     )
     return (
         joined.withColumn("reject_reason", reason)
@@ -535,20 +540,23 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REJECT_REASON_SQL = """CASE WHEN o.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
-            WHEN l.l_shipdate < o.o_orderdate THEN 'PREDATES_OPEN'
+_REJECT_REASON_SQL = f"""CASE WHEN u.o_orderkey IS NOT NULL AND {_SHIPS_AFTER_OPEN_SQL}
+                 THEN 'UNKNOWN_LOCATION'
+            WHEN a.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
+            WHEN l.l_shipdate < a.o_orderdate THEN 'PREDATES_OPEN'
             WHEN l.l_quantity <= 0 THEN 'NONPOSITIVE_QTY'
-            WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT'
-            WHEN l.l_shipdate >= o.o_orderdate AND o.o_totalprice >= 0
-                 AND p.c_custkey IS NOT NULL THEN 'UNKNOWN_LOCATION' END"""
+            WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT' END"""
 ORACLE["quarantine_transactions"] = f"""
-WITH placeless AS (
-  SELECT DISTINCT c.c_custkey FROM customer c
-  WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
+WITH {_CLEAN_ACCOUNTS_CTE.strip()},
+unlocated AS (
+  SELECT o_orderkey FROM clean_accounts
+  WHERE o_custkey IN (
+    SELECT c.c_custkey FROM customer c
+    WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey))
 )
-SELECT l_orderkey, l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
-FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-LEFT JOIN placeless p ON o.o_custkey = p.c_custkey
+SELECT l.l_orderkey, l.l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
+FROM lineitem l LEFT JOIN orders a ON l.l_orderkey = a.o_orderkey
+LEFT JOIN unlocated u ON l.l_orderkey = u.o_orderkey
 WHERE ({_REJECT_REASON_SQL}) IS NOT NULL
 """
 

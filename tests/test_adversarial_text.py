@@ -167,11 +167,10 @@ def adv_vec_dir(spark, tmp_path_factory):
     return str(d)
 
 
-# the keys whose pairs go through vectors.cosine_verify: a 10-vector
-# corpus routes them to the JVM fold, so each runs a second time with
-# the crossover at 0, to reach the Arrow kernel too
-VERIFY_QUERIES = ["embedding_dedup", "ann_recall_report", "semantic_dedup",
-                  "semantic_dedup_clusters"]
+# the keys whose pair verify routes by the corpus's vector count: a
+# 10-vector corpus routes them to the JVM fold, so each runs a second
+# time with the crossover at 0, to reach the Arrow kernel too
+VERIFY_QUERIES = ["embedding_dedup", "semantic_dedup", "semantic_dedup_clusters"]
 
 
 @pytest.mark.parametrize(

@@ -34,6 +34,7 @@ ORDERS = [
     (13, 4, "O", 0.0, D(1900, 1, 1), "3-MEDIUM"),  # ancient open date
     (14, 777, "O", 50.0, D(2024, 1, 1), "4-NOT SPECIFIED"),  # orphan custkey
     (15, 6, None, -1.0, D(2100, 1, 1), "1-URGENT"),  # far future + null status
+    (16, 6, "O", 10.0, D(2024, 3, 1), "5-LOW"),     # clean, customer's nation dangles
 ]
 
 LINEITEM = [
@@ -46,6 +47,8 @@ LINEITEM = [
     (13, 999, 1, 1, 3.0, 10.0, 0.0, 0.0, "N", "O", None),             # null shipdate + dangling part
     (14, 100, 1, 1, 4.0, 20.0, 0.02, 0.0, "N", "O", D(2024, 1, 5)),   # orphan order's line
     (15, 101, 1, 1, 6.0, 30.0, 0.0, 0.08, "N", "O", D(2100, 1, 2)),   # far future
+    (16, 100, 1, 1, 0.0, 5.0, 0.0, 0.0, "N", "O", D(2024, 3, 2)),     # clean, zero qty, no nation
+    (16, 102, 1, 2, 1.0, 9.0, 0.0, 0.0, "N", "O", D(2024, 3, 3)),     # clean, no nation
 ]
 
 PART = [
@@ -162,3 +165,23 @@ def test_adversarial_warehouse_parity(spark, adv_wh_dir, qname):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     want = sorted(tuple(_norm(r[i]) for i in order) for r in rel.fetchall())
     assert got == want
+
+
+def test_unlocated_lines_are_quarantined(spark, adv_wh_dir):
+    """Order 16's lines pass cleaning, but customer 6's nation key
+    dangles, so the fact has no row for them: both are quarantined as
+    UNKNOWN_LOCATION, the zero-quantity line (16, 1) too (the parity
+    test above holds the oracle to the same), and every clean line is
+    in the fact or quarantined as UNKNOWN_LOCATION."""
+    from bank_transaction_data_warehouse_spark.plans import warehouse as WH
+
+    reason = {
+        (r.l_orderkey, r.l_linenumber): r.reject_reason
+        for r in WH.quarantine_transactions(spark, adv_wh_dir).collect()
+    }
+    assert reason[(16, 1)] == reason[(16, 2)] == "UNKNOWN_LOCATION"
+    unknown = sum(v == "UNKNOWN_LOCATION" for v in reason.values())
+    assert (
+        WH.clean_transactions(spark, adv_wh_dir).count()
+        == WH.fact_spending(spark, adv_wh_dir).count() + unknown
+    )

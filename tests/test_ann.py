@@ -123,7 +123,11 @@ def test_cosine_score_pairs_rejects_ragged_vectors(spark):
         score([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0, 7.0, 8.0]])
 
 
-VERIFY_KEYS = ["semantic_dedup", "embedding_dedup", "ann_recall_report"]
+# the queries whose pair verify routes by a vector count (the kernel
+# route is reachable), and ann_recall_report, whose fixed 500-vector
+# sample always verifies on the fold
+KERNEL_KEYS = ["semantic_dedup", "embedding_dedup"]
+FOLD_KEYS = KERNEL_KEYS + ["ann_recall_report"]
 
 
 def _crosscheck():
@@ -142,8 +146,8 @@ def _crosscheck():
 def test_verify_route_pin_and_equivalence(spark, sf_dir, monkeypatch):
     """vectors.cosine_verify routes by the vector count: at sf0.01
     (500 vectors) no verify key plans a Python eval node; with the
-    crossover at 0 each plans one.  Both routes give the same
-    crosscheck value hash."""
+    crossover at 0 the counted keys plan one.  Both routes give the
+    same crosscheck value hash."""
     import os
 
     import __spark_entry__ as E
@@ -159,12 +163,12 @@ def test_verify_route_pin_and_equivalence(spark, sf_dir, monkeypatch):
         spark.catalog.clearCache()
         return "MapInArrow" in plan, sig
 
-    fold = {k: run(k) for k in VERIFY_KEYS}
+    fold = {k: run(k) for k in FOLD_KEYS}
     monkeypatch.setattr(vectors, "KERNEL_MIN_VECTORS", 0)
-    kernel = {k: run(k) for k in VERIFY_KEYS}
-    assert [fold[k][0] for k in VERIFY_KEYS] == [False] * 3
-    assert [kernel[k][0] for k in VERIFY_KEYS] == [True] * 3
-    assert {k: s for k, (_, s) in kernel.items()} == {k: s for k, (_, s) in fold.items()}
+    kernel = {k: run(k) for k in KERNEL_KEYS}
+    assert {k: p for k, (p, _) in fold.items()} == {k: False for k in FOLD_KEYS}
+    assert {k: p for k, (p, _) in kernel.items()} == {k: True for k in KERNEL_KEYS}
+    assert {k: s for k, (_, s) in kernel.items()} == {k: fold[k][1] for k in KERNEL_KEYS}
 
 
 @pytest.mark.parametrize("fn", ["lsh_topk", "embedding_near_dups_lsh"])

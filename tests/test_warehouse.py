@@ -106,9 +106,10 @@ def test_spending_habits_shares_sum_to_100(spark, sf_dir):
 
 def test_dangling_nation_key_is_quarantined(spark, sf_dir, tmp_path):
     """A customer whose c_nationkey matches no nation has no
-    dim_customer row, so the fact drops its transactions: each of
-    them must be quarantined as UNKNOWN_LOCATION, so that every clean
-    transaction is either in the fact or quarantined, in both engines."""
+    dim_customer row, so the fact drops its clean transactions: each
+    of them must be quarantined as UNKNOWN_LOCATION, so that every
+    clean transaction is either in the fact or quarantined so, in
+    both engines."""
     import os
 
     import duckdb
