@@ -3,20 +3,36 @@ clusters.  Pairwise dedup (ngram_jaccard / minhash_lsh / simhash)
 yields EDGES; a training pipeline needs GROUPS (keep one doc per
 component).
 
-Algorithm: iterative min-label propagation — one-hop undirected label
-diffusion.  Each round is one groupBy-shuffle on node id, and a label
-travels one hop per round, so rounds needed = O(diameter): dedup
-graphs are near-cliques (2-3 rounds in practice), but a 60-node path
-exceeds the default max_iter=50 and raises.  Alternating
-large-star/small-star contraction (Kiveris et al., SoCC 2014) needs
-O(log^2 n) rounds, about log n in practice, and is the open fix.  The driver loop only checks a
-convergence count per round — no graph data ever reaches the driver.
+Algorithm: min-label propagation with Shiloach–Vishkin style hooking
+and pointer jumping, one Spark action per round.  Every node starts
+with the min id of its closed neighbourhood.  Round 1 diffuses labels
+one hop.  Each later round (there is one only if the previous round
+changed a label) also hooks (the node a label names takes the min
+label its pointers heard) and jumps (a node takes its label's label),
+so a long path converges in O(log n) rounds: 14 for a shuffled
+1,000-node path, 19-21 at 10,000 in a Python model of the rounds.
+
+The round's count of changed labels is a ``pyspark.sql.Observation``
+on the frame ``localCheckpoint(eager=True)`` materializes, so a round
+is that one action; the old label rides along the round's
+``groupBy("node")``.  A graph whose labels are final after the initial
+min (near-cliques, disjoint pairs: every graph corpus_curation builds)
+costs exactly one action.  Alternating large-star/small-star
+contraction (Kiveris et al., SoCC 2014) needs at least 4 actions for
+such graphs, so it is not used.  No graph data ever reaches the
+driver; lineage is cut every round; past ``max_iter`` it raises.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# A hook round broadcasts the labels when the previous round counted at
+# most this many nodes: two longs a row, 16 MB, a quarter of the
+# session's 64 MB autoBroadcastJoinThreshold.  Past it Spark picks the
+# joins itself.
+BROADCAST_MAX_NODES = 1_000_000
 
 
 def connected_components(
@@ -26,10 +42,9 @@ def connected_components(
     max_iter: int = 50,
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component =
-    min node id reachable.  One-hop diffusion needs O(diameter)
-    rounds; dedup graphs are near-cliques (2-3 rounds), but a long
-    revision chain can exceed the cap — in that case this RAISES
-    instead of silently returning partial labels."""
+    min node id reachable.  Converges in O(log n) rounds; a graph that
+    does not within ``max_iter`` rounds RAISES instead of silently
+    returning partial labels."""
     edges = (
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -41,7 +56,9 @@ def connected_components(
         # multiplying the pair cost by the round count.  Measured at
         # sf0.1 (semantic_dedup_clusters): build 6.9 s → see
         # ENGINEERING_NOTES.  The 100 TB shape is the same: materialize
-        # the edge list once, iterate over the materialization.
+        # the edge list once, iterate over the materialization.  Kept
+        # after the call: a rebuild of the same plan in the session
+        # reuses it (bench.py's warm builds).
         .persist()
     )
     # label(node) starts as min(node, min neighbor)
@@ -53,37 +70,61 @@ def connected_components(
             F.least(F.col("a"), F.col("_mn")).alias("comp"),
         )
     )
-    converged = False
-    for _ in range(max_iter):
-        # propagate: new label = min over neighbors' labels and own.
-        # localCheckpoint truncates lineage — labels is referenced 3x
-        # per round, so without it round N re-executes all prior
-        # rounds repeatedly (exponential plan growth).
-        neigh = (
-            edges.join(labels, edges.b == labels.node)
-            .select(F.col("a").alias("node"), "comp")
+    small = False
+    for rnd in range(max_iter):
+        labels, seen = _round(edges, labels, hook=rnd > 0, broadcast=small)
+        if seen["changed"] == 0:
+            return labels
+        small = seen["nodes"] <= BROADCAST_MAX_NODES
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds; "
+        "raise max_iter (diameter of the near-dup graph exceeds it)"
+    )
+
+
+def _round(edges: DataFrame, labels: DataFrame, hook: bool, broadcast: bool):
+    """One round in one action and one shuffle: the new (node, comp)
+    frame, checkpointed (truncating lineage, else every round re-plans
+    all earlier ones), and its observed ``changed`` labels and
+    ``nodes``.  ``prev`` is the node's old label: only its own row
+    carries it, so min("prev") passes it through.  With ``broadcast``
+    every label lookup probes one broadcast of ``labels`` keyed on
+    node, which Spark builds once for the round's three lookups."""
+    lookup = F.broadcast(labels) if broadcast else labels
+
+    def label(key: str, alias: str):
+        return lookup.alias(alias), F.col(key) == F.col(f"{alias}.node")
+
+    own = labels.select("node", "comp", F.col("comp").alias("prev"))
+    heard = edges.join(*label("b", "lb"))  # edge (a, b) with label(b)
+    cands = [own, heard.select(F.col("a").alias("node"), F.col("lb.comp").alias("comp"))]
+    if hook:
+        # hook: the node label(a) names takes label(b); jump: a node
+        # takes its label's label
+        cands += [
+            heard.join(*label("a", "la")).select(
+                F.col("la.comp").alias("node"), F.col("lb.comp").alias("comp")
+            ),
+            labels.alias("l").join(*label("l.comp", "up")).select(
+                F.col("l.node").alias("node"), F.col("up.comp").alias("comp")
+            ),
+        ]
+    cand = cands[0]
+    for c in cands[1:]:
+        cand = cand.unionByName(c, allowMissingColumns=True)
+    obs = Observation()
+    new = (
+        cand.groupBy("node")
+        .agg(F.min("comp").alias("comp"), F.min("prev").alias("prev"))
+        .observe(
+            obs,
+            F.count_if(F.col("comp") != F.col("prev")).alias("changed"),
+            F.count(F.lit(1)).alias("nodes"),
         )
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (diameter of the near-dup graph exceeds it)"
-        )
-    return labels
+        .select("node", "comp")
+        .localCheckpoint(eager=True)
+    )
+    return new, obs.get
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:

@@ -2354,13 +2354,13 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end SemDeDup: semantic near-dup PAIRS (trained-codebook
     cluster buckets, semantic_dedup) → connected components → one
     keep-group per component — the groups a curation pipeline actually
-    consumes (keep canonical, drop the rest).  Same iterative
-    min-label propagation as the text-side dedup_clusters
-    (operators/components.py: O(diameter) rounds, raising past
-    max_iter; no graph data on the driver; large-star/small-star
-    contraction, about log n rounds, is still open); members
-    serialized at the query boundary (driver canonicalizer cannot sort
-    list cells)."""
+    consumes (keep canonical, drop the rest).  Same components as the
+    text-side dedup_clusters (operators/components.py: min-label
+    propagation with hooking and pointer jumping, one Spark action per
+    round, O(log n) rounds, raising past max_iter; no graph data on
+    the driver).  The sf0.01 semantic pair graph is final after the
+    initial min label, so it costs one action.  Members serialized at
+    the query boundary (driver canonicalizer cannot sort list cells)."""
     from bank_transaction_data_warehouse_spark.operators.components import (
         connected_components,
     )

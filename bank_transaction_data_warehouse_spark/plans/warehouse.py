@@ -512,7 +512,11 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner-joins the nation, so it is labelled by why the fact lacks it
     whatever its line-level faults (a NONPOSITIVE_QTY line that passes
     cleaning is still in the fact).  So every clean line is in
-    fact_spending or quarantined as UNKNOWN_LOCATION, not both."""
+    fact_spending or quarantined as UNKNOWN_LOCATION, not both.
+    INVALID_ACCOUNT names a line whose order exists but fails
+    clean_accounts, and PREDATES_OPEN is the negation of
+    SHIPS_AFTER_OPEN (a NULL ship date included), so every line is in
+    clean_transactions or quarantined."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     cust = load_table(spark, sf_dir, "customer")
@@ -520,16 +524,21 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     placeless = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left_anti"
     ).select(F.col("c_custkey").alias("_placeless"))
-    unlocated = clean_accounts(spark, sf_dir).join(
+    accts = clean_accounts(spark, sf_dir)
+    valid = accts.select(F.col("o_orderkey").alias("_valid"))
+    unlocated = accts.join(
         F.broadcast(placeless), F.col("o_custkey") == F.col("_placeless"), "left_semi"
     ).select(F.col("o_orderkey").alias("_unlocated"))
-    joined = li.join(
-        F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left"
-    ).join(F.broadcast(unlocated), F.col("l_orderkey") == F.col("_unlocated"), "left")
+    joined = (
+        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left")
+        .join(F.broadcast(valid), F.col("l_orderkey") == F.col("_valid"), "left")
+        .join(F.broadcast(unlocated), F.col("l_orderkey") == F.col("_unlocated"), "left")
+    )
     reason = (
         F.when(F.col("_unlocated").isNotNull() & F.expr(SHIPS_AFTER_OPEN), "UNKNOWN_LOCATION")
         .when(F.col("o_orderkey").isNull(), "ORPHAN_ACCOUNT")
-        .when(F.col("l_shipdate") < F.col("o_orderdate"), "PREDATES_OPEN")
+        .when(F.col("_valid").isNull(), "INVALID_ACCOUNT")
+        .when(F.expr(f"({SHIPS_AFTER_OPEN}) IS NOT TRUE"), "PREDATES_OPEN")
         .when(F.col("l_quantity") <= 0, "NONPOSITIVE_QTY")
         .when(F.col("l_extendedprice") < 0, "NEGATIVE_AMOUNT")
     )
@@ -543,7 +552,8 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REJECT_REASON_SQL = f"""CASE WHEN u.o_orderkey IS NOT NULL AND {_SHIPS_AFTER_OPEN_SQL}
                  THEN 'UNKNOWN_LOCATION'
             WHEN a.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
-            WHEN l.l_shipdate < a.o_orderdate THEN 'PREDATES_OPEN'
+            WHEN v.o_orderkey IS NULL THEN 'INVALID_ACCOUNT'
+            WHEN ({_SHIPS_AFTER_OPEN_SQL}) IS NOT TRUE THEN 'PREDATES_OPEN'
             WHEN l.l_quantity <= 0 THEN 'NONPOSITIVE_QTY'
             WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT' END"""
 ORACLE["quarantine_transactions"] = f"""
@@ -556,6 +566,7 @@ unlocated AS (
 )
 SELECT l.l_orderkey, l.l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
 FROM lineitem l LEFT JOIN orders a ON l.l_orderkey = a.o_orderkey
+LEFT JOIN clean_accounts v ON l.l_orderkey = v.o_orderkey
 LEFT JOIN unlocated u ON l.l_orderkey = u.o_orderkey
 WHERE ({_REJECT_REASON_SQL}) IS NOT NULL
 """

@@ -55,6 +55,18 @@ def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = Non
             os.environ.get("BTDW_WAREHOUSE_DIR", "/tmp/btdw-spark-warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        # lower() through UTF8String's ASCII fast path and the JVM's
+        # Unicode mapping, not ICU: the first ICU case mapping in a JVM
+        # builds CollationAwareUTF8String's title-case table (ICU
+        # toTitleCase over all 1,114,112 code points).  Measured at 4
+        # cores, sf0.01: perfbench corpus_curation's vocab_growth, the
+        # first lower() of its pass, 2.01 → 1.04 s exec (traced), and
+        # stream_ingest run_cpu_s 33.3 → 29.7 s (median of 8 pairs).
+        # The JVM route reads the default locale (a tr-TR JVM lowers
+        # 'I' to a dotless 'ı'), so the driver JVM, which runs the
+        # local executors too, is pinned to en-US.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        .config("spark.driver.extraJavaOptions", "-Duser.language=en -Duser.country=US")
     )
     return builder.getOrCreate()
 

@@ -30,7 +30,7 @@ import sys
 LAYER_KEYS = re.compile(
     r"^(operators\.(keys|components)\.|plans\.materialize\.s$|process\.(setup_)?jit_cpu_s$"
     r"|sources\.load_table\.calls$|session\.start_s$|functions\.python_udf_"
-    r"|plans\.q\.[^.]+\.build_s$)"
+    r"|plans\.q\.[^.]+\.(build|exec)_s$)"
 )
 # The set-up span whose jobs are broken out, in workloads that have it.
 BUILD_SPAN = "setup:build_warehouse"

@@ -185,3 +185,24 @@ def test_unlocated_lines_are_quarantined(spark, adv_wh_dir):
         WH.clean_transactions(spark, adv_wh_dir).count()
         == WH.fact_spending(spark, adv_wh_dir).count() + unknown
     )
+
+
+def test_every_line_is_clean_or_quarantined(spark, adv_wh_dir):
+    """Clean plus quarantined lines cover every line: an order that
+    exists but fails clean_accounts (NULL open date, unknown customer,
+    negative total) gives INVALID_ACCOUNT, and a NULL ship date fails
+    SHIPS_AFTER_OPEN, so it is PREDATES_OPEN.  The fixture's
+    (l_orderkey, l_linenumber) pairs are unique, so they name lines."""
+    from bank_transaction_data_warehouse_spark.plans import warehouse as WH
+
+    def keys(df):
+        return {(r.l_orderkey, r.l_linenumber) for r in df.collect()}
+
+    reason = {
+        (r.l_orderkey, r.l_linenumber): r.reject_reason
+        for r in WH.quarantine_transactions(spark, adv_wh_dir).collect()
+    }
+    clean = keys(WH.clean_transactions(spark, adv_wh_dir))
+    assert clean | set(reason) == {(r[0], r[3]) for r in LINEITEM}
+    assert reason[(12, 1)] == reason[(14, 1)] == reason[(15, 1)] == "INVALID_ACCOUNT"
+    assert reason[(13, 1)] == "PREDATES_OPEN"

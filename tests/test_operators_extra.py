@@ -1,6 +1,7 @@
 """SCD2 merge, connected components, profiler, salted join."""
 
 import datetime as dt
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,14 +69,103 @@ def test_components_chain_and_island(spark):
 
 
 def test_components_path_longer_than_max_iter_raises(spark):
-    """One-hop label diffusion needs O(diameter) rounds: a path that
-    does not converge within max_iter raises, never returns partial
-    labels."""
+    """A path that does not converge within max_iter raises, never
+    returns partial labels (8 nodes need 4 rounds)."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "doc_id_1 long, doc_id_2 long"
     )
     with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
         connected_components(pairs, max_iter=2)
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "doc_id_1 long, doc_id_2 long")
+
+
+def test_components_long_shuffled_path_converges(spark):
+    """Hooking plus pointer jumping: a 1,000-node path whose ids are
+    shuffled along it converges under the default max_iter (one-hop
+    diffusion needs a round per hop)."""
+    ids = list(range(1, 1001))
+    random.Random(7).shuffle(ids)
+    pairs = _edges(spark, list(zip(ids, ids[1:])))
+    comp = connected_components(pairs).collect()
+    assert len(comp) == 1000 and {r.comp for r in comp} == {1}
+
+
+def test_components_large_star_converges(spark):
+    """1,000 leaves around a centre with the largest id."""
+    pairs = _edges(spark, [(1001, i) for i in range(1, 1001)])
+    comp = connected_components(pairs).collect()
+    assert len(comp) == 1001 and {r.comp for r in comp} == {1}
+
+
+def _union_find(pairs):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_components_random_graphs_match_union_find(spark, seed):
+    rnd = random.Random(seed)
+    n = rnd.choice([40, 200, 500])
+    pairs = [
+        (rnd.randrange(n), rnd.randrange(n)) for _ in range(rnd.randrange(n // 2, n))
+    ]
+    want = _union_find(pairs)  # min id per component, self-loops included
+    got = {r.node: r.comp for r in connected_components(_edges(spark, pairs)).collect()}
+    assert got == want
+
+
+def test_components_unbroadcast_lookups_match_union_find(spark, monkeypatch):
+    """Past BROADCAST_MAX_NODES a hook round leaves its joins to Spark."""
+    from bank_transaction_data_warehouse_spark.operators import components
+
+    monkeypatch.setattr(components, "BROADCAST_MAX_NODES", 0)
+    ids = list(range(60))
+    random.Random(5).shuffle(ids)
+    pairs = list(zip(ids, ids[1:])) + [(100, 101), (101, 102)]
+    got = {r.node: r.comp for r in connected_components(_edges(spark, pairs)).collect()}
+    assert got == _union_find(pairs)
+
+
+def test_components_settled_graph_runs_one_action(spark, monkeypatch):
+    """Disjoint edges are final after the initial min label: one
+    round, one checkpoint, no count or collect (the changed-label
+    count is an Observation filled by the checkpoint)."""
+    pairs = _edges(spark, [(2 * i, 2 * i + 1) for i in range(50)])
+    frame = type(pairs)  # the concrete (classic) DataFrame class
+    calls = []
+    checkpoint = frame.localCheckpoint
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return checkpoint(self, *a, **k)
+
+    def no_action(self, *a, **k):
+        raise AssertionError("connected_components ran a count/collect")
+
+    monkeypatch.setattr(frame, "localCheckpoint", counting)
+    monkeypatch.setattr(frame, "count", no_action)
+    monkeypatch.setattr(frame, "collect", no_action)
+    comp = connected_components(pairs)
+    monkeypatch.undo()
+    assert len(calls) == 1
+    assert {(r.node, r.comp) for r in comp.collect()} == {
+        (n, n - n % 2) for n in range(100)
+    }
 
 
 def test_dedup_clusters_members(spark):

@@ -40,3 +40,23 @@ def test_lang_id_markers(spark):
 def test_quality_score_range(spark):
     v = _one(spark, "the " * 20 + "end", T.quality_score(F.col("text")))
     assert 0.0 <= v <= 1.0
+
+
+def test_session_lower_case_mapping(spark):
+    """lower() runs the JVM's Unicode mapping (the session turns ICU
+    case mappings off) in an en-US JVM.  Final sigma, dotted capital I,
+    Latin-1 and sharp s agree with ICU; U+10570 (Unicode 14) is newer
+    than this JVM's tables and stays unchanged, as DuckDB's lower
+    leaves it.  A tr-TR JVM would lower 'I' to a dotless 'ı'."""
+    cases = {
+        "ΣΊΣΥΦΟΣ": "σίσυφος",
+        "İ": "i̇",
+        "ÀÉÎÕÜ Ÿ": "àéîõü ÿ",
+        "Straße ẞ": "straße ß",
+        "\U00010570": "\U00010570",
+        "TITLE Éi": "title éi",
+    }
+    for text, want in cases.items():
+        assert _one(spark, text, F.lower("text")) == want, text
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    assert spark._jvm.java.util.Locale.getDefault().toLanguageTag() == "en-US"
