@@ -28,12 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# A hook round broadcasts the labels when the previous round counted at
-# most this many nodes: two longs a row, 16 MB, a quarter of the
-# session's 64 MB autoBroadcastJoinThreshold.  Past it Spark picks the
-# joins itself.
-BROADCAST_MAX_NODES = 1_000_000
-
 
 def connected_components(
     pairs: DataFrame,
@@ -70,30 +64,25 @@ def connected_components(
             F.least(F.col("a"), F.col("_mn")).alias("comp"),
         )
     )
-    small = False
     for rnd in range(max_iter):
-        labels, seen = _round(edges, labels, hook=rnd > 0, broadcast=small)
-        if seen["changed"] == 0:
+        labels, changed = _round(edges, labels, hook=rnd > 0)
+        if changed == 0:
             return labels
-        small = seen["nodes"] <= BROADCAST_MAX_NODES
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
         "raise max_iter (diameter of the near-dup graph exceeds it)"
     )
 
 
-def _round(edges: DataFrame, labels: DataFrame, hook: bool, broadcast: bool):
-    """One round in one action and one shuffle: the new (node, comp)
-    frame, checkpointed (truncating lineage, else every round re-plans
-    all earlier ones), and its observed ``changed`` labels and
-    ``nodes``.  ``prev`` is the node's old label: only its own row
-    carries it, so min("prev") passes it through.  With ``broadcast``
-    every label lookup probes one broadcast of ``labels`` keyed on
-    node, which Spark builds once for the round's three lookups."""
-    lookup = F.broadcast(labels) if broadcast else labels
+def _round(edges: DataFrame, labels: DataFrame, hook: bool):
+    """One round in one action: the new (node, comp) frame,
+    checkpointed (truncating lineage, else every round re-plans all
+    earlier ones), and its observed count of changed labels.  ``prev``
+    is the node's old label: only its own row carries it, so
+    min("prev") passes it through.  Spark plans the label lookups."""
 
     def label(key: str, alias: str):
-        return lookup.alias(alias), F.col(key) == F.col(f"{alias}.node")
+        return labels.alias(alias), F.col(key) == F.col(f"{alias}.node")
 
     own = labels.select("node", "comp", F.col("comp").alias("prev"))
     heard = edges.join(*label("b", "lb"))  # edge (a, b) with label(b)
@@ -119,12 +108,11 @@ def _round(edges: DataFrame, labels: DataFrame, hook: bool, broadcast: bool):
         .observe(
             obs,
             F.count_if(F.col("comp") != F.col("prev")).alias("changed"),
-            F.count(F.lit(1)).alias("nodes"),
         )
         .select("node", "comp")
         .localCheckpoint(eager=True)
     )
-    return new, obs.get
+    return new, obs.get["changed"]
 
 
 def dedup_clusters(pairs: DataFrame) -> DataFrame:

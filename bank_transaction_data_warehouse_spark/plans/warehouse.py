@@ -524,18 +524,22 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     placeless = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey, "left_anti"
     ).select(F.col("c_custkey").alias("_placeless"))
-    accts = clean_accounts(spark, sf_dir)
-    valid = accts.select(F.col("o_orderkey").alias("_valid"))
-    unlocated = accts.join(
-        F.broadcast(placeless), F.col("o_custkey") == F.col("_placeless"), "left_semi"
-    ).select(F.col("o_orderkey").alias("_unlocated"))
+    # one row per clean_accounts order, flagged when its customer has
+    # no nation
+    valid = (
+        clean_accounts(spark, sf_dir)
+        .join(F.broadcast(placeless), F.col("o_custkey") == F.col("_placeless"), "left")
+        .select(
+            F.col("o_orderkey").alias("_valid"),
+            F.col("_placeless").isNotNull().alias("_unlocated"),
+        )
+    )
     joined = (
         li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey, "left")
         .join(F.broadcast(valid), F.col("l_orderkey") == F.col("_valid"), "left")
-        .join(F.broadcast(unlocated), F.col("l_orderkey") == F.col("_unlocated"), "left")
     )
     reason = (
-        F.when(F.col("_unlocated").isNotNull() & F.expr(SHIPS_AFTER_OPEN), "UNKNOWN_LOCATION")
+        F.when(F.col("_unlocated") & F.expr(SHIPS_AFTER_OPEN), "UNKNOWN_LOCATION")
         .when(F.col("o_orderkey").isNull(), "ORPHAN_ACCOUNT")
         .when(F.col("_valid").isNull(), "INVALID_ACCOUNT")
         .when(F.expr(f"({SHIPS_AFTER_OPEN}) IS NOT TRUE"), "PREDATES_OPEN")
@@ -549,7 +553,7 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REJECT_REASON_SQL = f"""CASE WHEN u.o_orderkey IS NOT NULL AND {_SHIPS_AFTER_OPEN_SQL}
+_REJECT_REASON_SQL = f"""CASE WHEN v.unlocated AND {_SHIPS_AFTER_OPEN_SQL}
                  THEN 'UNKNOWN_LOCATION'
             WHEN a.o_orderkey IS NULL THEN 'ORPHAN_ACCOUNT'
             WHEN v.o_orderkey IS NULL THEN 'INVALID_ACCOUNT'
@@ -558,16 +562,16 @@ _REJECT_REASON_SQL = f"""CASE WHEN u.o_orderkey IS NOT NULL AND {_SHIPS_AFTER_OP
             WHEN l.l_extendedprice < 0 THEN 'NEGATIVE_AMOUNT' END"""
 ORACLE["quarantine_transactions"] = f"""
 WITH {_CLEAN_ACCOUNTS_CTE.strip()},
-unlocated AS (
-  SELECT o_orderkey FROM clean_accounts
-  WHERE o_custkey IN (
+valid AS (
+  SELECT ca.o_orderkey, p.c_custkey IS NOT NULL AS unlocated
+  FROM clean_accounts ca LEFT JOIN (
     SELECT c.c_custkey FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey))
+    WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
+  ) p ON ca.o_custkey = p.c_custkey
 )
 SELECT l.l_orderkey, l.l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
 FROM lineitem l LEFT JOIN orders a ON l.l_orderkey = a.o_orderkey
-LEFT JOIN clean_accounts v ON l.l_orderkey = v.o_orderkey
-LEFT JOIN unlocated u ON l.l_orderkey = u.o_orderkey
+LEFT JOIN valid v ON l.l_orderkey = v.o_orderkey
 WHERE ({_REJECT_REASON_SQL}) IS NOT NULL
 """
 

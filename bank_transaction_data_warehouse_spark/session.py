@@ -64,9 +64,11 @@ def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = Non
         # stream_ingest run_cpu_s 33.3 → 29.7 s (median of 8 pairs).
         # The JVM route reads the default locale (a tr-TR JVM lowers
         # 'I' to a dotless 'ı'), so the driver JVM, which runs the
-        # local executors too, is pinned to en-US.
+        # local executors too, is pinned to en-US.  defaultJavaOptions
+        # comes before extraJavaOptions on the JVM's command line, so a
+        # user's extraJavaOptions still applies (and wins on a clash).
         .config("spark.sql.icu.caseMappings.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Duser.language=en -Duser.country=US")
+        .config("spark.driver.defaultJavaOptions", "-Duser.language=en -Duser.country=US")
     )
     return builder.getOrCreate()
 

@@ -129,18 +129,6 @@ def test_components_random_graphs_match_union_find(spark, seed):
     assert got == want
 
 
-def test_components_unbroadcast_lookups_match_union_find(spark, monkeypatch):
-    """Past BROADCAST_MAX_NODES a hook round leaves its joins to Spark."""
-    from bank_transaction_data_warehouse_spark.operators import components
-
-    monkeypatch.setattr(components, "BROADCAST_MAX_NODES", 0)
-    ids = list(range(60))
-    random.Random(5).shuffle(ids)
-    pairs = list(zip(ids, ids[1:])) + [(100, 101), (101, 102)]
-    got = {r.node: r.comp for r in connected_components(_edges(spark, pairs)).collect()}
-    assert got == _union_find(pairs)
-
-
 def test_components_settled_graph_runs_one_action(spark, monkeypatch):
     """Disjoint edges are final after the initial min label: one
     round, one checkpoint, no count or collect (the changed-label
