@@ -130,9 +130,9 @@ def _keyed_self_join(
     coalesces the key shuffle into one task and serializes the pair
     blow-up, while a user-specified (count, key) repartition is exempt
     from coalescing.  ``parts``: callers that know the input size pass
-    a data-derived width (plans/corpus._docs_parts); the conf fallback
-    over-parallelizes small inputs (r15 width sweep: ~2x faster pinned
-    at 8-16 than at 32 on 5,000 docs)."""
+    the width rule's width of their input (plans/corpus._parts, i.e.
+    sources/tables.parallelism_for); the conf fallback
+    over-parallelizes small inputs."""
     frame = frame.repartition(parts or _conf_width(frame), *keys)
 
     def side(s: str) -> DataFrame:

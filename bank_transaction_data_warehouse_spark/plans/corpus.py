@@ -42,17 +42,6 @@ def _empty(spark: SparkSession, ddl: str) -> DataFrame:
     )
 
 
-# Rows-per-task weights for the two corpus tables (r15 width sweep at
-# fixed local[32], table in OPTIMIZATION_r15.md): the text pipelines'
-# sweet spot is ~300-600 rows/task (width 8-16 at sf0.1's 5,000 docs
-# — e.g. dup_shingle_ratio 0.86 s at width 32 vs 0.45 s at 8-16), the
-# vector pipelines' ~250 (width 8 at 2,000 vectors: kmeans 0.47 s at
-# 32 vs 0.22 s at 8).  At cluster scale rows/weight >> any
-# shuffle.partitions, so both degrade to full shuffle width.
-_DOCS_ROWS_PER_TASK = 320
-_EMBS_ROWS_PER_TASK = 250
-
-
 def _docs_wide(spark, sf_dir):
     """Documents with the input-skew remedy applied (guide §2.5): a
     single-row-group parquet file scans as ONE task and serializes
@@ -61,13 +50,10 @@ def _docs_wide(spark, sf_dir):
     measured r14: the extra exchange WINS there (e.g. minhash
     2.9→1.5 s, doc_quality 0.75→0.20 s) but LOSES on light queries
     (dedup_exact's md5 groupBy +0.3 s of pure stage latency), so the
-    spread is per-query opt-in, not reader-global.  Width is derived
-    from the table's rows (spread_scan r15), never the session conf;
-    at cluster scale (non-degenerate scan) no shuffle is paid."""
-    return spread_scan(
-        spark, sf_dir, "documents", "doc_id",
-        rows_per_task=_DOCS_ROWS_PER_TASK,
-    )
+    spread is per-query opt-in, not reader-global.  Width is
+    sources.tables.parallelism_for of the table's rows; at cluster
+    scale (non-degenerate scan) no shuffle is paid."""
+    return spread_scan(spark, sf_dir, "documents", "doc_id")
 
 
 def _embs(spark, sf_dir):
@@ -81,27 +67,15 @@ def _embs_wide(spark, sf_dir):
     embedding_dedup 1.04→0.84 s); model-training collects and light
     consumers stay on the plain scan (the extra exchange is pure
     stage latency there)."""
-    return spread_scan(
-        spark, sf_dir, "embeddings", "vec_id",
-        rows_per_task=_EMBS_ROWS_PER_TASK,
-    )
+    return spread_scan(spark, sf_dir, "embeddings", "vec_id")
 
 
-def _docs_parts(spark, sf_dir, rows_per_task=_DOCS_ROWS_PER_TASK):
-    """Data-derived width for pinned self-join expansions over the
-    documents table — passed to the dedup operators' ``parts`` so the
-    expansion exchanges stop inheriting spark.sql.shuffle.partitions
-    (the r14 over-parallelization: see sources/tables.parallelism_for
-    and the width sweep)."""
-    return parallelism_for(
-        spark, table_rows(spark, sf_dir, "documents"), rows_per_task
-    )
-
-
-def _embs_parts(spark, sf_dir, rows_per_task=_EMBS_ROWS_PER_TASK):
-    return parallelism_for(
-        spark, table_rows(spark, sf_dir, "embeddings"), rows_per_task
-    )
+def _parts(spark, sf_dir, table):
+    """Width for the pinned self-join expansions over ``table``: the
+    one width rule (sources/tables.parallelism_for) of its rows,
+    passed to the operators' ``parts`` so the expansion exchanges do
+    not inherit spark.sql.shuffle.partitions."""
+    return parallelism_for(spark, table_rows(spark, sf_dir, table))
 
 
 # ------------------------------------------------------------- dedup
@@ -121,7 +95,7 @@ FROM documents GROUP BY 1
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.ngram_jaccard_pairs(
         _docs_wide(spark, sf_dir), n=3, threshold=0.8,
-        parts=_docs_parts(spark, sf_dir),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 
@@ -204,7 +178,7 @@ def dedup_ngram_jaccard_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.8-2.9 s), unlike the unpruned path where the spread wins."""
     return DD.ngram_jaccard_pairs(
         _docs(spark, sf_dir), n=3, threshold=0.8, max_shingle_df=16,
-        parts=_docs_parts(spark, sf_dir),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 
@@ -238,7 +212,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=64,
         bands=16,
         threshold=0.8,
-        parts=_docs_parts(spark, sf_dir),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 
@@ -339,7 +313,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     faster (operators/dedup module docstring)."""
     return DD.simhash_pairs(
         _docs_wide(spark, sf_dir), max_hamming=3,
-        parts=_docs_parts(spark, sf_dir),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 
@@ -870,7 +844,7 @@ def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2. near-dup removal: in each connected component keep the
     #    canonical (= component label = min id)
     pairs = DD.ngram_jaccard_pairs(
-        docs1, n=3, threshold=0.8, parts=_docs_parts(spark, sf_dir)
+        docs1, n=3, threshold=0.8, parts=_parts(spark, sf_dir, "documents")
     )
     comp = connected_components(pairs)
     losers = comp.where(F.col("node") != F.col("comp")).select(
@@ -2221,13 +2195,12 @@ def semantic_dedup(
     )
     # partitions pinned: the join input is tiny (the corpus side) so
     # AQE would coalesce the pair blow-up AND the verify into one
-    # task; the k*shards*(shards+1)/2 block groups spread
-    # over a DATA-derived width instead (was a hardcoded 32 —
-    # r15 width sweep: 0.96 s at width 4-8 vs 1.27 s at 32 on the
-    # same 32 cores; at cluster scale this is the full conf width)
+    # task; the k*shards*(shards+1)/2 block groups spread over the
+    # one width rule's width of the embeddings (at cluster scale the
+    # full conf width)
     pairs = ANN.blocked_self_pairs(
         coded, "cid", "vec_id", shards=4, payload_cols=("_vf", "_norm"),
-        partitions=_embs_parts(spark, sf_dir),
+        partitions=_parts(spark, sf_dir, "embeddings"),
     )
     scored = V.cosine_verify(
         pairs, "_vf_1", "_vf_2", "_norm_1", "_norm_2",
@@ -2304,15 +2277,12 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver can hash.  NULL recall when the sample has no exact pairs
     (ANSI divide-by-zero guard, same class as ann_recall_report)."""
     # sample-aware widths: the doc_id filter pushes BELOW the spread
-    # exchange, so only ~_MRR_SAMPLE rows ever shuffle — width must be
-    # sized to the SAMPLE, not the table (r14 shipped 6 exchanges of
-    # width 32 around 500 rows and the driver measured it 4.3x slower
-    # at 32 cores than 8; width-sweep optimum here is 4-8)
+    # exchange, so only ~_MRR_SAMPLE rows ever shuffle — every width
+    # is sized to the SAMPLE, not the table
     sample = spread_scan(
-        spark, sf_dir, "documents", "doc_id",
-        rows_per_task=64, rows_hint=_MRR_SAMPLE,
+        spark, sf_dir, "documents", "doc_id", rows_hint=_MRR_SAMPLE
     ).where(F.col("doc_id") < _MRR_SAMPLE)
-    sample_parts = parallelism_for(spark, _MRR_SAMPLE, 64)
+    sample_parts = parallelism_for(spark, _MRR_SAMPLE)
     n_exact = DD.ngram_jaccard_pairs(
         sample, n=3, threshold=0.8, parts=sample_parts
     ).agg(F.count("*").alias("n_exact_pairs"))
@@ -2616,7 +2586,7 @@ def dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     near = DD.minhash_lsh_pairs(
         docs, k=64, bands=16, threshold=0.8,
-        parts=_docs_parts(spark, sf_dir),
+        parts=_parts(spark, sf_dir, "documents"),
     ).agg(F.count("*").cast("bigint").alias("n_near_dup_pairs"))
     return tot.crossJoin(near).select(
         "n_docs",
@@ -2731,10 +2701,7 @@ def media_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=_MFD_THRESHOLD,
         max_df=_MFD_MAX_DF,
         set_col="frame_set",
-        # width sweep optimum 4-8 at sf0.1 (0.62-0.72 s vs 1.18 s at
-        # conf width): frames explode ~docs x len/160 rows, so the
-        # per-doc weight is heavier than shingles — fewer docs/task
-        parts=_docs_parts(spark, sf_dir, rows_per_task=640),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 
@@ -2790,7 +2757,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §8: move the payload once).
     docs = _docs_wide(spark, sf_dir)
     banded = DD.minhash_band_keys(docs, k=64, bands=16, n=3)
-    cand = DD._lsh_candidates(banded, parts=_docs_parts(spark, sf_dir))
+    cand = DD._lsh_candidates(banded, parts=_parts(spark, sf_dir, "documents"))
     fold = F.regexp_replace("text", r"[^\x00-\x7f]", "?").alias("_ft")
     pairs = DD._jaccard_verify(
         cand, DD.shingle_sets(docs, n=3, keep=(fold,)), 0.8, keep=("_ft",)
@@ -2967,10 +2934,7 @@ def media_frame_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_MFL_K,
         bands=_MFL_BANDS,
         threshold=_MFL_THRESHOLD,
-        # frames are heavier per doc than shingles (len/160 elements):
-        # width 8 at sf0.1 (sweep w8 1.18 vs w16 1.22; the 8-core run
-        # confirms 8-wide end-to-end beats 16)
-        parts=_docs_parts(spark, sf_dir, rows_per_task=640),
+        parts=_parts(spark, sf_dir, "documents"),
     )
 
 

@@ -516,7 +516,9 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     INVALID_ACCOUNT names a line whose order exists but fails
     clean_accounts, and PREDATES_OPEN is the negation of
     SHIPS_AFTER_OPEN (a NULL ship date included), so every line is in
-    clean_transactions or quarantined."""
+    clean_transactions or quarantined.  A rejected line carries every
+    lineitem column: (l_orderkey, l_linenumber) is not a key of the
+    lineitem table, so only the whole row names it."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     cust = load_table(spark, sf_dir, "customer")
@@ -549,7 +551,7 @@ def quarantine_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.withColumn("reject_reason", reason)
         .where(F.col("reject_reason").isNotNull())
-        .select("l_orderkey", "l_linenumber", "reject_reason")
+        .select(*li.columns, "reject_reason")
     )
 
 
@@ -569,7 +571,7 @@ valid AS (
     WHERE NOT EXISTS (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
   ) p ON ca.o_custkey = p.c_custkey
 )
-SELECT l.l_orderkey, l.l_linenumber, {_REJECT_REASON_SQL} AS reject_reason
+SELECT l.*, {_REJECT_REASON_SQL} AS reject_reason
 FROM lineitem l LEFT JOIN orders a ON l.l_orderkey = a.o_orderkey
 LEFT JOIN valid v ON l.l_orderkey = v.o_orderkey
 WHERE ({_REJECT_REASON_SQL}) IS NOT NULL

@@ -29,15 +29,11 @@ def get_spark(app_name: str = "btdw-spark", shuffle_partitions: int | None = Non
         # dozens of sub-MB reduce tasks alive on small shuffles, and
         # the r15 A/B measured the suite ~7% faster with real sizing
         # (guide §2.2 — partitions sized by data, AQE coalescing).
-        # Advisory default 16m locally (A/B over 64m/16m/8m; the 8-60
-        # MB aggregate shuffles keep a few parallel reducers while
-        # tiny shuffles still collapse to one task); production sets
-        # BTDW_AQE_ADVISORY_BYTES=256m per the guide's §9 baseline.
+        # Advisory size 16m (A/B over 64m/16m/8m; the 8-60 MB
+        # aggregate shuffles keep a few parallel reducers while tiny
+        # shuffles still collapse to one task).
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("BTDW_AQE_ADVISORY_BYTES", "16m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(parts))
         # deterministic wall-clock semantics across engines

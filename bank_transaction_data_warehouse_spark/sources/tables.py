@@ -93,23 +93,23 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
 _DEGENERATE_SPLITS = 4
 
 
-def parallelism_for(
-    spark: SparkSession, rows: int, rows_per_task: int
-) -> int:
-    """Data-derived partition count: enough tasks that each holds
-    ~rows_per_task rows, capped at the session's shuffle parallelism.
-    Replaces width-by-conf everywhere a plan pins an exchange width:
-    the r14 driver artifact showed the whole 44-query suite running
-    FASTER on 8 cores than 32 because every pinned exchange was sized
-    to spark.sql.shuffle.partitions — past ~a few hundred rows/task
-    the per-task fixed overhead (dispatch, codegen setup, fetch)
-    swamps the compute win (width sweep table, OPTIMIZATION_r15.md:
-    e.g. dup_shingle_ratio 0.86 s at width 32 vs 0.45 s at width 8 on
-    the SAME 32 cores).  At cluster scale rows/rows_per_task exceeds
-    any realistic shuffle.partitions, so this degrades to exactly the
-    old full-width behavior."""
+# Rows per task of every exchange width the plan layer pins: the one
+# rule below sizes each pinned exchange from its input rows.
+ROWS_PER_TASK = 320
+
+
+def parallelism_for(spark: SparkSession, rows: int) -> int:
+    """Pinned exchange width for an input of ``rows`` rows:
+    ceil(rows / ROWS_PER_TASK), at least 1, capped at the session's
+    shuffle parallelism.  Every exchange the plan layer pins is sized
+    by this one rule, never by spark.sql.shuffle.partitions alone: a
+    conf-wide exchange over a few thousand rows puts ~150 rows in each
+    task, and the per-task fixed overhead (dispatch, codegen setup,
+    fetch) then outweighs the compute it spreads.  At cluster scale
+    rows / ROWS_PER_TASK exceeds any realistic shuffle.partitions, so
+    the width is the full conf width."""
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(nparts, math.ceil(rows / max(1, rows_per_task))))
+    return min(nparts, max(1, math.ceil(rows / ROWS_PER_TASK)))
 
 
 def spread_scan(
@@ -117,36 +117,26 @@ def spread_scan(
     sf_dir: str,
     name: str,
     *keys: str,
-    rows_per_task: int = 320,
     rows_hint: int | None = None,
 ) -> DataFrame:
     """Input-skew remedy (optimization guide §2.5: "one huge
     unsplittable file ... repartition immediately after the read").
     Parquet cannot be split below a row group, so a table written as
     one file / one row group scans as ONE task and serializes every
-    downstream per-row pipeline (measured: the whole MinHash
-    signature family ran 1-of-32-cores on this testdata).
+    downstream per-row pipeline.
 
-    Scale-ADAPTIVE two ways (r15, guide §2 partition sizing):
-    - fires only for genuinely degenerate scans (real splits <=
-      _DEGENERATE_SPLITS) — a moderately-split table is never paid a
-      full-table shuffle to round its parallelism up to the session
-      conf (the r14 guard's at-scale hazard);
-    - the target width is derived from the table's ROW COUNT
-      (ceil(rows / rows_per_task), capped at shuffle.partitions), not
-      from the conf: the r14 width (= shuffle.partitions) put ~156
-      rows in each of 32 tasks at sf0.1 and the per-task overhead ate
-      the parallelism win (driver scaling block + width sweep).
+    - It fires only for degenerate scans (real splits <=
+      _DEGENERATE_SPLITS): a moderately-split table is never paid a
+      full-table shuffle to round its parallelism up.
+    - The width is parallelism_for of the table's rows, the one
+      width rule.
 
-    ``rows_per_task`` is the per-consumer-family weight knob (heavier
-    per-row pipelines warrant more tasks per row).  ``rows_hint``
-    bounds the row estimate for consumers that filter to a known
-    sample before the heavy work (minhash_recall_report's 500-doc
-    sample: the filter pushes below this exchange, so only surviving
-    rows shuffle, and the width should match THEM).
-
-    Catalyst still pushes consumer filters below the repartition to
-    the scan (gated by tests/test_plan_pushdown.py).
+    ``rows_hint`` bounds the row estimate for a consumer that filters
+    to a known sample before the heavy work (minhash_recall_report's
+    doc_id < 500): the filter pushes below this exchange, so only the
+    surviving rows shuffle, and the width is sized to them.  Catalyst
+    still pushes consumer filters below the repartition to the scan
+    (gated by tests/test_plan_pushdown.py).
     """
     df = load_table(spark, sf_dir, name)
     splits = scan_partitions(spark, sf_dir, name)
@@ -155,7 +145,7 @@ def spread_scan(
     rows = table_rows(spark, sf_dir, name)
     if rows_hint is not None:
         rows = min(rows, rows_hint)
-    width = parallelism_for(spark, rows, rows_per_task)
+    width = parallelism_for(spark, rows)
     if splits >= width:
         return df
     from pyspark.sql import functions as F

@@ -139,5 +139,28 @@ def test_dangling_nation_key_is_quarantined(spark, sf_dir, tmp_path):
     for t in ("lineitem", "orders", "customer", "nation"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
     want = sorted(con.sql(E.oracle_sql()["quarantine_transactions"]).fetchall())
-    got = sorted(tuple(r) for r in q.select("l_orderkey", "l_linenumber", "reject_reason").collect())
+    got = sorted(tuple(r) for r in q.collect())
     assert got == want
+
+
+# the reasons a clean_transactions line can still carry: the line is
+# in clean_transactions AND quarantined (see quarantine_transactions)
+_CLEAN_LINE_REASONS = ("UNKNOWN_LOCATION", "NONPOSITIVE_QTY", "NEGATIVE_AMOUNT")
+
+
+def test_quarantine_and_clean_partition_lineitem(spark, sf_dir):
+    """Every lineitem row, whole, is in clean_transactions or in the
+    quarantine's reject side, as multisets checked both ways: the
+    quarantine carries the full row, since (l_orderkey, l_linenumber)
+    repeats in the generated lineitem.  The reasons a clean line can
+    carry name rows of clean_transactions."""
+    li = WH.load_table(spark, sf_dir, "lineitem")
+    assert li.select("l_orderkey", "l_linenumber").distinct().count() < li.count()
+    clean = WH.clean_transactions(spark, sf_dir)
+    q = WH.quarantine_transactions(spark, sf_dir)
+    assert q.columns == li.columns + ["reject_reason"]
+    flagged = F.col("reject_reason").isin(*_CLEAN_LINE_REASONS)
+    whole = clean.unionByName(q.where(~flagged).drop("reject_reason"))
+    assert whole.exceptAll(li).count() == 0
+    assert li.exceptAll(whole).count() == 0
+    assert q.where(flagged).drop("reject_reason").exceptAll(clean).count() == 0

@@ -17,29 +17,30 @@ from bank_transaction_data_warehouse_spark.sources import tables as T
 
 def test_parallelism_for_clamps(spark):
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert T.parallelism_for(spark, 0, 320) == 1
-    assert T.parallelism_for(spark, 1, 320) == 1
-    assert T.parallelism_for(spark, 320 * nparts, 320) == nparts
-    # cluster regime: rows >> nparts * rows_per_task caps at the conf
-    assert T.parallelism_for(spark, 10**12, 320) == nparts
-    mid = T.parallelism_for(spark, 900, 320)
+    assert T.ROWS_PER_TASK == 320
+    assert T.parallelism_for(spark, 0) == 1
+    assert T.parallelism_for(spark, 1) == 1
+    assert T.parallelism_for(spark, 320 * nparts) == nparts
+    # cluster regime: rows >> nparts * ROWS_PER_TASK caps at the conf
+    assert T.parallelism_for(spark, 10**12) == nparts
+    mid = T.parallelism_for(spark, 900)
     assert mid == min(nparts, math.ceil(900 / 320))
 
 
 def test_spread_width_derived_from_rows_not_conf(spark, sf_dir):
-    """The spread width is ceil(rows/rows_per_task), NOT the session's
+    """The spread width is ceil(rows/ROWS_PER_TASK), NOT the session's
     shuffle parallelism (r14 regression class: 156-row tasks)."""
     rows = T.table_rows(spark, sf_dir, "documents")
-    df = T.spread_scan(spark, sf_dir, "documents", "doc_id", rows_per_task=100)
+    df = T.spread_scan(spark, sf_dir, "documents", "doc_id")
     want = max(1, min(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        math.ceil(rows / 100),
+        math.ceil(rows / T.ROWS_PER_TASK),
     ))
     if want > T.scan_partitions(spark, sf_dir, "documents"):
         assert df.rdd.getNumPartitions() == want
     # a hint bounds the estimate (sampled consumers)
     df2 = T.spread_scan(
-        spark, sf_dir, "documents", "doc_id", rows_per_task=100, rows_hint=150
+        spark, sf_dir, "documents", "doc_id", rows_hint=150
     )
     assert df2.rdd.getNumPartitions() <= max(
         2, T.scan_partitions(spark, sf_dir, "documents")
@@ -49,17 +50,24 @@ def test_spread_width_derived_from_rows_not_conf(spark, sf_dir):
 def test_spread_noop_for_non_degenerate_scans(spark, sf_dir, tmp_path):
     """A scan with more than _DEGENERATE_SPLITS real splits is never
     reshuffled (the r14 at-scale full-shuffle hazard): spread_scan
-    must return the memoized plain frame itself."""
+    must return the memoized plain frame itself, even where the width
+    rule asks for more tasks than the scan has splits."""
     import shutil
 
     d = tmp_path / "many"
     d.mkdir()
     docs = T.load_table(spark, sf_dir, "documents")
-    docs.repartition(8).write.parquet(str(d / "documents.parquet"))
-    plain = T.load_table(spark, str(d), "documents")
-    if T.scan_partitions(spark, str(d), "documents") > T._DEGENERATE_SPLITS:
-        got = T.spread_scan(spark, str(d), "documents", "doc_id", rows_per_task=1)
-        assert got is plain
+    docs = docs.unionAll(docs).unionAll(docs).unionAll(docs)
+    docs.repartition(5).write.parquet(str(d / "documents.parquet"))
+    # one split per file: at the default split size the scan packs
+    # small files into about one split per core
+    session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    plain = T.load_table(session, str(d), "documents")
+    splits = T.scan_partitions(session, str(d), "documents")
+    rows = T.table_rows(session, str(d), "documents")
+    assert T._DEGENERATE_SPLITS < splits < T.parallelism_for(session, rows)
+    assert T.spread_scan(session, str(d), "documents", "doc_id") is plain
     shutil.rmtree(str(d))
 
 
@@ -187,17 +195,19 @@ _PIN_PARTS = 3  # distinct from the fixture's shuffle width (8) and 1
 
 def _pinned(df):
     """Run ``df`` and return the user-specified (REPARTITION_BY_NUM)
-    hash exchanges of its EXECUTED plan as ([key columns], width)
-    pairs, expression ids stripped, plus the plan text."""
+    exchanges of its EXECUTED plan as ([key columns], width) pairs,
+    expression ids stripped, plus the plan text.  A width-1 pin plans
+    as a keyless SinglePartition exchange: ([], 1)."""
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     pins = re.findall(
         r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan
     )
+    single = plan.count("SinglePartition, REPARTITION_BY_NUM")
     return [
         (re.sub(r"#\d+L?", "", cols).split(", "), int(n)) for cols, n in pins
-    ], plan
+    ] + [([], 1)] * single, plan
 
 
 @pytest.mark.parametrize(
@@ -245,3 +255,26 @@ def test_ann_pair_expansion_keeps_width_pins(spark, sf_dir, generator):
     pinned, plan = _pinned(df)
     for pin in want:
         assert pin in pinned, plan
+
+
+@pytest.mark.parametrize(
+    "name, table",
+    [
+        ("media_frame_dedup", "documents"),
+        ("media_frame_lsh_dedup", "documents"),
+        ("minhash_recall_report", None),
+        ("dedup_minhash_lsh", "documents"),
+        ("semantic_dedup", "embeddings"),
+    ],
+)
+def test_pinned_widths_follow_the_one_rule(spark, sf_dir, name, table):
+    """Every pinned exchange of a corpus query is parallelism_for of
+    the query's input rows: the table's rows, or the recall report's
+    doc_id sample.  No call site sets its own rows-per-task weight."""
+    import __spark_entry__ as E
+    from bank_transaction_data_warehouse_spark.plans import corpus as C
+
+    rows = C._MRR_SAMPLE if table is None else T.table_rows(spark, sf_dir, table)
+    pinned, plan = _pinned(E.queries()[name](spark, sf_dir))
+    assert pinned, plan
+    assert {n for _keys, n in pinned} == {T.parallelism_for(spark, rows)}, plan
